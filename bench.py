@@ -59,7 +59,7 @@ BENCH_QUERIES = [
     # annotation: at bench SF their wall time is dominated by
     # per-round/driver fixed costs that amortize at deployment scale.)
     "seen_anti_join_bucketed",
-    "seen_anti_join_cuckoo",
+    "seen_anti_join_bloom",
     "politeness_bucketed",
     "dedup_clusters",
     "stratified_sample",

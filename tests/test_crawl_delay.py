@@ -191,3 +191,49 @@ def test_crawl_budgets_bucketed_path_parity(spark, tmp_path, monkeypatch):
     )
     _assert_equivalent(bucketed, bucketed.store, oracle)
     assert bucketed.supersteps == window.supersteps
+
+
+@pytest.mark.slow
+def test_resume_without_frontier_buckets_keeps_overrides(
+    spark, tmp_path, monkeypatch
+):
+    """A crawl interrupted on the bucketed selection path, resumed
+    with ``host_budgets`` but no ``frontier_buckets``, must still apply
+    the Crawl-delay override (2, tighter than the global 3): the same
+    per-superstep request counts as an uninterrupted crawl. The resume
+    must not take the restored host-bucketed snapshot into the
+    bucketed selection, whose override table only exists when
+    ``frontier_buckets`` is set."""
+    from tests.conftest import web_dict_to_df
+    from tests.oracle_crawler import crawl as oracle_crawl
+    from tests.test_crawl import _assert_equivalent, _rich_site
+    from website_indexer_spark.functions.urltools import hostname_with_port
+    from website_indexer_spark.plans import crawl as C
+
+    web, seed = _rich_site()
+    oracle = oracle_crawl(web, seed)
+    host = hostname_with_port(seed)
+    budgets = spark.createDataFrame([(host, 2)], ["host", "budget"])
+    web_df = web_dict_to_df(spark, web)
+    whole = C.run_crawl(
+        spark, web_df, seed, str(tmp_path / "whole"),
+        host_budget=3, host_budgets=budgets,
+    )
+    monkeypatch.setattr(C, "FRONTIER_SELECT_BUCKETED_MIN", 0)
+    out = str(tmp_path / "resumed")
+    C.run_crawl(
+        spark, web_df, seed, out,
+        host_budget=3, host_budgets=budgets, frontier_buckets=4,
+        max_supersteps=2,
+    )
+    resumed = C.run_crawl(
+        spark, web_df, seed, out,
+        host_budget=3, host_budgets=budgets, resume=True,
+    )
+    _assert_equivalent(resumed, resumed.store, oracle)
+
+    def requested(store):
+        return [m["counters"]["requested"] for m in store.manifests()]
+
+    assert requested(resumed.store) == requested(whole.store)
+    assert resumed.supersteps == whole.supersteps

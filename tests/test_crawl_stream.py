@@ -158,46 +158,3 @@ def test_stream_forced_bucketed_seen_path_matches_batch(
         f"bucket={b}" in p for b, ps in files.items() for p in ps
     )
     assert os.path.isdir(os.path.join(str(tmp_path / "stream"), "bloom"))
-
-
-@pytest.mark.slow
-def test_stream_cuckoo_filter_matches_batch(spark, tmp_path, monkeypatch):
-    """The streaming skin's seen_filter='cuckoo' passthrough: forced-on
-    prefilter (auto-threshold 0) with the cuckoo kind must land the
-    exact batch-crawl state, and the persisted filter must be a cuckoo
-    (stripe files), not a Bloom."""
-    from website_indexer_spark.streaming import crawl_stream as CS
-
-    web, seed = fixture_site()
-    web_df = web_dict_to_df(spark, web)
-    batch = C.run_crawl(spark, web_df, seed, str(tmp_path / "batch"))
-
-    start_host = hostname_with_port(seed)
-    seed_df = C._seed_frontier(spark, seed, start_host)
-    src = str(tmp_path / "frontier_stream")
-    _replay_frontier_files(
-        spark, batch.store, seed_df, batch.supersteps, src, str(tmp_path)
-    )
-    monkeypatch.setattr(CS, "BLOOM_AUTO_SEEN_THRESHOLD", 0)
-    monkeypatch.setattr(C, "BLOOM_AUTO_SEEN_THRESHOLD", 0)
-    stream = (
-        spark.readStream.schema(FRONTIER_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    run_crawl_stream(
-        stream,
-        web_df,
-        str(tmp_path / "stream"),
-        seed,
-        str(tmp_path / "ckpt"),
-        seen_filter="cuckoo",
-    )
-    sstore = CrawlStore(spark, str(tmp_path / "stream"))
-    assert _routed_rows(sstore) == _routed_rows(batch.store)
-    batch_seen = {r["url"] for r in batch.store.read_all("seen").collect()}
-    stream_seen = {r["url"] for r in sstore.read_all("seen").collect()}
-    assert stream_seen == batch_seen
-    out = str(tmp_path / "stream")
-    assert os.path.isdir(os.path.join(out, "cuckoo"))
-    assert not os.path.isdir(os.path.join(out, "bloom"))

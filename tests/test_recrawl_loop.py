@@ -1,23 +1,27 @@
 """The closed crawl→index→schedule→invalidate→re-fetch loop
-(operators/recrawl.py — r4 verdict item 5): with the cuckoo filter
-forced on, scheduling a recrawl evicts the chosen URLs from BOTH the
-approximate prefilter (stripe-local delete, NO rebuild) and the
-committed seen table (bucket-pruned rewrite), and a resumed crawl
-with the reseeded frontier refetches exactly those URLs."""
+(operators/recrawl.py): with the Bloom prefilter forced on,
+scheduling a recrawl removes the chosen URLs from the committed seen
+table (bucket-pruned rewrite, crash-safe staged swap), the persisted
+Bloom is left as it is, and a resumed crawl with the reseeded
+frontier refetches exactly those URLs."""
 
 from __future__ import annotations
+
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from tests.test_crawl import _rich_site, _spark_crawl
-from website_indexer_spark.operators.cuckoo import StripedCuckoo
+from website_indexer_spark.operators.frontier import StripedBloom
 from website_indexer_spark.operators.recrawl import (
     recrawl_invalidate,
     recrawl_seed_frontier,
 )
 from website_indexer_spark.plans.crawl import run_crawl
 from website_indexer_spark.sources.cdx import cdx_change_rate, recrawl_topk
+from website_indexer_spark.sources.tables import CrawlStore
 
 
 def _capture_index(spark, urls, changed):
@@ -37,12 +41,10 @@ def _capture_index(spark, urls, changed):
 
 
 @pytest.mark.slow
-def test_crawl_index_recrawl_refetch_cuckoo(spark, tmp_path):
+def test_crawl_index_recrawl_refetch_bloom(spark, tmp_path):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     web, seed = _rich_site()
-    result = _spark_crawl(
-        spark, tmp_path, web, seed, use_bloom=True, seen_filter="cuckoo"
-    )
+    result = _spark_crawl(spark, tmp_path, web, seed, use_bloom=True)
     store = result.store
     root = str(tmp_path / "crawl")
 
@@ -60,29 +62,20 @@ def test_crawl_index_recrawl_refetch_cuckoo(spark, tmp_path):
     topk = recrawl_topk(rates, 2)
     assert {r["url"] for r in topk.collect()} == scheduled
 
-    cuckoo0 = StripedCuckoo.load(root)
-    assert cuckoo0 is not None
-    v0, k0 = cuckoo0.version, cuckoo0.built_keys
-    shape0 = (cuckoo0.n_stripes, cuckoo0.n_slots)
+    bloom0 = StripedBloom.load(root)
+    assert bloom0 is not None
+    shape0 = (bloom0.n_buckets, bloom0.bucket_bits)
+    seen_before = {r["url"] for r in store.read_all("seen").collect()}
 
     stats = recrawl_invalidate(spark, store, topk)
-    assert stats["filter_kind"] == "cuckoo"
+    assert set(stats) == {"keys", "buckets_rewritten", "seen_removed"}
     assert stats["keys"] == 2
-    assert stats["filter_removed"] == 2
     assert stats["seen_removed"] == 2
     assert stats["buckets_rewritten"] >= 1
 
-    # committed seen set: scheduled gone, everything else intact
+    # committed seen set: exactly the scheduled URLs pruned
     seen_after = {r["url"] for r in store.read_all("seen").collect()}
-    assert not (scheduled & seen_after)
-    assert set(page_urls) - scheduled <= seen_after
-
-    # the filter was EDITED, never rebuilt (same table shape, fewer
-    # keys, bumped version) — the feature that justifies the cuckoo
-    cuckoo1 = StripedCuckoo.load(root)
-    assert (cuckoo1.n_stripes, cuckoo1.n_slots) == shape0
-    assert cuckoo1.version > v0
-    assert cuckoo1.built_keys == k0 - 2
+    assert seen_after == seen_before - scheduled
 
     # re-fetch: resumed crawl with the reseeded frontier requests
     # EXACTLY the scheduled URLs again (their links are all seen)
@@ -95,11 +88,10 @@ def test_crawl_index_recrawl_refetch_cuckoo(spark, tmp_path):
         resume=True,
         extra_frontier=reseed,
         use_bloom=True,
-        seen_filter="cuckoo",
     )
     assert res2.requested == result.requested + 2
     seen_final = {r["url"] for r in store.read_all("seen").collect()}
-    assert scheduled <= seen_final
+    assert seen_final == seen_before
 
     # the refetch produced fresh page rows for the scheduled URLs
     # (routed is append-only lineage: one row per fetch)
@@ -112,6 +104,73 @@ def test_crawl_index_recrawl_refetch_cuckoo(spark, tmp_path):
     }
     for u in page_urls:
         assert counts[u] == (2 if u in scheduled else 1), u
+
+    # the resumed crawl merged into the persisted Bloom — same shape,
+    # newer version — rather than rebuilding it
+    bloom1 = StripedBloom.load(root)
+    assert (bloom1.n_buckets, bloom1.bucket_bits) == shape0
+    assert bloom1.version > bloom0.version
+
+
+def _seen_rows(spark, root):
+    return sorted(
+        (r["url_hash"], r["url"])
+        for r in CrawlStore(spark, root).read_all("seen").collect()
+    )
+
+
+@pytest.mark.slow
+def test_recrawl_invalidate_crash_mid_swap_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between the swap renames (os.rename raising on its 2nd
+    call) leaves a staged swap behind; re-running the invalidation, or
+    reopening the store for resume (rollback_uncommitted), finishes it
+    and lands the seen set of an uninterrupted invalidation."""
+    web, seed = _rich_site()
+    result = _spark_crawl(spark, tmp_path, web, seed)
+    base = str(tmp_path / "crawl")
+    page_urls = sorted(
+        r["url"]
+        for r in result.store.read_all("pages").select("url").collect()
+    )
+    topk = spark.createDataFrame([(u,) for u in page_urls[1:]], ["url"])
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(base, clean)
+    stats = recrawl_invalidate(spark, CrawlStore(spark, clean), topk)
+    assert stats["buckets_rewritten"] >= 2  # a 2nd rename exists
+    expected = _seen_rows(spark, clean)
+    assert len(expected) == len(_seen_rows(spark, base)) - len(page_urls[1:])
+
+    real_rename = os.rename
+    calls = []
+
+    def crash_on_second(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("injected crash")
+        return real_rename(src, dst)
+
+    for mode in ("rerun", "resume"):
+        root = str(tmp_path / mode)
+        shutil.copytree(base, root)
+        store = CrawlStore(spark, root)
+        with monkeypatch.context() as m:
+            m.setattr(os, "rename", crash_on_second)
+            with pytest.raises(OSError, match="injected crash"):
+                recrawl_invalidate(spark, store, topk)
+        calls.clear()
+        swap = os.path.join(root, "seen", ".swap")
+        assert os.path.exists(os.path.join(swap, "_SWAP.json"))
+
+        if mode == "rerun":
+            again = recrawl_invalidate(spark, store, topk)
+            assert again["seen_removed"] == 0
+        else:
+            CrawlStore(spark, root).rollback_uncommitted()
+        assert not os.path.exists(swap)
+        assert _seen_rows(spark, root) == expected, mode
 
 
 def _web_df(spark, web):

@@ -81,8 +81,7 @@ def test_spark_submit_py_files_crawl(spark, tmp_path):
             "--web-pages", web_path,
             "--seed", seed,
             "--out", out_dir,
-            "--bloom",  # force the prefilter on at fixture scale...
-            "--seen-filter", "cuckoo",  # ...and pick the cuckoo kind
+            "--bloom",  # force the prefilter on at fixture scale
         ],
         cwd=str(tmp_path),  # NOT the repo: imports must come from the zip
         env=env,
@@ -101,5 +100,5 @@ def test_spark_submit_py_files_crawl(spark, tmp_path):
     assert pages == set(oracle.pages)
     errors = {r["url"] for r in store.read_all("errors").collect()}
     assert errors == {e["url"] for e in oracle.errors}
-    # the submitted job really took the cuckoo prefilter path
-    assert os.path.isdir(os.path.join(out_dir, "cuckoo"))
+    # the submitted job really took the Bloom prefilter path
+    assert os.path.isdir(os.path.join(out_dir, "bloom"))

@@ -586,7 +586,7 @@ CHECKS = {
         ("no seen-side join in the plan at all",
          lambda p: "Join" not in p),
     ],
-    "seen_anti_join_cuckoo": [
+    "seen_anti_join_bloom": [
         ("maybe-seen rows resolve via broadcast LeftAnti (the filter "
          "is a prefilter, the exact join stays small); the big side "
          "never sort-merge-shuffles",
@@ -851,6 +851,7 @@ def crawl_operator_plans(spark, work_dir: str):
     # their bucket's files executor-side; the only exchange is the
     # probe's repartition by bucket.
     from website_indexer_spark.operators.frontier import (
+        StripedBloom,
         anti_join_seen_bucketed,
     )
     from website_indexer_spark.sources.tables import (
@@ -893,22 +894,22 @@ def crawl_operator_plans(spark, work_dir: str):
         ],
     )
 
-    # the cuckoo-prefiltered seen path (north-star "Bloom/cuckoo"):
-    # the filter's stripe tables are executor-side point reads, so —
-    # like the bucketed seen layout — they must be invisible to the
-    # Spark plan; the probe itself is an Arrow-batched pandas UDF and
-    # the exact check on the maybe-seen residue stays broadcast-only.
-    from website_indexer_spark.operators.cuckoo import StripedCuckoo
-
-    ck = StripedCuckoo.create(os.path.join(work_dir, "ckf"), expected_keys=1_000_000)
-    ck.update(seen.select("url_hash"))
-    plans["crawl_seen_anti_join_cuckoo"] = (
-        anti_join_seen(wave, seen.select("url_hash"), ck, broadcast_frontier=True),
+    # the Bloom-prefiltered seen path: the filter's bucket bitmaps
+    # are executor-side point reads, so — like the bucketed seen
+    # layout — they must be invisible to the Spark plan; the probe
+    # itself is an Arrow-batched pandas UDF and the exact check on the
+    # maybe-seen residue stays broadcast-only.
+    bloom = StripedBloom.create(
+        os.path.join(work_dir, "seenbf"), expected_keys=1_000_000
+    )
+    bloom.update(seen.select("url_hash"))
+    plans["crawl_seen_anti_join_bloom"] = (
+        anti_join_seen(wave, seen.select("url_hash"), bloom, broadcast_frontier=True),
         [
-            ("cuckoo stripe tables absent from the plan (no scan node "
-             "reads ckf/): probe tasks point-read their stripe files "
+            ("Bloom bucket bitmaps absent from the plan (no scan node "
+             "reads seenbf/): probe tasks point-read their bucket files "
              "executor-side",
-             lambda p: "ckf" not in p),
+             lambda p: "seenbf" not in p),
             ("probe is an Arrow-batched pandas UDF (vectorized, "
              "never per-row Python)",
              lambda p: "ArrowEvalPython" in p),

@@ -369,13 +369,6 @@ class StripedBloom:
         bloom._write_meta()
         return bloom
 
-    @classmethod
-    def destroy(cls, root: str) -> None:
-        import shutil
-
-        if os.path.isdir(cls._dir(root)):
-            shutil.rmtree(cls._dir(root))
-
     def _write_meta(self) -> None:
         meta = {
             "n_buckets": self.n_buckets,

@@ -472,30 +472,31 @@ def q_seen_anti_join_bucketed(spark, sf):
     ).select(F.col("url_hash").alias("doc_id"))
 
 
-def q_seen_anti_join_cuckoo(spark, sf):
-    """The cuckoo twin of `seen_anti_join_bucketed`'s seen-set
-    dedup (north-star: "Bloom/cuckoo filter union-merged each
-    superstep"): even doc_ids' hashes build a StripedCuckoo, the probe
+def q_seen_anti_join_bloom(spark, sf):
+    """The Bloom-prefiltered twin of `seen_anti_join_bucketed`'s
+    seen-set dedup (north-star: "Bloom/cuckoo filter union-merged each
+    superstep"): even doc_ids' hashes build a StripedBloom, the probe
     splits all doc_ids into definitely-unseen (kept outright) and
     maybe-seen (exact broadcast anti-join), and the union must be
     exactly the odds — the filter is a superset prefilter, never the
-    source of truth. Keys are xxhash64(doc_id) because the filter's
-    fingerprint/stripe/index fields are carved from the hash bits the
-    crawl's url_hash actually has (sequential ints would degenerate
-    every fingerprint to 1)."""
+    source of truth. Keys are xxhash64(doc_id), the shape of the
+    crawl's url_hash."""
     import tempfile
 
-    from website_indexer_spark.operators.cuckoo import StripedCuckoo
-    from website_indexer_spark.operators.frontier import exclude_keys
+    from website_indexer_spark.operators.frontier import (
+        StripedBloom,
+        exclude_keys,
+    )
 
     docs = _t(spark, sf, "documents").select(
         "doc_id", F.xxhash64(F.col("doc_id")).alias("url_hash")
     )
     seen = docs.filter(F.col("doc_id") % 2 == 0).select("url_hash")
-    root = tempfile.mkdtemp(prefix="gate_cuckoo_")
-    ck = StripedCuckoo.create(root, expected_keys=seen.count())
-    ck.update(seen)
-    maybe = ck.probe_udf()
+    bloom = StripedBloom.create(
+        tempfile.mkdtemp(prefix="gate_bloom_"), expected_keys=seen.count()
+    )
+    bloom.update(seen)
+    maybe = bloom.probe_udf()
     fast = docs.filter(~maybe(F.col("url_hash")))
     slow = exclude_keys(docs.filter(maybe(F.col("url_hash"))), seen, "url_hash")
     return fast.unionByName(slow).select("doc_id")
@@ -1004,7 +1005,8 @@ def q_bpe_merges(spark, sf):
     pinned against a plain-Python reference in pytest."""
     from website_indexer_spark.operators import bpe
 
-    docs = _t(spark, sf, "documents").limit(120)  # trainer corpus
+    # trainer corpus: ordered, so the slice never depends on file packing
+    docs = _t(spark, sf, "documents").orderBy("doc_id").limit(120)
     merges = bpe.fit_bpe(docs, n_merges=5)
     return spark.createDataFrame(
         [(i, l, r, int(c)) for i, (l, r, c) in enumerate(merges)],
@@ -1022,7 +1024,10 @@ def q_bpe_encode(spark, sf):
 
     docs = _t(spark, sf, "documents")
     merges = [
-        (l, r) for l, r, _ in bpe.fit_bpe(docs.limit(120), n_merges=5)
+        (l, r)
+        for l, r, _ in bpe.fit_bpe(
+            docs.orderBy("doc_id").limit(120), n_merges=5
+        )
     ]
     enc = bpe.encode_with_merges(
         docs.orderBy("doc_id").limit(200), merges
@@ -1267,7 +1272,7 @@ SPARK_QUERIES: Dict[str, SparkQuery] = {
     "dimension_upsert": q_dimension_upsert,
     "dimension_upsert_bucketed": q_dimension_upsert_bucketed,
     "seen_anti_join_bucketed": q_seen_anti_join_bucketed,
-    "seen_anti_join_cuckoo": q_seen_anti_join_cuckoo,
+    "seen_anti_join_bloom": q_seen_anti_join_bloom,
     "politeness_bucketed": q_politeness_bucketed,
     "lang_id": q_lang_id,
     "quality": q_quality,
@@ -1726,7 +1731,7 @@ ORACLE_SQL: Dict[str, str] = {
     "seen_anti_join_bucketed": """
         SELECT doc_id FROM documents WHERE doc_id % 2 = 1
     """,
-    "seen_anti_join_cuckoo": """
+    "seen_anti_join_bloom": """
         SELECT doc_id FROM documents WHERE doc_id % 2 = 1
     """,
     "politeness_bucketed": """

@@ -82,7 +82,6 @@ from website_indexer_spark.operators.frontier import (
     politeness_select,
     politeness_select_bucketed,
 )
-from website_indexer_spark.operators.cuckoo import StripedCuckoo
 from website_indexer_spark.operators.dims import (
     dim_upsert_delta,
     dim_upsert_delta_bucketed,
@@ -184,14 +183,12 @@ def maintain_bloom(
     n_selected,
     use_bloom=None,
     bloom_bits=None,
-    seen_filter="bloom",
 ):
-    """A3's persistent approximate-prefilter maintenance (striped
-    Bloom by default, striped cuckoo with ``seen_filter='cuckoo'``),
-    shared by the batch driver and the streaming skin (so the two
-    cannot drift). Incremental: each superstep union-merges only the
-    wave's seen delta into the filter (never a full-history rebuild
-    unless capacity doubles), and the filter files are written BEFORE
+    """A3's persistent striped-Bloom prefilter maintenance, shared by
+    the batch driver and the streaming skin (so the two cannot
+    drift). Incremental: each superstep union-merges only the wave's
+    seen delta into the filter (never a full-history rebuild unless
+    capacity is exceeded), and the filter files are written BEFORE
     the manifest commit so the filter is always a superset of the
     committed seen set — false positives only cost an exact probe,
     false negatives are impossible for committed keys.
@@ -199,50 +196,25 @@ def maintain_bloom(
     wave (every seen row was a selected wave member, unique by
     construction), so sizing needs no extra jobs. Returns the live
     filter (already merged with this wave's delta) or None when the
-    prefilter is off.
-
-    The filter layout is physical store state, so on resume a
-    PERSISTED filter of either kind wins over the requested kind —
-    switching kinds mid-crawl would require a rebuild, which the
-    capacity check performs naturally when it next triggers.
-    ``bloom_bits`` force-sizes the Bloom variant only; the cuckoo
-    variant always auto-sizes from the cumulative seen count."""
+    prefilter is off. ``bloom_bits`` force-sizes the filter and
+    disables the capacity-driven rebuild."""
     filter_on = use_bloom or (
         use_bloom is None and requested_total >= BLOOM_AUTO_SEEN_THRESHOLD
     )
     if not filter_on:
         return None
-    filt = bloom or StripedBloom.load(out_dir) or StripedCuckoo.load(out_dir)
-    cls = type(filt) if filt is not None else (
-        StripedCuckoo if seen_filter == "cuckoo" else StripedBloom
-    )
-    force_bits = bloom_bits if cls is StripedBloom else None
-    needs_rebuild = filt is None or (
-        force_bits is None and requested_total > filt.capacity_keys
-    )
-    if not needs_rebuild:
-        try:
-            filt.update(delta_keys, n_keys=n_selected)
-            return filt
-        except Exception as exc:  # noqa: BLE001 — Py4J re-wraps task errors
-            # a cuckoo stripe past design load surfaces as a wrapped
-            # task failure; fall through to the same 4× rebuild an
-            # undersized Bloom takes (proactive capacity check above
-            # makes this path near-unreachable)
-            if "CuckooCapacityError" not in str(exc):
-                raise
+    filt = bloom or StripedBloom.load(out_dir)
+    if filt is not None and (
+        bloom_bits is not None or requested_total <= filt.capacity_keys
+    ):
+        filt.update(delta_keys, n_keys=n_selected)
+        return filt
     # (re)size for 4× the current seen count so capacity doublings
     # amortize; one distributed rebuild pass over the committed
     # history + this wave's delta
-    if cls is StripedBloom:
-        filt = StripedBloom.create(
-            out_dir,
-            expected_keys=4 * requested_total,
-            total_bits=force_bits,
-        )
-    else:
-        StripedCuckoo.destroy(out_dir)
-        filt = StripedCuckoo.create(out_dir, expected_keys=4 * requested_total)
+    filt = StripedBloom.create(
+        out_dir, expected_keys=4 * requested_total, total_bits=bloom_bits
+    )
     filt.update(seen_now, n_keys=requested_total)
     return filt
 
@@ -499,7 +471,6 @@ def run_crawl(
     frontier_buckets: Optional[int] = None,
     use_bloom: Optional[bool] = None,
     bloom_bits: Optional[int] = None,
-    seen_filter: str = "bloom",
     resume: bool = False,
     extra_frontier: Optional[DataFrame] = None,
     crawl_id: int = 1,
@@ -534,7 +505,14 @@ def run_crawl(
         store.rollback_uncommitted()
         last = store.last_committed()
         frontier = store.read_frontier(last)
-        frontier_files = store.frontier_bucket_files(last) or None
+        # a host-bucketed snapshot only arms the bucketed selection
+        # when this run writes the bucket-aligned Crawl-delay overrides
+        # too (frontier_buckets); otherwise the window path applies them
+        frontier_files = (
+            (store.frontier_bucket_files(last) or None)
+            if frontier_buckets
+            else None
+        )
         frontier_count = 0
         for m in store.manifests():
             requested_total += m["counters"]["requested"]
@@ -762,7 +740,7 @@ def run_crawl(
             seen_now = store.read_all("seen").select("url_hash").unionByName(
                 delta_keys
             )
-            # --- persistent Bloom/cuckoo prefilter (auto-sized) ---------
+            # --- persistent Bloom prefilter (auto-sized) ----------------
             # Incremental: each superstep union-merges only the wave's
             # seen delta into the filter (never a full-history rebuild),
             # and the filter files are written BEFORE the manifest commit
@@ -771,8 +749,7 @@ def run_crawl(
             # negatives are impossible for committed keys. requested_total
             # IS the cumulative seen count (every seen row was a selected
             # wave member, unique by construction), so sizing needs no
-            # jobs. Kind picked by seen_filter=; persisted kind wins on
-            # resume (maintain_bloom docstring).
+            # jobs.
             bloom = maintain_bloom(
                 out_dir,
                 bloom,
@@ -782,7 +759,6 @@ def run_crawl(
                 n_selected,
                 use_bloom=use_bloom,
                 bloom_bits=bloom_bits,
-                seen_filter=seen_filter,
             )
             if est_accepted <= BROADCAST_FETCH_THRESHOLD:
                 accepted = anti_join_seen(
@@ -1187,13 +1163,6 @@ def main() -> None:  # pragma: no cover - CLI for spark-submit --py-files
     )
     ap.add_argument("--no-bloom", dest="bloom", action="store_const", const=False)
     ap.add_argument(
-        "--seen-filter",
-        choices=["bloom", "cuckoo"],
-        default="bloom",
-        help="approximate seen-set prefilter kind (cuckoo = deletable, "
-        "stripe-owned executor-side updates)",
-    )
-    ap.add_argument(
         "--no-dims",
         dest="dims",
         action="store_false",
@@ -1216,7 +1185,6 @@ def main() -> None:  # pragma: no cover - CLI for spark-submit --py-files
         salt_buckets=args.salt_buckets,
         frontier_buckets=args.frontier_buckets,
         use_bloom=args.bloom,
-        seen_filter=args.seen_filter,
         resume=args.resume,
         maintain_dims=args.dims,
     )

@@ -113,8 +113,8 @@ def main() -> None:  # pragma: no cover - CLI veneer
         "recrawl",
         help="schedule a recrawl: rank URLs by change rate from a "
         "CDXJ capture index (Cho-GM estimator), evict the top-k from "
-        "the crawl's seen state (cuckoo stripe delete + bucket-pruned "
-        "seen rewrite — operators/recrawl.py), and optionally write "
+        "the crawl's committed seen table (crash-safe bucket-pruned "
+        "rewrite — operators/recrawl.py), and optionally write "
         "the reseed frontier for run_crawl(resume, extra_frontier=)",
     )
     r.add_argument("name")

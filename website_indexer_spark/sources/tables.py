@@ -200,6 +200,55 @@ DELTA_TABLES = ("routed", "seen", "dims")
 SNAPSHOT_TABLES = ("frontier",)
 
 
+# --- staged directory swap ---------------------------------------------
+# In-place rewrites of committed partition dirs (recrawl's seen-key
+# eviction) stage their replacements under <table>/.swap/<i> — dot-
+# prefixed, so outside the superstep=/bucket= namespace that readers,
+# listings and partition discovery walk — then write _SWAP.json naming
+# each target before the first rename. The marker is the commit point:
+# without it a staged dir is dropped, with it every remaining staged
+# dir replaces its target. Each step is idempotent, so a crash anywhere
+# is finished by recover_staged_swap.
+SWAP_DIR = ".swap"
+SWAP_MARKER = "_SWAP.json"
+
+
+def swap_staging_dir(table_dir: str, i: int) -> str:
+    """Where the i-th replacement of a staged swap is written."""
+    return os.path.join(table_dir, SWAP_DIR, str(i))
+
+
+def commit_staged_swap(table_dir: str, targets: List[str]) -> None:
+    """Swap ``swap_staging_dir(table_dir, i)`` into ``targets[i]``
+    (paths relative to ``table_dir``) for every i, crash-safely."""
+    marker = os.path.join(table_dir, SWAP_DIR, SWAP_MARKER)
+    with open(marker + ".tmp", "w") as f:
+        json.dump({"targets": targets}, f)
+    os.replace(marker + ".tmp", marker)
+    recover_staged_swap(table_dir)
+
+
+def recover_staged_swap(table_dir: str) -> None:
+    """Finish a committed swap (marker present) or drop an uncommitted
+    one; a no-op when no swap is staged."""
+    stage = os.path.join(table_dir, SWAP_DIR)
+    if not os.path.isdir(stage):
+        return
+    marker = os.path.join(stage, SWAP_MARKER)
+    if os.path.exists(marker):
+        with open(marker) as f:
+            targets = json.load(f)["targets"]
+        for i, rel in enumerate(targets):
+            src = swap_staging_dir(table_dir, i)
+            if not os.path.isdir(src):
+                continue  # already swapped in
+            dest = os.path.join(table_dir, rel)
+            if os.path.isdir(dest):
+                shutil.rmtree(dest)
+            os.rename(src, dest)
+    shutil.rmtree(stage)
+
+
 def build_spark(
     app_name: str = "website-indexer-spark",
     master: Optional[str] = None,
@@ -653,12 +702,14 @@ class ParquetManifestBackend(TableBackend):
 
     def rollback_uncommitted(self) -> None:
         """Drop superstep dirs newer than the last committed manifest;
-        also finish/abort any compaction a crash interrupted."""
+        also finish/abort any staged swap or compaction a crash
+        interrupted."""
         last = self.last_committed()
         for name in DELTA_TABLES + SNAPSHOT_TABLES:
             tdir = os.path.join(self.root, name)
             if not os.path.isdir(tdir):
                 continue
+            recover_staged_swap(tdir)
             self.recover_compaction(name)
             for entry in os.listdir(tdir):
                 if entry.startswith("superstep="):

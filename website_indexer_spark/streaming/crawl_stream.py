@@ -43,7 +43,6 @@ from website_indexer_spark.operators.frontier import (
     anti_join_seen,
     anti_join_seen_bucketed,
 )
-from website_indexer_spark.operators.cuckoo import StripedCuckoo
 from website_indexer_spark.operators.policy import CrawlPolicy
 from website_indexer_spark.plans.crawl import (
     BLOOM_AUTO_SEEN_THRESHOLD,
@@ -68,7 +67,6 @@ def crawl_stream_step(
     policy: Optional[CrawlPolicy] = None,
     robots: Optional[DataFrame] = None,
     crawl_id: int = 1,
-    seen_filter: str = "bloom",
     emit_discovered: Optional[Callable[[DataFrame, int], None]] = None,
 ) -> Callable[[DataFrame, int], None]:
     """Build the ``foreachBatch`` function. ``web`` is the fetch-sim
@@ -96,7 +94,7 @@ def crawl_stream_step(
             m["counters"].get("requested", 0) for m in store.manifests()
         )
         bloom = (
-            (StripedBloom.load(out_dir) or StripedCuckoo.load(out_dir))
+            StripedBloom.load(out_dir)
             if requested_total >= BLOOM_AUTO_SEEN_THRESHOLD
             else None
         )
@@ -146,7 +144,6 @@ def crawl_stream_step(
                 delta_keys,
                 requested_total + n,
                 n,
-                seen_filter=seen_filter,
             )
             fetched, _ = fetch_sim_join(lookup, wave, n)
             fetched = with_effective_status(fetched)
