@@ -1,19 +1,15 @@
 """Delta-table compaction (the Iceberg rewrite_data_files analogue):
-readers must see identical rows before/after, a mid-crawl compaction
-must not disturb resume, and a crash at either marker state must
-self-heal."""
+readers must see identical rows before/after, and a mid-crawl
+compaction must not disturb resume. Crashes at every point of the
+rewrite are covered by tests/test_fault_sweep.py."""
 
-import json
 import os
-import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
 from tests.oracle_crawler import fixture_site
 from tests.conftest import web_dict_to_df
 from website_indexer_spark.plans.crawl import run_crawl
-from website_indexer_spark.sources.tables import CrawlStore
 
 
 def _crawl(spark, tmp_path, sub="c", **kw):
@@ -81,40 +77,6 @@ def test_compact_then_resume_matches_uncompacted(spark, tmp_path):
     assert _rows(resumed.store, "seen") == _rows(full.store, "seen")
 
 
-def test_compaction_crash_recovery(spark, tmp_path):
-    res = _crawl(spark, tmp_path)
-    store = res.store
-    backend = store.backend
-    want = _rows(store, "seen")
-
-    # crash state A: rewrite finished, swap not started
-    # (.compacted_ready exists, old deltas still present)
-    upto = backend.last_committed()
-    tdir, tmp, ready = backend._compaction_dirs("seen")
-    merged = store.read_all("seen")
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, "_COMPACTION.json"), "w") as f:
-        json.dump({"upto": upto}, f)
-    os.rename(tmp, ready)
-    backend.recover_compaction("seen")
-    assert not os.path.isdir(ready)
-    assert _rows(store, "seen") == want
-
-    # crash state B: rewrite torn mid-write (.compacting only) — must
-    # be dropped, table untouched
-    os.makedirs(tmp)
-    with open(os.path.join(tmp, "junk.parquet"), "w") as f:
-        f.write("torn")
-    backend.recover_compaction("seen")
-    assert not os.path.isdir(tmp)
-    assert _rows(store, "seen") == want
-
-    # rollback_uncommitted (the resume entrypoint) also recovers
-    os.makedirs(tmp)
-    backend.rollback_uncommitted()
-    assert not os.path.isdir(tmp)
-
-
 def test_viewer_queries_after_compaction(spark, tmp_path):
     from website_indexer_spark.plans import queries as vq
 
@@ -132,46 +94,19 @@ def test_viewer_queries_after_compaction(spark, tmp_path):
     assert comps_after == comps_before
 
 
-def test_compaction_crash_recovery_markerless_ready(spark, tmp_path):
-    """Legacy crash shape: a .compacted_ready dir WITHOUT its
-    _COMPACTION.json (pre-fix _finish_compaction deleted the marker
-    before the swap). recover_compaction must fall back to
-    upto=last_committed() instead of raising, and the rows survive."""
-    res = _crawl(spark, tmp_path)
-    store = res.store
-    backend = store.backend
-    want = _rows(store, "seen")
+def test_legacy_compaction_dir_refuses_resume(spark, tmp_path):
+    """A .compacting/.compacted_ready dir from the old compaction
+    protocol holds rows readers never see (dot dirs are outside the
+    partition namespace); the resume entry point must name it rather
+    than silently drop those rows."""
+    from tests.test_crawl import _rich_site, _spark_crawl
 
-    tdir, tmp, ready = backend._compaction_dirs("seen")
-    merged = store.read_all("seen")
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, ready)  # NO marker inside
-    backend.recover_compaction("seen")
-    assert not os.path.isdir(ready)
-    assert _rows(store, "seen") == want
-    # resume path must not be wedged either
-    backend.rollback_uncommitted()
-    assert _rows(store, "seen") == want
-
-
-def test_compaction_crash_recovery_stray_marker(spark, tmp_path):
-    """Crash between the dest rename and the marker delete leaves a
-    stray _COMPACTION.json inside the committed superstep dir: reads
-    must be unaffected and recover must clean it."""
-    res = _crawl(spark, tmp_path)
-    store = res.store
-    backend = store.backend
-    want = _rows(store, "seen")
-
-    stats = store.compact()
-    upto = stats["seen"]["upto"]
-    stray = os.path.join(
-        store.root, "seen", f"superstep={upto}", "_COMPACTION.json"
-    )
-    with open(stray, "w") as f:
-        json.dump({"upto": upto}, f)
-    # _-prefixed files are invisible to the parquet reader
-    assert _rows(store, "seen") == want
-    backend.recover_compaction("seen")
-    assert not os.path.exists(stray)
-    assert _rows(store, "seen") == want
+    web, seed = _rich_site()
+    store = _spark_crawl(spark, tmp_path, web, seed, max_supersteps=2).store
+    for legacy in (".compacted_ready", ".compacting"):
+        stray = os.path.join(store.root, "seen", legacy)
+        os.makedirs(stray)
+        with pytest.raises(ValueError, match=legacy):
+            store.rollback_uncommitted()
+        os.rmdir(stray)
+    store.rollback_uncommitted()

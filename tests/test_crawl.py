@@ -320,3 +320,43 @@ def test_dim_upsert_delta_paths(spark):
             ).collect()
         )
         assert out == ["d", "e"]
+
+
+_QUIET_READ_SCRIPT = """
+import sys
+from tests.conftest import web_dict_to_df
+from tests.test_crawl import _rich_site
+from website_indexer_spark.plans.crawl import run_crawl
+from website_indexer_spark.sources.tables import build_spark
+
+spark = build_spark(master="local[2]", shuffle_partitions=2)
+web, seed = _rich_site()
+res = run_crawl(spark, web_dict_to_df(spark, web), seed, sys.argv[1])
+print("supersteps", res.supersteps, "seen", res.store.read_all("seen").count())
+spark.stop()
+"""
+
+
+@pytest.mark.slow
+def test_crawl_stderr_has_no_metadata_probe_warning(tmp_path):
+    """Committed superstep dirs are read by explicit path. A
+    ``superstep=*`` glob read made Spark's streaming-sink metadata probe
+    log a WARN with a Java stack trace on every read of the seen and
+    dims tables. Runs in its own process so the JVM's stderr is
+    captured."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _QUIET_READ_SCRIPT, str(tmp_path / "c")],
+        cwd=repo,
+        env={**os.environ, "PYTHONPATH": repo},
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "supersteps 3" in proc.stdout, proc.stdout
+    assert "Assume no metadata directory" not in proc.stderr

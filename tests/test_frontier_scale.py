@@ -13,6 +13,7 @@
 """
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -66,6 +67,35 @@ def test_striped_bloom_incremental_no_false_negatives(spark, tmp_path):
     others = spark.range(10_000, 20_000).select(F.xxhash64("id").alias("url_hash"))
     fp = others.filter(maybe3(F.col("url_hash"))).count()
     assert fp < 500, fp
+
+
+def test_bloom_rebuild_never_reuses_cached_generation(spark, tmp_path):
+    """A probe worker caches bitmaps per (bloom dir, version). A rebuild
+    at 4x must not restart the version count, or a worker that probed
+    the old generation at version v reuses its smaller bitmaps once the
+    new generation reaches v (an out-of-bounds index, or false
+    negatives). The probe runs in-process so this process is that
+    worker."""
+    import numpy as np
+    import pandas as pd
+
+    FR._BLOOM_CACHE.clear()
+    out = str(tmp_path)
+    keys = spark.range(0, 3000).select(F.xxhash64("id").alias("url_hash"))
+    hashes = pd.Series(
+        [r["url_hash"] for r in keys.collect()], dtype=np.int64
+    )
+    first = keys.limit(100)
+
+    b1 = C.maintain_bloom(out, None, first, first, 100, 100, use_bloom=True)
+    assert b1.bucket_bits == FR.BLOOM_MIN_BUCKET_BITS
+    b1.probe_udf().func(hashes)  # caches the first generation
+
+    # 10,000 requested URLs exceed the first generation's capacity
+    b2 = C.maintain_bloom(out, b1, keys, keys, 10_000, 2900, use_bloom=True)
+    assert b2.bucket_bits > b1.bucket_bits
+    assert b2.probe_udf().func(hashes).all()  # no false negatives
+    assert b2.version > b1.version
 
 
 # ------------------------------------------------- fan-out-forced seq path
@@ -151,7 +181,7 @@ def test_bloom_auto_sizing_and_rebuild(spark, tmp_path, monkeypatch):
     assert pages == set(oracle.pages)
     assert seen == set(oracle.requested)
 
-    bloom = FR.StripedBloom.load(out)
+    bloom = FR.StripedBloom.load(os.path.join(out, "bloom"))
     assert bloom is not None
     assert bloom.built_keys == result.requested  # sized from seen count
     assert bloom.capacity_keys >= result.requested  # resized past 51-key cap

@@ -62,7 +62,7 @@ def test_crawl_index_recrawl_refetch_bloom(spark, tmp_path):
     topk = recrawl_topk(rates, 2)
     assert {r["url"] for r in topk.collect()} == scheduled
 
-    bloom0 = StripedBloom.load(root)
+    bloom0 = StripedBloom.load(os.path.join(root, "bloom"))
     assert bloom0 is not None
     shape0 = (bloom0.n_buckets, bloom0.bucket_bits)
     seen_before = {r["url"] for r in store.read_all("seen").collect()}
@@ -107,7 +107,7 @@ def test_crawl_index_recrawl_refetch_bloom(spark, tmp_path):
 
     # the resumed crawl merged into the persisted Bloom — same shape,
     # newer version — rather than rebuilding it
-    bloom1 = StripedBloom.load(root)
+    bloom1 = StripedBloom.load(os.path.join(root, "bloom"))
     assert (bloom1.n_buckets, bloom1.bucket_bits) == shape0
     assert bloom1.version > bloom0.version
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -1080,6 +1081,26 @@ def crawl_operator_plans(spark, work_dir: str):
     return plans
 
 
+def stable_plan_text(plan: str, work_dir: str) -> str:
+    """The plan as PLANS.md records it: expression ids (``#NNN``),
+    ``plan_id=NNN`` and RDD ids renumbered in order of appearance, and
+    the temp work dir replaced by a fixed name, so regenerating PLANS.md
+    only shows real plan changes. Checks still run on the raw text."""
+    plan = plan.replace(work_dir, "/tmp/plan_audit")
+    for pattern, fmt in (
+        (r"#(\d+)", "#{}"),
+        (r"plan_id=(\d+)", "plan_id={}"),
+        (r"RDD\[(\d+)\]", "RDD[{}]"),
+    ):
+        ids: dict = {}
+        plan = re.sub(
+            pattern,
+            lambda m: fmt.format(ids.setdefault(m.group(1), len(ids))),
+            plan,
+        )
+    return plan
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from website_indexer_spark.plans.catalog import SPARK_QUERIES
@@ -1121,7 +1142,7 @@ def main() -> None:
             out.append(f"- **{status}** {desc}")
             if not ok:
                 failures.append((name, desc))
-        out.append("\n```\n" + plan.strip() + "\n```\n")
+        out.append("\n```\n" + stable_plan_text(plan, work).strip() + "\n```\n")
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "PLANS.md"), "w") as f:

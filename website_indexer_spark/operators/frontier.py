@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from website_indexer_spark.sources.tables import write_json_atomic
+
 URL_HASH = lambda col: F.xxhash64(col)  # noqa: E731 — canonical url hash
 
 
@@ -291,8 +293,9 @@ def _set_bits(bitmap: np.ndarray, hashes: np.ndarray, nbits: int) -> None:
 
 class StripedBloom:
     """Persistent, incrementally-updated, bucket-striped Bloom filter
-    over ``url_hash`` keys, stored as one bitmap file per bucket under
-    ``<dir>/bucket=<b>.bin`` plus a ``meta.json``.
+    over ``url_hash`` keys, stored in one directory (a crawl keeps it
+    at ``<store>/bloom``) as one bitmap file per bucket,
+    ``bucket=<b>.bin``, plus a ``meta.json``.
 
     * build/update: distributed partial bitmaps (mapInPandas, one row
       per (input-partition, bucket)) OR-merged one bucket at a time —
@@ -309,36 +312,29 @@ class StripedBloom:
     """
 
     def __init__(
-        self, root: str, n_buckets: int, bucket_bits: int, version: int, built_keys: int
+        self, path: str, n_buckets: int, bucket_bits: int, version: int, built_keys: int
     ):
-        self.root = root
+        self.path = path
         self.n_buckets = n_buckets
         self.bucket_bits = bucket_bits
         self.version = version
         self.built_keys = built_keys
 
     # --- layout ---------------------------------------------------
-    @staticmethod
-    def _dir(root: str) -> str:
-        return os.path.join(root, "bloom")
-
     def _bucket_path(self, bucket: int) -> str:
-        return os.path.join(self._dir(self.root), f"bucket={bucket}.bin")
-
-    @classmethod
-    def _meta_path(cls, root: str) -> str:
-        return os.path.join(cls._dir(root), "meta.json")
+        return os.path.join(self.path, f"bucket={bucket}.bin")
 
     # --- lifecycle ------------------------------------------------
     @classmethod
-    def load(cls, root: str) -> Optional["StripedBloom"]:
-        path = cls._meta_path(root)
-        if not os.path.exists(path):
+    def load(cls, path: str) -> Optional["StripedBloom"]:
+        """The filter stored in directory ``path``, or None."""
+        meta_path = os.path.join(path, "meta.json")
+        if not os.path.exists(meta_path):
             return None
-        with open(path) as f:
+        with open(meta_path) as f:
             meta = json.load(f)
         return cls(
-            root,
+            path,
             meta["n_buckets"],
             meta["bucket_bits"],
             meta["version"],
@@ -348,24 +344,25 @@ class StripedBloom:
     @classmethod
     def create(
         cls,
-        root: str,
+        path: str,
         expected_keys: int,
         n_buckets: int = 8,
         total_bits: Optional[int] = None,
+        version: int = 0,
     ) -> "StripedBloom":
-        """Size from the expected key count (~10 bits/key rounded up to
-        a power of two per bucket); ``total_bits`` overrides sizing."""
+        """An empty filter in the new directory ``path``, sized from the
+        expected key count (~10 bits/key rounded up to a power of two
+        per bucket); ``total_bits`` overrides sizing. A rebuild passes
+        the old generation's ``version`` so the count keeps rising and
+        no worker's bitmap cache mistakes the new generation for the
+        old one."""
         if total_bits is None:
             total_bits = max(expected_keys, 1) * BLOOM_BITS_PER_KEY
         per_bucket = max(
             BLOOM_MIN_BUCKET_BITS, 1 << int(np.ceil(np.log2(max(1, total_bits // n_buckets))))
         )
-        os.makedirs(cls._dir(root), exist_ok=True)
-        # fresh create invalidates any previous generation
-        for name in os.listdir(cls._dir(root)):
-            if name.startswith("bucket="):
-                os.remove(os.path.join(cls._dir(root), name))
-        bloom = cls(root, n_buckets, per_bucket, version=0, built_keys=0)
+        os.makedirs(path, exist_ok=True)
+        bloom = cls(path, n_buckets, per_bucket, version=version, built_keys=0)
         bloom._write_meta()
         return bloom
 
@@ -377,10 +374,9 @@ class StripedBloom:
             "built_keys": self.built_keys,
             "bits_per_key": BLOOM_BITS_PER_KEY,
         }
-        tmp = self._meta_path(self.root) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f, indent=2, sort_keys=True)
-        os.replace(tmp, self._meta_path(self.root))
+        write_json_atomic(
+            os.path.join(self.path, "meta.json"), meta, indent=2, sort_keys=True
+        )
 
     @property
     def capacity_keys(self) -> int:
@@ -449,10 +445,9 @@ class StripedBloom:
         take the exact check; False = definitely not in the filter)."""
         from pyspark.sql.functions import pandas_udf
 
-        root, n_buckets = self.root, self.n_buckets
+        bloom_dir, n_buckets = self.path, self.n_buckets
         nbits, nbytes = self.bucket_bits, self.bucket_bits // 8
         version = self.version
-        bloom_dir = self._dir(root)
 
         @pandas_udf("boolean")
         def maybe_seen(url_hash: pd.Series) -> pd.Series:

@@ -100,26 +100,21 @@ def recrawl_invalidate(spark: SparkSession, store, topk: DataFrame) -> dict:
     nb = store.seen_buckets
     touched = {h % nb for h in key_hashes}
     targets = []
-    if os.path.isdir(seen_dir):
-        last = store.backend.last_committed()
-        for entry in sorted(os.listdir(seen_dir)):
-            if not entry.startswith("superstep="):
-                continue
-            if int(entry.split("=", 1)[1]) > last:
-                continue
-            bucket_dirs = [
-                d
-                for d in os.listdir(os.path.join(seen_dir, entry))
-                if d.startswith("bucket=")
-            ]
-            if bucket_dirs:
-                targets.extend(
-                    f"{entry}/{d}"
-                    for d in sorted(bucket_dirs)
-                    if int(d.split("=", 1)[1]) in touched
-                )
-            else:
-                targets.append(entry)  # legacy flat delta
+    for k in store.backend.committed_steps("seen"):
+        entry = f"superstep={k}"
+        bucket_dirs = [
+            d
+            for d in os.listdir(os.path.join(seen_dir, entry))
+            if d.startswith("bucket=")
+        ]
+        if bucket_dirs:
+            targets.extend(
+                f"{entry}/{d}"
+                for d in sorted(bucket_dirs)
+                if int(d.split("=", 1)[1]) in touched
+            )
+        else:
+            targets.append(entry)  # legacy flat delta
 
     seen_removed = 0
     staged = []

@@ -95,7 +95,10 @@ from website_indexer_spark.sources.tables import (
     FRONTIER_SCHEMA,
     CrawlStore,
     build_spark,
+    commit_staged_swap,
     load_web_pages,
+    recover_staged_swap,
+    swap_staging_dir,
 )
 
 # Above this ACCEPTED-delta size the per-superstep discovery_seq
@@ -197,13 +200,19 @@ def maintain_bloom(
     construction), so sizing needs no extra jobs. Returns the live
     filter (already merged with this wave's delta) or None when the
     prefilter is off. ``bloom_bits`` force-sizes the filter and
-    disables the capacity-driven rebuild."""
+    disables the capacity-driven rebuild.
+
+    A (re)build writes the new generation in a staging dir and swaps it
+    in as ``<out_dir>/bloom`` with ``commit_staged_swap``: a crash
+    before the swap leaves the old generation, which still covers every
+    committed key, and the resumed superstep rebuilds again."""
     filter_on = use_bloom or (
         use_bloom is None and requested_total >= BLOOM_AUTO_SEEN_THRESHOLD
     )
     if not filter_on:
         return None
-    filt = bloom or StripedBloom.load(out_dir)
+    bloom_dir = os.path.join(out_dir, "bloom")
+    filt = bloom or StripedBloom.load(bloom_dir)
     if filt is not None and (
         bloom_bits is not None or requested_total <= filt.capacity_keys
     ):
@@ -212,11 +221,16 @@ def maintain_bloom(
     # (re)size for 4× the current seen count so capacity doublings
     # amortize; one distributed rebuild pass over the committed
     # history + this wave's delta
+    recover_staged_swap(out_dir)
     filt = StripedBloom.create(
-        out_dir, expected_keys=4 * requested_total, total_bits=bloom_bits
+        swap_staging_dir(out_dir, 0),
+        expected_keys=4 * requested_total,
+        total_bits=bloom_bits,
+        version=filt.version if filt is not None else 0,
     )
     filt.update(seen_now, n_keys=requested_total)
-    return filt
+    commit_staged_swap(out_dir, ["bloom"])
+    return StripedBloom.load(bloom_dir)
 
 
 def fetch_sim_join(web, selected, n_selected):

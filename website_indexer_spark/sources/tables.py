@@ -14,9 +14,11 @@ with a JSON manifest as the atomic commit marker:
       bloom/bucket=B.bin              # striped persistent Bloom filter
 
 A superstep K is committed iff manifests/K.json exists; readers only
-read ``superstep <= last_committed`` (partition pruning does the
-filtering at scan time), so a job killed mid-write leaves no torn
-state and ``resume`` restarts from the last committed superstep.
+list and read the ``superstep <= last_committed`` dirs, so a job
+killed mid-write leaves no torn state and ``resume`` restarts from the
+last committed superstep. Directory rewrites (compaction, recrawl's
+seen eviction, the Bloom rebuild) stage under dot-prefixed ``.swap``
+dirs and commit through ``commit_staged_swap``.
 On a cluster with Iceberg jars the same interface maps onto real
 Iceberg snapshots (MERGE/append + snapshot metadata); that swap is a
 config change, not a redesign.
@@ -31,7 +33,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from typing import Dict, List, Optional
+from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -200,15 +202,28 @@ DELTA_TABLES = ("routed", "seen", "dims")
 SNAPSHOT_TABLES = ("frontier",)
 
 
+def write_json_atomic(path: str, obj, **dump_kwargs) -> None:
+    """Write ``obj`` as JSON to ``path`` via a sibling ``.tmp`` file and
+    ``os.replace``, so readers see the old file or the new one, never a
+    torn write. ``dump_kwargs`` go to ``json.dump`` unchanged."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, **dump_kwargs)
+    os.replace(tmp, path)
+
+
 # --- staged directory swap ---------------------------------------------
-# In-place rewrites of committed partition dirs (recrawl's seen-key
-# eviction) stage their replacements under <table>/.swap/<i> — dot-
-# prefixed, so outside the superstep=/bucket= namespace that readers,
-# listings and partition discovery walk — then write _SWAP.json naming
-# each target before the first rename. The marker is the commit point:
-# without it a staged dir is dropped, with it every remaining staged
-# dir replaces its target. Each step is idempotent, so a crash anywhere
-# is finished by recover_staged_swap.
+# The store's one directory-rewrite protocol. Its three users:
+# recrawl's seen-key eviction (bucket dirs of the seen table),
+# compaction and rebucket (N superstep dirs merged into one), and the
+# Bloom rebuild (<root>/bloom replaced by a new generation). Each stages
+# its replacements under <dir>/.swap/<i> — dot-prefixed, so outside the
+# superstep=/bucket= namespace that readers, listings and partition
+# discovery walk — then writes _SWAP.json naming each target (and each
+# dir to drop) before the first rename. The marker is the commit point:
+# without it the staging is dropped, with it every remaining staged dir
+# replaces its target and every drop dir is deleted. Each step is
+# idempotent, so a crash anywhere is finished by recover_staged_swap.
 SWAP_DIR = ".swap"
 SWAP_MARKER = "_SWAP.json"
 
@@ -218,13 +233,16 @@ def swap_staging_dir(table_dir: str, i: int) -> str:
     return os.path.join(table_dir, SWAP_DIR, str(i))
 
 
-def commit_staged_swap(table_dir: str, targets: List[str]) -> None:
-    """Swap ``swap_staging_dir(table_dir, i)`` into ``targets[i]``
-    (paths relative to ``table_dir``) for every i, crash-safely."""
-    marker = os.path.join(table_dir, SWAP_DIR, SWAP_MARKER)
-    with open(marker + ".tmp", "w") as f:
-        json.dump({"targets": targets}, f)
-    os.replace(marker + ".tmp", marker)
+def commit_staged_swap(
+    table_dir: str, targets: List[str], drop: Sequence[str] = ()
+) -> None:
+    """Swap ``swap_staging_dir(table_dir, i)`` into ``targets[i]`` for
+    every i and delete every dir in ``drop`` (all paths relative to
+    ``table_dir``), crash-safely."""
+    write_json_atomic(
+        os.path.join(table_dir, SWAP_DIR, SWAP_MARKER),
+        {"targets": targets, "drop": list(drop)},
+    )
     recover_staged_swap(table_dir)
 
 
@@ -237,8 +255,8 @@ def recover_staged_swap(table_dir: str) -> None:
     marker = os.path.join(stage, SWAP_MARKER)
     if os.path.exists(marker):
         with open(marker) as f:
-            targets = json.load(f)["targets"]
-        for i, rel in enumerate(targets):
+            swap = json.load(f)
+        for i, rel in enumerate(swap["targets"]):
             src = swap_staging_dir(table_dir, i)
             if not os.path.isdir(src):
                 continue  # already swapped in
@@ -246,6 +264,9 @@ def recover_staged_swap(table_dir: str) -> None:
             if os.path.isdir(dest):
                 shutil.rmtree(dest)
             os.rename(src, dest)
+        for rel in swap.get("drop", ()):
+            if os.path.isdir(os.path.join(table_dir, rel)):
+                shutil.rmtree(os.path.join(table_dir, rel))
     shutil.rmtree(stage)
 
 
@@ -687,10 +708,9 @@ class ParquetManifestBackend(TableBackend):
             "counters": counters,
             "files": self.delta_files(superstep),
         }
-        tmp = self._manifest_path(superstep) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=2, sort_keys=True)
-        os.replace(tmp, self._manifest_path(superstep))
+        write_json_atomic(
+            self._manifest_path(superstep), manifest, indent=2, sort_keys=True
+        )
 
     def clear(self) -> None:
         """Wipe all table + manifest state (fresh-run init)."""
@@ -702,15 +722,25 @@ class ParquetManifestBackend(TableBackend):
 
     def rollback_uncommitted(self) -> None:
         """Drop superstep dirs newer than the last committed manifest;
-        also finish/abort any staged swap or compaction a crash
-        interrupted."""
+        also finish or drop any staged swap a crash interrupted (the
+        tables' compaction/recrawl swaps and the root-level Bloom
+        rebuild swap)."""
         last = self.last_committed()
+        recover_staged_swap(self.root)
         for name in DELTA_TABLES + SNAPSHOT_TABLES:
             tdir = os.path.join(self.root, name)
             if not os.path.isdir(tdir):
                 continue
+            for legacy in (".compacting", ".compacted_ready"):
+                if os.path.isdir(os.path.join(tdir, legacy)):
+                    raise ValueError(
+                        f"{os.path.join(tdir, legacy)} was left by an "
+                        f"older compaction protocol and holds rows that "
+                        f"readers cannot see; move its parquet files "
+                        f"back into a committed superstep dir (or "
+                        f"delete it if it is a torn rewrite) first"
+                    )
             recover_staged_swap(tdir)
-            self.recover_compaction(name)
             for entry in os.listdir(tdir):
                 if entry.startswith("superstep="):
                     step = int(entry.split("=", 1)[1])
@@ -718,76 +748,28 @@ class ParquetManifestBackend(TableBackend):
                         shutil.rmtree(os.path.join(tdir, entry))
 
     # --- compaction (rewrite_data_files analogue) -------------------
-    def _compaction_dirs(self, name: str):
+    def committed_steps(self, name: str) -> List[int]:
+        """The supersteps k <= the last committed one that have a
+        ``superstep=k`` dir in table ``name``, ascending."""
         tdir = os.path.join(self.root, name)
-        return (
-            tdir,
-            os.path.join(tdir, ".compacting"),
-            os.path.join(tdir, ".compacted_ready"),
+        if not os.path.isdir(tdir):
+            return []
+        last = self.last_committed()
+        steps = (
+            int(e.split("=", 1)[1])
+            for e in os.listdir(tdir)
+            if e.startswith("superstep=")
         )
+        return sorted(k for k in steps if k <= last)
 
     def _table_files(self, name: str) -> int:
         tdir = os.path.join(self.root, name)
         n = 0
         for dirpath, _dirs, files in os.walk(tdir):
-            if ".compact" in dirpath:
+            if SWAP_DIR in dirpath.split(os.sep):
                 continue
             n += sum(1 for f in files if f.endswith(".parquet"))
         return n
-
-    def recover_compaction(self, name: str) -> None:
-        """Finish or abort a compaction interrupted by a crash:
-        a ``.compacted_ready`` dir is a committed rewrite (its
-        _COMPACTION.json names the covered supersteps) — finish the
-        swap; a bare ``.compacting`` dir is an incomplete write —
-        drop it. Mirrors rollback_uncommitted's marker discipline."""
-        tdir, tmp, ready = self._compaction_dirs(name)
-        if os.path.isdir(ready):
-            marker = os.path.join(ready, "_COMPACTION.json")
-            if os.path.exists(marker):
-                with open(marker) as f:
-                    upto = json.load(f)["upto"]
-            else:
-                # marker-less ready dir (legacy crash shape): the old
-                # superstep dirs covered by the rewrite may already be
-                # gone, so the only safe target is the last committed
-                # manifest — the rewrite never covers uncommitted steps.
-                upto = self.last_committed()
-            self._finish_compaction(name, upto)
-        elif os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        else:
-            # a crash between the dest rename and the marker delete
-            # leaves a stray _COMPACTION.json inside the final
-            # superstep dir; Spark ignores _-prefixed files, but clean
-            # it so the invariant "no markers outside .compacted_ready"
-            # holds for the next compaction.
-            if os.path.isdir(tdir):
-                for entry in os.listdir(tdir):
-                    if entry.startswith("superstep="):
-                        stray = os.path.join(tdir, entry, "_COMPACTION.json")
-                        if os.path.exists(stray):
-                            os.remove(stray)
-
-    def _finish_compaction(self, name: str, upto: int) -> None:
-        # Order matters for crash safety: rename the ready dir into
-        # place FIRST (marker still inside — Spark ignores _-prefixed
-        # files in parquet dirs), delete the marker LAST. A crash at
-        # any point leaves either a marker-bearing .compacted_ready
-        # (recover re-runs this) or a committed superstep dir with at
-        # worst a stray marker (recover cleans it) — never a
-        # marker-less ready dir with the old deltas already deleted.
-        tdir, _tmp, ready = self._compaction_dirs(name)
-        for entry in os.listdir(tdir):
-            if entry.startswith("superstep="):
-                step = int(entry.split("=", 1)[1])
-                if step <= upto:
-                    shutil.rmtree(os.path.join(tdir, entry))
-        dest = os.path.join(tdir, f"superstep={upto}")
-        os.rename(ready, dest)  # the swap point
-        marker = os.path.join(dest, "_COMPACTION.json")
-        if os.path.exists(marker):
-            os.remove(marker)
 
     def bucketed_files(self, name: str) -> Dict[int, List[str]]:
         """Committed parquet files grouped by ``bucket=B`` dir value.
@@ -795,27 +777,10 @@ class ParquetManifestBackend(TableBackend):
         manifest-file analogue of Iceberg's per-bucket data-file list);
         files under uncommitted supersteps are invisible, matching
         read_table."""
-        tdir = os.path.join(self.root, name)
-        last = self.last_committed()
         out: Dict[int, List[str]] = {}
-        if not os.path.isdir(tdir):
-            return out
-        for entry in sorted(os.listdir(tdir)):
-            if not entry.startswith("superstep="):
-                continue
-            if int(entry.split("=", 1)[1]) > last:
-                continue
-            base = os.path.join(tdir, entry)
-            for dirpath, _dirs, files in os.walk(base):
-                marker = os.path.basename(dirpath)
-                if not marker.startswith("bucket="):
-                    continue
-                b = int(marker.split("=", 1)[1])
-                for fname in files:
-                    if fname.endswith(".parquet"):
-                        out.setdefault(b, []).append(
-                            os.path.join(dirpath, fname)
-                        )
+        for k in self.committed_steps(name):
+            for b, paths in self.snapshot_bucket_files(name, k).items():
+                out.setdefault(b, []).extend(paths)
         return out
 
     def snapshot_bucket_files(
@@ -842,16 +807,9 @@ class ParquetManifestBackend(TableBackend):
         return out
 
     def bucketed_layout_ok(self, name: str) -> bool:
-        tdir = os.path.join(self.root, name)
-        last = self.last_committed()
-        if not os.path.isdir(tdir):
-            return True  # empty table: vacuously bucketed
-        for entry in os.listdir(tdir):
-            if not entry.startswith("superstep="):
-                continue
-            if int(entry.split("=", 1)[1]) > last:
-                continue
-            base = os.path.join(tdir, entry)
+        # an empty table is vacuously bucketed
+        for k in self.committed_steps(name):
+            base = os.path.join(self.root, name, f"superstep={k}")
             for dirpath, _dirs, files in os.walk(base):
                 if not any(f.endswith(".parquet") for f in files):
                     continue
@@ -871,15 +829,18 @@ class ParquetManifestBackend(TableBackend):
         10^5 directories — the classic small-file problem; this is the
         offline maintenance pass (Iceberg rewrite_data_files) that
         keeps scan planning O(files-after), run between crawls like
-        `manage clean`. Crash-safe: the rewritten data lands in a
-        ``.compacted_ready`` dir (the commit marker) before any old
-        delta is deleted; `recover_compaction` finishes a torn swap."""
+        `manage clean`. Crash-safe: the merged table is staged in
+        ``<table>/.swap/0`` and ``commit_staged_swap`` swaps it in,
+        dropping the other committed superstep dirs under the same
+        marker; the next compaction or ``rollback_uncommitted``
+        finishes or drops a torn swap."""
         upto = self.last_committed()
-        self.recover_compaction(name)
-        tdir, tmp, ready = self._compaction_dirs(name)
+        tdir = os.path.join(self.root, name)
+        recover_staged_swap(tdir)
         if upto < 0 or not os.path.isdir(tdir):
             return {"files_before": 0, "files_after": 0, "upto": upto}
         files_before = self._table_files(name)
+        committed = [f"superstep={k}" for k in self.committed_steps(name)]
         merged = self.read_table(name, schema)
         if augment is not None:
             merged = augment(merged)
@@ -891,11 +852,11 @@ class ParquetManifestBackend(TableBackend):
             writer = merged.repartition(*partition_by).write.mode(
                 "overwrite"
             ).partitionBy(*partition_by)
-        writer.parquet(tmp)
-        with open(os.path.join(tmp, "_COMPACTION.json"), "w") as f:
-            json.dump({"upto": upto}, f)
-        os.rename(tmp, ready)  # the commit point
-        self._finish_compaction(name, upto)
+        writer.parquet(swap_staging_dir(tdir, 0))
+        target = f"superstep={upto}"
+        commit_staged_swap(
+            tdir, [target], drop=[d for d in committed if d != target]
+        )
         return {
             "files_before": files_before,
             "files_after": self._table_files(name),
@@ -904,20 +865,22 @@ class ParquetManifestBackend(TableBackend):
 
     # --- reads ----------------------------------------------------
     def read_table(self, name: str, schema: T.StructType) -> DataFrame:
+        # only committed supersteps are visible, and they are listed
+        # explicitly: a superstep=* glob makes Spark's streaming-sink
+        # metadata probe log a WARN with a stack trace on every read
         tdir = os.path.join(self.root, name)
-        if not os.path.isdir(tdir) or not any(
-            e.startswith("superstep=") for e in os.listdir(tdir)
-        ):
+        paths = [
+            os.path.join(tdir, f"superstep={k}")
+            for k in self.committed_steps(name)
+        ]
+        if not paths:
             return self.spark.createDataFrame([], schema)
         df = self.spark.read.schema(schema).option("basePath", tdir).parquet(
-            tdir + "/superstep=*"
+            *paths
         )
-        # only committed supersteps are visible (partition-pruned scan);
         # project to the logical schema — physical partition columns
         # (superstep, the seen table's bucket) stay in the layout
-        return df.filter(F.col("superstep") <= self.last_committed()).select(
-            *[f.name for f in schema.fields]
-        )
+        return df.select(*[f.name for f in schema.fields])
 
     def read_snapshot(
         self, name: str, superstep: int, schema: T.StructType
@@ -956,10 +919,7 @@ class CrawlStore:
         return os.path.join(self.root, "store_meta.json")
 
     def _write_meta(self, meta: dict) -> None:
-        tmp = self._meta_file() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f, indent=2, sort_keys=True)
-        os.replace(tmp, self._meta_file())
+        write_json_atomic(self._meta_file(), meta, indent=2, sort_keys=True)
         self._meta = meta
 
     def _init_meta(
@@ -1038,8 +998,12 @@ class CrawlStore:
         paths), then each affected table is rewritten (compact's
         augment recomputes buckets from the new count), then the flag
         clears. A crash at any point leaves a store that is correct,
-        merely slower, until rebucket()/compact() is re-run."""
-        targets: Dict[str, int] = {}
+        merely slower, until rebucket() is re-run: tables still flagged
+        pending are rewritten again even when their count is unchanged."""
+        targets: Dict[str, int] = {
+            name: int(self._meta[f"{name}_buckets"])
+            for name in self._meta.get("rebucket_pending") or []
+        }
         if seen_buckets is not None and seen_buckets != self.seen_buckets:
             targets["seen"] = int(seen_buckets)
         if dims_buckets is not None and dims_buckets != self.dims_buckets:
@@ -1094,11 +1058,12 @@ class CrawlStore:
 
     def clear(self) -> None:
         """Wipe all crawl state (fresh-run initialization): tables +
-        manifests (backend), Bloom stripes, and the crawl record."""
+        manifests (backend), Bloom stripes (and a staged Bloom
+        rebuild), and the crawl record."""
         self.backend.clear()
-        bloom_dir = os.path.join(self.root, "bloom")
-        if os.path.isdir(bloom_dir):
-            shutil.rmtree(bloom_dir)
+        for d in ("bloom", SWAP_DIR):
+            if os.path.isdir(os.path.join(self.root, d)):
+                shutil.rmtree(os.path.join(self.root, d))
         crawl_json = os.path.join(self.root, "crawl.json")
         if os.path.exists(crawl_json):
             os.remove(crawl_json)
@@ -1170,10 +1135,13 @@ class CrawlStore:
 
     # --- crawl record (models.py:19-52 analogue) -------------------
     def write_crawl_record(self, record: dict) -> None:
-        tmp = os.path.join(self.root, "crawl.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(record, f, indent=2, sort_keys=True, default=str)
-        os.replace(tmp, os.path.join(self.root, "crawl.json"))
+        write_json_atomic(
+            os.path.join(self.root, "crawl.json"),
+            record,
+            indent=2,
+            sort_keys=True,
+            default=str,
+        )
 
     def read_crawl_record(self) -> Optional[dict]:
         path = os.path.join(self.root, "crawl.json")

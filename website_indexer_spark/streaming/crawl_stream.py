@@ -31,6 +31,7 @@ candidate harvest so an external queue can close the loop.
 
 from __future__ import annotations
 
+import os
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, Window
@@ -94,7 +95,7 @@ def crawl_stream_step(
             m["counters"].get("requested", 0) for m in store.manifests()
         )
         bloom = (
-            StripedBloom.load(out_dir)
+            StripedBloom.load(os.path.join(out_dir, "bloom"))
             if requested_total >= BLOOM_AUTO_SEEN_THRESHOLD
             else None
         )

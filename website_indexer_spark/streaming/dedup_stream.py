@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from website_indexer_spark.operators.frontier import exclude_keys_bucketed
+from website_indexer_spark.sources.tables import write_json_atomic
 
 DEDUP_STREAM_BUCKETS = 8
 
@@ -80,10 +81,9 @@ class DedupStreamStore:
                     shutil.rmtree(os.path.join(tdir, entry))
 
     def commit(self, k: int, counters: dict) -> None:
-        tmp = self._manifest_path(k) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"superstep": k, "counters": counters}, f)
-        os.replace(tmp, self._manifest_path(k))
+        write_json_atomic(
+            self._manifest_path(k), {"superstep": k, "counters": counters}
+        )
 
     def manifests(self) -> list[dict]:
         out = []
