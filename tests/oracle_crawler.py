@@ -221,3 +221,34 @@ def fixture_site() -> Tuple[Dict[str, WebResponse], str]:
         "https://example.org/": WebResponse(html=b"<html><body>external</body></html>"),
     }
     return web, "http://localhost:8000/"
+
+
+def fan_site() -> Tuple[Dict[str, WebResponse], str]:
+    """A synthetic site that needs no reference files. Home links to
+    a0..a2, a 404 and a redirect; each a_i links home, to b_i and to
+    the next a; each b_i links home and back to a_i. Supersteps request
+    1, 5 and 3 URLs, and every page links to keys committed earlier, so
+    a seen set that lost them fetches those pages twice. Every page
+    carries the ``o-fan`` component, and home also ``m-nav``."""
+    H = "https://fan.test"
+
+    def page(*links, components="o-fan"):
+        body = " ".join(f'<a href="{href}">x</a>' for href in links)
+        return WebResponse(
+            html=(
+                "<html><head><title>t</title></head><body>"
+                f'<div class="{components}">{body}</div></body></html>'
+            ).encode()
+        )
+
+    web = {
+        f"{H}/": page(
+            "/a0/", "/a1/", "/a2/", "/gone/", "/old/", components="o-fan m-nav"
+        ),
+        f"{H}/gone/": WebResponse(html=None, status_code=404),
+        f"{H}/old/": WebResponse(html=None, status_code=301, location=f"{H}/a0/"),
+    }
+    for i in range(3):
+        web[f"{H}/a{i}/"] = page("/", f"/b{i}/", f"/a{(i + 1) % 3}/")
+        web[f"{H}/b{i}/"] = page("/", f"/a{i}/")
+    return web, f"{H}/"

@@ -116,3 +116,32 @@ def test_pair_count_plan_partial_agg_no_python_round1(spark, docs):
     plan = buf.getvalue()
     assert "EvalPython" not in plan and "MapInPandas" not in plan
     assert "partial_count" in plan or "partial" in plan.lower()
+
+
+def test_unicode_space_segments_words_the_same_on_every_path(spark):
+    """U+00A0 is not a word separator under the native round-1 split
+    (Java ``\\s``), so the re-segmenting rounds and the encoder must not
+    split on it either: with a merge that never fires, round 1 and the
+    merges>0 path count the same pairs, and the encoder keeps the
+    no-break space inside one word."""
+    docs = spark.createDataFrame(
+        [(0, "ab\u00a0cd ab\tcd"), (1, "cd\u00a0ab")], ["doc_id", "text"]
+    )
+    no_op = (("x", "y"),)
+
+    def counts(merges):
+        return {
+            (r["left"], r["right"]): r["cnt"]
+            for r in bpe.pair_counts(docs, merges=merges).collect()
+        }
+
+    round1 = counts(())
+    assert round1 == counts(no_op)
+    assert round1[("b", "\u00a0")] == 1 and round1[("\u00a0", "c")] == 1
+    enc = {
+        r["doc_id"]: list(r["tokens"])
+        for r in bpe.encode_with_merges(docs, list(no_op)).collect()
+    }
+    assert enc[0] == ["a", "b", "\u00a0", "c", "d</w>",
+                      "a", "b</w>", "c", "d</w>"]
+    assert enc[1] == ["c", "d", "\u00a0", "a", "b</w>"]

@@ -7,13 +7,13 @@ import os
 
 import pytest
 
-from tests.oracle_crawler import fixture_site
+from tests.oracle_crawler import fan_site
 from tests.conftest import web_dict_to_df
 from website_indexer_spark.plans.crawl import run_crawl
 
 
 def _crawl(spark, tmp_path, sub="c", **kw):
-    web, seed = fixture_site()
+    web, seed = fan_site()
     return run_crawl(
         spark, web_dict_to_df(spark, web), seed, str(tmp_path / sub), **kw
     )
@@ -63,7 +63,7 @@ def test_compact_then_resume_matches_uncompacted(spark, tmp_path):
     partial = _crawl(spark, tmp_path, sub="part", max_supersteps=2)
     assert partial.supersteps == 2
     partial.store.compact()
-    web, seed = fixture_site()
+    web, seed = fan_site()
     resumed = run_crawl(
         spark,
         web_dict_to_df(spark, web),
@@ -86,6 +86,7 @@ def test_viewer_queries_after_compaction(spark, tmp_path):
     comps_before = {
         tuple(r) for r in vq.component_list(store.read_all("pages")).collect()
     }
+    assert comps_before  # the site's pages carry components
     store.compact()
     assert store.read_all("pages").count() == pages_before
     comps_after = {

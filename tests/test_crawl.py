@@ -322,6 +322,62 @@ def test_dim_upsert_delta_paths(spark):
         assert out == ["d", "e"]
 
 
+
+def test_route_and_extract_resolves_out_links(spark):
+    """The extraction pass resolves each row's frontier candidates
+    (``ex.out_links``) so the harvest needs no Python: a page's links
+    canonicalized in first-seen order, a redirect's Location resolved
+    against the redirecting URL (off-host targets kept for the
+    harvest's start-host filter), /external-site/ wrappers unwrapped,
+    and NULL for error rows even when they carry a Location."""
+    from pyspark.sql import functions as F
+
+    from website_indexer_spark.plans.crawl import (
+        route_and_extract,
+        with_effective_status,
+    )
+
+    H = "https://site.test"
+    wrapped = "/external-site/?ext_url=https%3A%2F%2Ffar.test%2Fz"
+    page = (
+        "<html><head><title>P</title></head><body>"
+        '<a href="/c/">c</a> <a href="/a/#x">a</a> '
+        f'<a href="{H}/a/">a again</a> '
+        '<a href="https://SITE.test/external-site/?ext_url=https%3A%2F%2Ffar.test%2F">'
+        "w</a></body></html>"
+    ).encode()
+    rows = [
+        (f"{H}/p/", page, 200, None, "text/html"),
+        (f"{H}/old", None, 301, "../new/", None),
+        (f"{H}/away/", None, 302, "https://elsewhere.test/landing/", None),
+        (f"{H}/wrap/", None, 302, wrapped, None),
+        (f"{H}/gone/", None, 404, "/ignored/", None),
+        (f"{H}/down/", None, None, None, None),
+    ]
+    fetched = spark.createDataFrame(
+        rows,
+        "url string, html binary, status_code int, location string, "
+        "content_type string",
+    ).withColumn("host", F.lit("site.test"))
+    got = {
+        r["url"]: (r["record_type"], r["out_links"])
+        for r in route_and_extract(with_effective_status(fetched), "site.test")
+        .select("url", "record_type", "ex.out_links")
+        .collect()
+    }
+    assert got == {
+        f"{H}/p/": (
+            "page",
+            [f"{H}/a/", f"{H}/c/", "https://far.test/"],
+        ),
+        f"{H}/old": ("redirect", [f"{H}/new/"]),
+        f"{H}/away/": ("redirect", ["https://elsewhere.test/landing/"]),
+        f"{H}/wrap/": ("redirect", ["https://far.test/z"]),
+        f"{H}/gone/": ("error", None),
+        f"{H}/down/": ("error", None),
+    }
+
+
 _QUIET_READ_SCRIPT = """
 import sys
 from tests.conftest import web_dict_to_df

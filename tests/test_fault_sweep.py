@@ -22,7 +22,7 @@ from contextlib import contextmanager
 import pytest
 
 from tests.conftest import web_dict_to_df
-from tests.oracle_crawler import WebResponse, crawl as oracle_crawl
+from tests.oracle_crawler import crawl as oracle_crawl, fan_site
 from website_indexer_spark.operators import frontier as FR
 from website_indexer_spark.operators.recrawl import recrawl_invalidate
 from website_indexer_spark.plans.crawl import run_crawl
@@ -93,39 +93,13 @@ def _sweep(tmp_path, base, calls, case):
         list(pool.map(one, enumerate(calls, start=1)))
 
 
-def _fan_site():
-    """Home links to a0..a2, a 404 and a redirect; each a_i links home,
-    to b_i and to the next a; each b_i links home and back to a_i.
-    Supersteps request 1, 5 and 3 URLs, and every page links to keys
-    committed earlier, so a Bloom that lost them sends those keys down
-    the definitely-unseen path and they are fetched twice."""
-    H = "https://fan.test"
-
-    def page(*links):
-        body = " ".join(f'<a href="{href}">x</a>' for href in links)
-        return WebResponse(
-            html=f"<html><head><title>t</title></head><body>{body}</body></html>"
-            .encode()
-        )
-
-    web = {
-        f"{H}/": page("/a0/", "/a1/", "/a2/", "/gone/", "/old/"),
-        f"{H}/gone/": WebResponse(html=None, status_code=404),
-        f"{H}/old/": WebResponse(html=None, status_code=301, location=f"{H}/a0/"),
-    }
-    for i in range(3):
-        web[f"{H}/a{i}/"] = page("/", f"/b{i}/", f"/a{(i + 1) % 3}/")
-        web[f"{H}/b{i}/"] = page("/", f"/a{i}/")
-    return web, f"{H}/"
-
-
 @pytest.fixture(scope="module")
 def site(spark, tmp_path_factory):
     """The fan site crawled for two supersteps with the Bloom forced on
     and sized from an 8-bit-per-bucket floor: every delta table has two
     superstep dirs (compaction drops one and replaces the other), and
     the third superstep outgrows the Bloom."""
-    web, seed = _fan_site()
+    web, seed = fan_site()
     web_df = web_dict_to_df(spark, web)
     base = str(tmp_path_factory.mktemp("sweep") / "base")
     with pytest.MonkeyPatch.context() as m:

@@ -120,7 +120,7 @@ def test_canonicalize_fast_path_equivalence(href, base):
 @given(_url_text, _fast_base_like)
 def test_canonicalize_idempotent_under_same_base(href, base):
     """canonicalize(canonicalize(x, b), b) == canonicalize(x, b) —
-    the exact invariant canonicalize_links_udf's identity-skip relies
+    the exact invariant udfs.resolve_links' identity-skip relies
     on (re-canonicalizing an unchanged unwrap result is a no-op)."""
     c = canonicalize_url(href, base)
     if c is not None:

@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import web_dict_to_df
-from tests.oracle_crawler import crawl as oracle_crawl, fixture_site
+from tests.oracle_crawler import crawl as oracle_crawl, fan_site
 from website_indexer_spark.operators import frontier as FR
 from website_indexer_spark.plans import crawl as C
 from website_indexer_spark.sources.tables import (
@@ -25,7 +25,7 @@ from website_indexer_spark.sources.tables import (
 
 
 def _crawl(spark, tmp_path, name, **kwargs):
-    web, seed = fixture_site()
+    web, seed = fan_site()
     return C.run_crawl(
         spark, web_dict_to_df(spark, web), seed, str(tmp_path / name), **kwargs
     )
@@ -52,7 +52,7 @@ def test_nondefault_bucket_count_crawl_resume_compact(spark, tmp_path, monkeypat
     CrawlStore(spark, root, seen_buckets=5, dims_buckets=3)  # create meta
     monkeypatch.setattr(C, "BROADCAST_FETCH_THRESHOLD", -1)  # force bucketed
     monkeypatch.setattr(C, "DIM_BROADCAST_THRESHOLD", -1)
-    web, seed = fixture_site()
+    web, seed = fan_site()
     oracle = oracle_crawl(web, seed)
     result = C.run_crawl(spark, web_dict_to_df(spark, web), seed, root)
     assert result.store.seen_buckets == 5
@@ -152,7 +152,7 @@ def test_flat_legacy_crawl_resume_falls_back_scanned(spark, tmp_path, monkeypatc
     with the broadcast threshold forced off — the driver must take the
     scanned fallback (not the bucketed probe) and never re-request a
     committed URL."""
-    web, seed = fixture_site()
+    web, seed = fan_site()
     oracle = oracle_crawl(web, seed)
     root = str(tmp_path / "r")
     # phase 1: full crawl, then simulate a crash after superstep last-1
@@ -245,7 +245,7 @@ def test_parallel_delta_write_above_threshold(spark, tmp_path, monkeypatch):
     multiple distinct writer tasks — and the layout still drives an
     exact bucketed anti-join and an oracle-identical crawl."""
     monkeypatch.setattr(C, "DELTA_WRITE_SINGLE_TASK_MAX", -1)
-    web, seed = fixture_site()
+    web, seed = fan_site()
     oracle = oracle_crawl(web, seed)
     root = str(tmp_path / "pw")
     result = C.run_crawl(spark, web_dict_to_df(spark, web), seed, root)

@@ -1078,7 +1078,60 @@ def crawl_operator_plans(spark, work_dir: str):
             ),
         ],
     )
+    # the superstep's one Python pass: the crawl UDF extracts AND
+    # resolves out-links in the cached extraction, so the harvest →
+    # policy → within-delta dedup chain built over that cache (and the
+    # seen anti-join / numbering above it) is JVM-only — each of its
+    # references in the frontier write re-reads the cache, none
+    # re-enters Python.
+    from website_indexer_spark.operators.policy import CrawlPolicy
+    from website_indexer_spark.plans.crawl import (
+        harvest_candidates,
+        route_and_extract,
+        with_effective_status,
+    )
+
+    fetched = spark.createDataFrame(
+        [
+            ("https://h.test/", b"<html><head><title>t</title></head>"
+             b"<body><a href='/a/'>a</a></body></html>", 200, None,
+             "text/html", "h.test", 0, 0),
+            ("https://h.test/old", None, 301, "/a/", None, "h.test", 0, 1),
+        ],
+        "url string, html binary, status_code int, location string, "
+        "content_type string, host string, depth int, discovery_seq long",
+    )
+    extracted = route_and_extract(with_effective_status(fetched), "h.test")
+    plans["crawl_harvest_jvm_only"] = (
+        harvest_candidates(
+            extracted.persist(), "h.test",
+            CrawlPolicy(start_url="https://h.test/"), None, 0,
+        ),
+        [
+            ("harvest reads the cached extraction, whose plan holds the "
+             "superstep's one Python evaluator; no Python evaluator "
+             "outside the InMemoryRelation",
+             lambda p: python_nodes(p) == ["cached"]),
+        ],
+    )
     return plans
+
+
+def python_nodes(plan: str) -> list:
+    """Each Python-evaluating node of the plan tree, in tree order:
+    "cached" when it sits under an InMemoryRelation, else "live"."""
+    tree = plan.split("\n\n", 1)[0].splitlines()
+    out = []
+    cache_depth = None
+    for line in tree:
+        depth = len(line) - len(line.lstrip(" |+-:*"))
+        if cache_depth is not None and depth <= cache_depth:
+            cache_depth = None
+        if "InMemoryRelation" in line and cache_depth is None:
+            cache_depth = depth
+        elif "EvalPython" in line or "InPandas" in line:
+            out.append("live" if cache_depth is None else "cached")
+    return out
 
 
 def stable_plan_text(plan: str, work_dir: str) -> str:

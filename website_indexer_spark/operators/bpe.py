@@ -34,6 +34,7 @@ plain-Python reference implementation in pytest.
 
 from __future__ import annotations
 
+import re
 from typing import Iterator, List, Tuple
 
 import pandas as pd
@@ -41,6 +42,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 EOW = "</w>"
+
+
+# The word separator of every path: Java's ``\s`` (what the native
+# round-1 split runs), i.e. ASCII whitespace only. Python's
+# ``str.split()`` also splits on Unicode separators such as U+00A0, so
+# the re-segmenting rounds and the encoder use this pattern instead.
+_WS = re.compile(r"\s+", re.ASCII)
+
+
+def _words(text: str) -> List[str]:
+    """Whitespace words of ``text`` under the shared separator rule."""
+    return [w for w in _WS.split(text) if w]
 
 
 def _symbolize(word: str) -> List[str]:
@@ -83,7 +96,7 @@ def pair_counts(
     character symbols). The gateable first round is merges=();
     later rounds re-segment inside an Arrow-batched UDF."""
     toks = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
+        F.split(F.trim(F.col(text_col)), _WS.pattern), lambda t: t != ""
     )
     if not merges:
         # native path: word -> char symbols with EOW on the last char,
@@ -117,7 +130,7 @@ def pair_counts(
                 lefts: List[str] = []
                 rights: List[str] = []
                 for t in texts.fillna(""):
-                    for w in t.split():
+                    for w in _words(t):
                         s = _apply_merges(_symbolize(w), ranks)
                         lefts.extend(s[:-1])
                         rights.extend(s[1:])
@@ -175,7 +188,7 @@ def encode_with_merges(
             toks = []
             for t in pdf[text_col].fillna(""):
                 syms: List[str] = []
-                for w in t.split():
+                for w in _words(t):
                     syms.extend(_apply_merges(_symbolize(w), ranks))
                 toks.append(syms)
             yield pd.DataFrame(

@@ -8,9 +8,11 @@ One superstep = one DataFrame job wave:
                off the lookup scan, wave-broadcast left-outer; shuffle
                fallback over BROADCAST_FETCH_THRESHOLD)--> fetched
              --route+extract in ONE CASE projection (pandas UDF runs
-               once per row)--> routed (page|error|redirect)
-             --page links ∪ redirect locations --> one canonicalize +
-               policy pipeline--> accepted
+               once per row and also resolves the row's out-links: the
+               superstep's only Python pass, cached)--> routed
+               (page|error|redirect)
+             --page links ∪ redirect locations, already canonical -->
+               one JVM-only policy pipeline--> accepted
              --dedup (delta window, deferred, seen anti-join that
                never shuffles the seen side, w/ persistent striped
                Bloom prefilter: auto-sized, incrementally updated,
@@ -64,8 +66,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from website_indexer_spark.functions.udfs import (
-    canonicalize_links_udf,
-    extract_udf,
+    crawl_extract_udf,
     with_url_parts,
 )
 from website_indexer_spark.functions.urltools import (
@@ -316,12 +317,16 @@ def with_effective_status(fetched: DataFrame) -> DataFrame:
 
 def route_and_extract(fetched: DataFrame, start_host: str) -> DataFrame:
     """A14 + A16 in ONE projection: the response router is a CASE over
-    eff_status (not three branch DataFrames) and the extract UDF runs
+    eff_status (not three branch DataFrames) and the crawl UDF runs
     exactly once per row — html is nulled out for non-page rows first,
-    so the kernel short-circuits on errors/redirects/externals. Rows
-    with NULL record_type vanish entirely: external 200s, non-HTML
-    content types, and no-title pages (plugin.py:274-281;
-    models.py:125-126). Caller persists (it feeds two sinks)."""
+    so the kernel short-circuits on errors/redirects/externals, and
+    the Location is nulled out for non-redirect rows, so ``ex.out_links``
+    holds a page's resolved links or a redirect's resolved target and
+    is NULL otherwise. Rows with NULL record_type vanish entirely:
+    external 200s, non-HTML content types, and no-title pages
+    (plugin.py:274-281; models.py:125-126). Caller persists (it feeds
+    the routed write, the harvest and the dims MERGE), so every
+    consumer of the superstep reads one Python pass from the cache."""
     is_on_host_html = (
         (F.col("eff_status") >= 200)
         & (F.col("eff_status") < 300)
@@ -329,11 +334,15 @@ def route_and_extract(fetched: DataFrame, start_host: str) -> DataFrame:
         & F.col("content_type").startswith("text/html")
         & F.col("html").isNotNull()
     )
+    is_redirect = (F.col("eff_status") >= 300) & (F.col("eff_status") < 400)
     return (
         fetched.withColumn(
             "ex",
-            extract_udf(
-                F.when(is_on_host_html, F.col("html")), F.lit(start_host)
+            crawl_extract_udf(
+                F.when(is_on_host_html, F.col("html")),
+                F.col("url"),
+                F.when(is_redirect, F.col("location")),
+                F.lit(start_host),
             ),
         )
         .withColumn(
@@ -342,10 +351,7 @@ def route_and_extract(fetched: DataFrame, start_host: str) -> DataFrame:
                 (F.col("eff_status") == 0) | (F.col("eff_status") >= 400),
                 F.lit("error"),
             )
-            .when(
-                (F.col("eff_status") >= 300) & (F.col("eff_status") < 400),
-                F.lit("redirect"),
-            )
+            .when(is_redirect, F.lit("redirect"))
             .when(
                 is_on_host_html & F.col("ex.title").isNotNull(), F.lit("page")
             ),
@@ -389,8 +395,9 @@ def harvest_candidates(
     robots: Optional[DataFrame],
     depth_cap: int,
 ) -> DataFrame:
-    """New frontier candidates: page links and redirect Locations
-    share one canonicalize → url-parts → policy pipeline; redirect
+    """New frontier candidates: page links and redirect Locations,
+    already resolved by the extraction pass (``ex.out_links``), share
+    one url-parts → policy pipeline with no Python in it; redirect
     follows keep the redirecting row's depth and additionally require
     the canonical host to BE the start host ("don't follow redirects
     that don't point to the start domain", plugin.py:236-245) —
@@ -398,40 +405,27 @@ def harvest_candidates(
     Returns accepted candidates, deduped to the first (depth,
     parent_seq, parent_url) observer per url."""
     is_page = F.col("record_type") == "page"
-    raw_candidates = extracted.filter(is_page).select(
+    is_redirect = F.col("record_type") == "redirect"
+    parents = extracted.filter(is_page | is_redirect).select(
         F.col("url").alias("parent_url"),
         F.col("host").alias("parent_host"),
-        (F.col("depth") + 1).alias("depth"),
+        F.when(is_page, F.col("depth") + 1)
+        .otherwise(F.col("depth"))
+        .alias("depth"),
         F.col("discovery_seq").alias("parent_seq"),
-        F.col("ex.links").alias("raws"),
-        F.lit(False).alias("from_redirect"),
-    ).unionByName(
-        extracted.filter(
-            (F.col("record_type") == "redirect")
-            & F.col("location").isNotNull()
-        ).select(
-            F.col("url").alias("parent_url"),
-            F.col("host").alias("parent_host"),
-            F.col("depth").alias("depth"),
-            F.col("discovery_seq").alias("parent_seq"),
-            F.array(F.col("location")).alias("raws"),
-            F.lit(True).alias("from_redirect"),
-        )
+        is_redirect.alias("from_redirect"),
+        F.col("ex.out_links").alias("out_links"),
     )
     if depth_cap:
-        raw_candidates = raw_candidates.filter(F.col("depth") <= depth_cap)
+        parents = parents.filter(F.col("depth") <= depth_cap)
 
-    candidates = raw_candidates.select(
+    candidates = parents.select(
         "parent_url",
         "parent_host",
         "depth",
         "parent_seq",
         "from_redirect",
-        F.explode(
-            canonicalize_links_udf(
-                F.col("parent_url"), F.col("raws"), F.lit(start_host)
-            )
-        ).alias("url"),
+        F.explode("out_links").alias("url"),
     )
     candidates = with_url_parts(candidates)
     candidates = candidates.filter(
@@ -678,11 +672,16 @@ def run_crawl(
                     deferred = selection_cache.filter(
                         ~F.col("_selected")
                     ).drop("_selected")
-                else:
+                elif host_budget is not None or host_budgets is not None:
                     selected, deferred = politeness_select(
                         frontier, host_budget, salt_buckets,
                         budgets=host_budgets,
                     )
+                else:
+                    # page budget only: nothing is deferred — rows past
+                    # the cutoff below are never requested, because the
+                    # crawl stops once it reaches max_pages
+                    selected, deferred = frontier, None
                 # --- max_pages ordered cutoff (A10): reference counts
                 # every requested URL in visit order; the cutoff keeps the
                 # first `remaining` rows in (depth, discovery_seq) order.
@@ -729,8 +728,12 @@ def run_crawl(
             fetched = with_effective_status(fetched)
 
             # --- route + extract (A14 + A16), shared plan builders ------
-            # persisted: one cached plan feeds the routed write AND the
-            # frontier harvest
+            # persisted: one cached plan feeds the routed write, the
+            # frontier harvest and the dims MERGE. It holds the
+            # superstep's only Python pass (extraction + out-link
+            # resolution), so the harvest chain below is JVM-only and
+            # the frontier write's several references to it re-read
+            # the cache instead of re-running Python.
             extracted = route_and_extract(fetched, start_host).persist()
             is_page = F.col("record_type") == "page"
             routed_delta = routed_projection(extracted, crawl_id)
@@ -828,7 +831,7 @@ def run_crawl(
                 # persist the accepted chain BEFORE the range exchange:
                 # repartitionByRange's boundary-sampling job scans its
                 # whole (uncached) upstream, so without this the
-                # harvest → canonicalize → policy → seen-probe chain
+                # harvest → policy → seen-probe chain
                 # runs twice per fat superstep — the sampling pass now
                 # populates the cache the real pass reads
                 accepted = accepted.persist()
