@@ -109,6 +109,17 @@ def test_overrides_only_no_global_budget(spark):
     assert deferred.count() == 5
 
 
+def test_no_budget_selects_whole_frontier_defers_none(spark):
+    # a page-budget-only crawl selects through this path: nothing is
+    # deferred, so the crawl adds no empty deferred side
+    fr = _frontier(spark, {"a.test": 3, "b.test": 2})
+    selected, deferred = politeness_select(fr, host_budget=None)
+    assert deferred is None
+    assert sorted(map(tuple, selected.collect())) == sorted(
+        map(tuple, fr.collect())
+    )
+
+
 def test_budget_join_is_broadcast(spark):
     fr = _frontier(spark, {"a.test": 4})
     budgets = spark.createDataFrame([("a.test", 2)], ["host", "budget"])

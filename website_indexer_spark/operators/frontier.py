@@ -490,12 +490,16 @@ def politeness_select(
     host_budget: Optional[int],
     salt_buckets: int = 1,
     budgets: Optional[DataFrame] = None,
-) -> "tuple[DataFrame, DataFrame]":
+) -> "tuple[DataFrame, Optional[DataFrame]]":
     """Select up to ``host_budget`` URLs per host for this superstep in
     BFS order (depth, discovery_seq); the remainder stays queued.
 
-    Returns (selected, deferred). With salt_buckets > 1, a mega-host's
-    rows are pre-limited per salt bucket (budget/S each) before the
+    Returns (selected, deferred). With neither ``host_budget`` nor
+    ``budgets`` nothing is deferred: selected is the whole frontier and
+    deferred is None, so callers add no empty deferred side.
+
+    With salt_buckets > 1, a mega-host's rows are pre-limited per salt
+    bucket (budget/S each) before the
     exact per-host window, so no single task sorts a whole mega-host.
     Salting is deterministic (hash of url), preserving reproducibility.
 
@@ -511,7 +515,7 @@ def politeness_select(
     every candidate).
     """
     if host_budget is None and budgets is None:
-        return frontier, frontier.limit(0)
+        return frontier, None
 
     from pyspark.sql.functions import broadcast
 

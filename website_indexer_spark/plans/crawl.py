@@ -672,16 +672,14 @@ def run_crawl(
                     deferred = selection_cache.filter(
                         ~F.col("_selected")
                     ).drop("_selected")
-                elif host_budget is not None or host_budgets is not None:
+                else:
+                    # with a page budget only, deferred is None: rows past
+                    # the cutoff below are never requested, because the
+                    # crawl stops once it reaches max_pages
                     selected, deferred = politeness_select(
                         frontier, host_budget, salt_buckets,
                         budgets=host_budgets,
                     )
-                else:
-                    # page budget only: nothing is deferred — rows past
-                    # the cutoff below are never requested, because the
-                    # crawl stops once it reaches max_pages
-                    selected, deferred = frontier, None
                 # --- max_pages ordered cutoff (A10): reference counts
                 # every requested URL in visit order; the cutoff keeps the
                 # first `remaining` rows in (depth, discovery_seq) order.
