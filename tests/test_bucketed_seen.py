@@ -14,7 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import web_dict_to_df
-from tests.oracle_crawler import crawl as oracle_crawl, fixture_site
+from tests.oracle_crawler import crawl as oracle_crawl
+from tests.test_crawl import _rich_site
 from website_indexer_spark.operators import frontier as FR
 from website_indexer_spark.plans import crawl as C
 from website_indexer_spark.sources.tables import (
@@ -140,10 +141,12 @@ def test_bucketed_anti_join_plan_has_no_seen_side_exchange(spark, tmp_path):
 def test_forced_bucketed_path_crawl_matches_oracle(spark, tmp_path, monkeypatch):
     """Force every wave down the storage-partitioned path (threshold
     -1 also forces the plain fetch join and the shuffled extra-delta
-    exclusion): final pages + seen set must still equal the oracle
-    crawler's."""
+    exclusion; the history threshold -1 keeps the small seen history
+    off its broadcast form): final pages + seen set must still equal
+    the oracle crawler's."""
     monkeypatch.setattr(C, "BROADCAST_FETCH_THRESHOLD", -1)
-    web, seed = fixture_site()
+    monkeypatch.setattr(C, "HISTORY_BROADCAST_THRESHOLD", -1)
+    web, seed = _rich_site()
     oracle = oracle_crawl(web, seed)
     result = C.run_crawl(
         spark, web_dict_to_df(spark, web), seed, str(tmp_path / "c")
@@ -275,11 +278,11 @@ def test_dim_upsert_bucketed_plan_single_exchange(spark, tmp_path):
 def test_forced_bucketed_dims_crawl_matches_default(spark, tmp_path, monkeypatch):
     """Force the dims MERGE down the storage-partitioned path for a
     whole crawl: the final dims table must equal the default crawl's."""
-    web, seed = fixture_site()
+    web, seed = _rich_site()
     base = C.run_crawl(
         spark, web_dict_to_df(spark, web), seed, str(tmp_path / "a")
     )
-    monkeypatch.setattr(C, "DIM_BROADCAST_THRESHOLD", -1)
+    monkeypatch.setattr(C, "HISTORY_BROADCAST_THRESHOLD", -1)
     monkeypatch.setattr(C, "BROADCAST_FETCH_THRESHOLD", -1)
     forced = C.run_crawl(
         spark, web_dict_to_df(spark, web), seed, str(tmp_path / "b")

@@ -7,7 +7,12 @@ the reference's committed fixture (crawler/fixtures/sample.json).
 import pytest
 
 from tests.conftest import web_dict_to_df
-from tests.oracle_crawler import WebResponse, crawl as oracle_crawl, fixture_site
+from tests.oracle_crawler import (
+    WebResponse,
+    crawl as oracle_crawl,
+    fan_site,
+    fixture_site,
+)
 from website_indexer_spark.plans.crawl import run_crawl
 
 
@@ -255,7 +260,7 @@ def test_spark_crawl_dimension_tables(spark, tmp_path):
     tables must equal the distinct key sets derivable from the pages
     table, and per-superstep deltas must be append-new-keys-only
     (disjoint across supersteps — the MERGE contract)."""
-    web, seed = fixture_site()
+    web, seed = fan_site()
     result = _spark_crawl(spark, tmp_path, web, seed)
     store = result.store
 
@@ -416,3 +421,71 @@ def test_crawl_stderr_has_no_metadata_probe_warning(tmp_path):
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "supersteps 3" in proc.stdout, proc.stdout
     assert "Assume no metadata directory" not in proc.stderr
+
+
+def test_build_spark_turns_dataframe_origin_capture_off(spark):
+    """Sessions from build_spark skip PySpark's per-call DataFrame
+    origin capture (a stack walk and JVM round trips on every
+    F.*/DataFrame call)."""
+    assert (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled")
+        == "false"
+    )
+
+
+def test_small_wave_frontier_plan_has_one_exchange(spark, tmp_path):
+    """A small wave's frontier delta, composed as run_crawl composes it
+    below both thresholds: the harvest's url exchange goes straight to
+    one partition, the seen history (committed rows plus the wave's
+    keys) is broadcast into one LeftAnti, and the within-delta dedup
+    and the numbering window need no further exchange."""
+    import io
+    from contextlib import redirect_stdout
+
+    from pyspark.sql import functions as F
+
+    from website_indexer_spark.operators.frontier import anti_join_seen
+    from website_indexer_spark.operators.policy import CrawlPolicy
+    from website_indexer_spark.plans import crawl as C
+    from website_indexer_spark.sources.tables import FRONTIER_SCHEMA
+
+    web, seed = _rich_site()
+    fetched = web_dict_to_df(spark, web).select(
+        "url", "warc_ts", "html", "status_code", "location", "content_type",
+        F.lit("site.test").alias("host"), F.lit(0).alias("depth"),
+        F.lit(0).cast("long").alias("discovery_seq"),
+        F.lit(None).cast("string").alias("parent_url"),
+    ).filter(F.col("url") == seed)
+    extracted = C.route_and_extract(
+        C.with_effective_status(fetched), "site.test"
+    ).persist()
+    try:
+        spark.range(100).select(
+            F.xxhash64(F.col("id").cast("string")).alias("url_hash")
+        ).write.parquet(str(tmp_path / "seen"))
+        history = spark.read.parquet(str(tmp_path / "seen")).unionByName(
+            fetched.select(F.xxhash64("url").alias("url_hash"))
+        )
+        accepted = C.harvest_candidates(
+            extracted, "site.test", CrawlPolicy(start_url=seed), None, 0,
+            partitions=1,
+        )
+        accepted = anti_join_seen(accepted, history, None, small_seen=True)
+        frontier = C.number_in_one_task(
+            accepted.select(
+                "url", "host", "depth", "parent_url", "parent_host",
+                "fetch_method", "parent_seq",
+            ),
+            1,
+        ).select(*FRONTIER_SCHEMA.fieldNames())
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            frontier.explain()
+        plan = buf.getvalue()
+        assert plan.count("- Exchange ") == 1, plan
+        assert "LeftAnti, BuildRight" in plan and "BroadcastExchange" in plan
+        assert "LeftSemi" not in plan, plan
+        urls = [r["url"] for r in frontier.orderBy("discovery_seq").collect()]
+        assert len(urls) == len(set(urls)) > 0
+    finally:
+        extracted.unpersist()

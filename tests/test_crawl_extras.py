@@ -7,7 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import web_dict_to_df
-from tests.oracle_crawler import WebResponse, crawl as oracle_crawl, fixture_site
+from tests.oracle_crawler import (
+    WebResponse,
+    crawl as oracle_crawl,
+    fan_site,
+    fixture_site,
+)
 from website_indexer_spark.plans import queries as Q
 from website_indexer_spark.plans.crawl import run_crawl
 
@@ -59,7 +64,7 @@ def test_robots_default_off_matches_reference(spark, tmp_path):
 def test_salting_preserves_final_state(spark, tmp_path):
     """Deterministic mega-host salting must not change the crawl's
     final state — only how the politeness window's work is spread."""
-    web, seed = fixture_site()
+    web, seed = fan_site()
     oracle = oracle_crawl(web, seed)
     result = run_crawl(
         spark,
@@ -156,14 +161,17 @@ def test_all_scale_features_combined(spark, tmp_path):
 @pytest.mark.slow
 def test_large_scale_paths_forced(spark, tmp_path, monkeypatch):
     """Force the >threshold code paths (distributed discovery_seq
-    enumeration + shuffle fetch join) that normally engage only on
-    huge frontiers; final state must equal the small-path crawl."""
+    enumeration + shuffle fetch join + bucketed seen anti-join) that
+    normally engage only on huge frontiers and seen histories; final
+    state must equal the small-path crawl."""
+    from tests.test_crawl import _rich_site
     from website_indexer_spark.plans import crawl as C
 
-    web, seed = fixture_site()
+    web, seed = _rich_site()
     oracle = oracle_crawl(web, seed)
     monkeypatch.setattr(C, "DISTRIBUTED_SEQ_THRESHOLD", 0)
     monkeypatch.setattr(C, "BROADCAST_FETCH_THRESHOLD", 0)
+    monkeypatch.setattr(C, "HISTORY_BROADCAST_THRESHOLD", -1)
     result = C.run_crawl(
         spark, web_dict_to_df(spark, web), seed, str(tmp_path / "c")
     )

@@ -12,7 +12,7 @@ import time
 import pytest
 
 from tests.conftest import web_dict_to_df
-from tests.oracle_crawler import fixture_site
+from tests.test_crawl import _rich_site
 from website_indexer_spark.functions.urltools import hostname_with_port
 from website_indexer_spark.plans import crawl as C
 from website_indexer_spark.sources.tables import (
@@ -50,7 +50,7 @@ def _replay_frontier_files(spark, batch_store, seed_df, supersteps, dest, scratc
 
 @pytest.mark.slow
 def test_stream_crawl_matches_batch(spark, tmp_path):
-    web, seed = fixture_site()
+    web, seed = _rich_site()
     web_df = web_dict_to_df(spark, web)
     batch = C.run_crawl(spark, web_df, seed, str(tmp_path / "batch"))
 
@@ -118,7 +118,7 @@ def test_stream_forced_bucketed_seen_path_matches_batch(
     carries the same 10^10-scale story as the batch driver."""
     from website_indexer_spark.streaming import crawl_stream as CS
 
-    web, seed = fixture_site()
+    web, seed = _rich_site()
     web_df = web_dict_to_df(spark, web)
     batch = C.run_crawl(spark, web_df, seed, str(tmp_path / "batch"))
 

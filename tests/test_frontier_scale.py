@@ -19,7 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import web_dict_to_df
-from tests.oracle_crawler import WebResponse, crawl as oracle_crawl, fixture_site
+from tests.oracle_crawler import WebResponse, crawl as oracle_crawl, fan_site
 from website_indexer_spark.operators import frontier as FR
 from website_indexer_spark.plans import crawl as C
 from website_indexer_spark.plans import manage
@@ -197,7 +197,7 @@ def test_crawl_failure_lifecycle_and_resume(spark, tmp_path, monkeypatch):
     """Mid-crawl crash: crawl.json gets status=Failed + the traceback
     (reference fail() parity), manage clean buckets it under Failed,
     and --resume completes the run from the last committed superstep."""
-    web, seed = fixture_site()
+    web, seed = fan_site()
     oracle = oracle_crawl(web, seed)
     crawls_root = tmp_path / "crawls"
     crawls_root.mkdir()
@@ -268,9 +268,9 @@ def test_dims_huge_wave_and_big_history_paths(spark, tmp_path, monkeypatch):
     got_shuffled = dims_of(tmp_path / "shuffled")
     monkeypatch.undo()
 
-    # big-history: dims_total > 0-threshold => streams-map-side from
-    # the second superstep on
-    monkeypatch.setattr(C, "DIM_BROADCAST_THRESHOLD", 0)
+    # big history: dims and seen history above a 0-row threshold =>
+    # both stream map-side (exclude_keys) from the second superstep on
+    monkeypatch.setattr(C, "HISTORY_BROADCAST_THRESHOLD", 0)
     got_streamed = dims_of(tmp_path / "streamed")
 
     assert got_shuffled == want

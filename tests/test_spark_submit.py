@@ -27,7 +27,7 @@ import zipfile
 import pytest
 
 from tests.conftest import web_dict_to_df
-from tests.oracle_crawler import crawl as oracle_crawl, fixture_site
+from tests.oracle_crawler import crawl as oracle_crawl, fan_site
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -51,7 +51,7 @@ def _build_zip(dest: str) -> str:
 
 @pytest.mark.slow
 def test_spark_submit_py_files_crawl(spark, tmp_path):
-    web, seed = fixture_site()
+    web, seed = fan_site()
     oracle = oracle_crawl(web, seed)
     web_path = str(tmp_path / "web_pages")
     web_dict_to_df(spark, web).write.parquet(web_path)

@@ -51,7 +51,7 @@ def test_nondefault_bucket_count_crawl_resume_compact(spark, tmp_path, monkeypat
     root = str(tmp_path / "c")
     CrawlStore(spark, root, seen_buckets=5, dims_buckets=3)  # create meta
     monkeypatch.setattr(C, "BROADCAST_FETCH_THRESHOLD", -1)  # force bucketed
-    monkeypatch.setattr(C, "DIM_BROADCAST_THRESHOLD", -1)
+    monkeypatch.setattr(C, "HISTORY_BROADCAST_THRESHOLD", -1)
     web, seed = fan_site()
     oracle = oracle_crawl(web, seed)
     result = C.run_crawl(spark, web_dict_to_df(spark, web), seed, root)
@@ -179,7 +179,7 @@ def test_flat_legacy_crawl_resume_falls_back_scanned(spark, tmp_path, monkeypatc
     # phase 2: resume with the bucketed path forced on by wave size —
     # the layout check must reroute to the scanned anti-join
     monkeypatch.setattr(C, "BROADCAST_FETCH_THRESHOLD", -1)
-    monkeypatch.setattr(C, "DIM_BROADCAST_THRESHOLD", -1)
+    monkeypatch.setattr(C, "HISTORY_BROADCAST_THRESHOLD", -1)
     result = C.run_crawl(
         spark, web_dict_to_df(spark, web), seed, root, resume=True
     )

@@ -1090,9 +1090,11 @@ def crawl_operator_plans(spark, work_dir: str):
     from website_indexer_spark.operators.policy import CrawlPolicy
     from website_indexer_spark.plans.crawl import (
         harvest_candidates,
+        number_in_one_task,
         route_and_extract,
         with_effective_status,
     )
+    from website_indexer_spark.streaming.ingest import extract_stream
 
     fetched = spark.createDataFrame(
         [
@@ -1115,6 +1117,29 @@ def crawl_operator_plans(spark, work_dir: str):
             CrawlPolicy(start_url="https://h.test/"), None, 0,
         )
     )
+    # a small wave's frontier write as run_crawl composes it below both
+    # thresholds: harvest deduped in one partition, the seen history
+    # (committed rows plus the wave's keys) broadcast whole, one window
+    frontier_plan = formatted_plan(
+        number_in_one_task(
+            anti_join_seen(
+                harvest_candidates(
+                    extracted, "h.test",
+                    CrawlPolicy(start_url="https://h.test/"), None, 0,
+                    partitions=1,
+                ),
+                seen.select("url_hash").unionByName(
+                    fetched.select(F.xxhash64("url").alias("url_hash"))
+                ),
+                None,
+                small_seen=True,
+            ).select(
+                "url", "host", "depth", "parent_url", "parent_host",
+                "fetch_method", "parent_seq",
+            ),
+            1,
+        ).select(*FRONTIER_SCHEMA.fieldNames())
+    )
     extracted.unpersist()
     plans["crawl_harvest_jvm_only"] = (
         harvest_plan,
@@ -1125,7 +1150,45 @@ def crawl_operator_plans(spark, work_dir: str):
              lambda p: python_nodes(p) == ["cached"]),
         ],
     )
+    plans["crawl_frontier_one_exchange"] = (
+        frontier_plan,
+        [
+            ("ONE shuffle exchange: the harvest's url exchange to a "
+             "single partition; the within-delta dedup and the "
+             "numbering window need no second one",
+             lambda p: len(re.findall(
+                 r"(?<!Broadcast)Exchange \(", tree_of(p))) == 1),
+            ("the seen exclusion is one LeftAnti whose build side is "
+             "the broadcast seen history; no LeftSemi through the "
+             "seen ∪ wave-keys union",
+             lambda p: "LeftAnti BuildRight" in p
+             and "BroadcastExchange" in p and "LeftSemi" not in p),
+        ],
+    )
+    # the streaming ingest routes with the batch superstep's plan
+    # builders, so its pushed-down record_type filter reads the one
+    # (nondeterministic) extraction instead of a copy of the UDF
+    plans["extract_stream"] = (
+        extract_stream(
+            fetched.select(
+                "url", "html", "status_code", "location", "content_type",
+                F.lit(None).cast("timestamp").alias("warc_ts"),
+            ),
+            "h.test",
+        ),
+        [
+            ("exactly one Arrow-batched Python evaluator: every page "
+             "is parsed once",
+             lambda p: tree_of(p).count("ArrowEvalPython") == 1
+             and "BatchEvalPython" not in p),
+        ],
+    )
     return plans
+
+
+def tree_of(plan: str) -> str:
+    """The operator tree of a formatted plan (its first block)."""
+    return plan.split("\n\n", 1)[0]
 
 
 def formatted_plan(df) -> str:

@@ -27,6 +27,8 @@ from typing import List, Union
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from website_indexer_spark.operators.frontier import exclude_keys
+
 
 def dim_upsert_delta(
     existing: DataFrame,
@@ -61,13 +63,9 @@ def dim_upsert_delta(
     if isinstance(key_cols, str):
         key_cols = [key_cols]
     inc = incoming.select(*key_cols).na.drop(subset=key_cols).distinct()
-    ex = existing.select(*key_cols)
-    if small_existing:
-        return inc.join(F.broadcast(ex), key_cols, "left_anti")
-    if broadcast_incoming:
-        hits = ex.join(F.broadcast(inc), key_cols, "left_semi")
-        return inc.join(F.broadcast(hits), key_cols, "left_anti")
-    return inc.join(ex, key_cols, "left_anti")
+    return exclude_keys(
+        inc, existing, key_cols, broadcast_incoming, small_existing
+    )
 
 
 def dim_upsert_delta_bucketed(

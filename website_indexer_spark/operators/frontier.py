@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterator, List, Optional
+from typing import Iterator, List, Optional, Union
 
 import numpy as np
 import pandas as pd
@@ -55,10 +55,19 @@ URL_HASH = lambda col: F.xxhash64(col)  # noqa: E731 — canonical url hash
 def exclude_keys(
     df: DataFrame,
     exclude: DataFrame,
-    key: str,
+    key: Union[str, List[str]],
     broadcast_df: bool = True,
+    small_exclude: bool = False,
 ) -> DataFrame:
-    """Rows of ``df`` whose ``key`` does not appear in ``exclude``.
+    """Rows of ``df`` whose ``key`` (a column name, or a list of them)
+    does not appear in ``exclude``. The seen exclusion and the dims
+    MERGE (``dims.dim_upsert_delta``) both pick their strategy here.
+
+    small_exclude=True: the whole exclude side broadcasts into ONE
+    LeftAnti(BuildRight) that streams ``df``. ``df`` appears once in
+    the plan and keeps its partitioning, and the broadcast does not
+    depend on ``df``, so it runs beside whatever computes ``df``. Right
+    while the history fits a broadcast.
 
     broadcast_df=True (the wave-sized default): the huge exclude side
     is NEVER shuffled — ``df``'s keys broadcast into a LeftSemi that
@@ -74,6 +83,8 @@ def exclude_keys(
     key-bucketed seen layout instead; this fallback remains for
     callers without a bucketed table (dims MERGE's huge-wave path).
     """
+    if small_exclude:
+        return df.join(F.broadcast(exclude.select(key)), key, "left_anti")
     if broadcast_df:
         hits = exclude.select(key).join(
             F.broadcast(df.select(key)), key, "left_semi"
@@ -223,21 +234,24 @@ def anti_join_seen(
     seen: DataFrame,
     bloom: Optional["StripedBloom"] = None,
     broadcast_frontier: bool = True,
+    small_seen: bool = False,
 ) -> DataFrame:
     """A3 request-once dedup: frontier rows not in the seen set.
 
     With a StripedBloom prefilter only maybe-seen rows pay the exact
     check; definitely-unseen rows bypass it (no false negatives for
     committed keys, so the final seen set stays EXACT). The exact
-    check uses ``exclude_keys``: the seen side streams map-side
-    unshuffled whenever the candidate delta is broadcastable.
+    check uses ``exclude_keys``: with ``small_seen`` the whole seen
+    history broadcasts into one LeftAnti; otherwise the seen side
+    streams map-side unshuffled whenever the candidate delta is
+    broadcastable.
     """
     f = frontier.withColumn("url_hash", URL_HASH(F.col("url")))
     seen_keys = seen.select("url_hash")
     if bloom is None:
-        return exclude_keys(f, seen_keys, "url_hash", broadcast_frontier).drop(
-            "url_hash"
-        )
+        return exclude_keys(
+            f, seen_keys, "url_hash", broadcast_frontier, small_seen
+        ).drop("url_hash")
     maybe = bloom.probe_udf()
     fast_path = f.filter(~maybe(F.col("url_hash")))
     slow_path = exclude_keys(
@@ -245,6 +259,7 @@ def anti_join_seen(
         seen_keys,
         "url_hash",
         broadcast_frontier,
+        small_seen,
     )
     return fast_path.unionByName(slow_path).drop("url_hash")
 

@@ -14,11 +14,13 @@ One superstep = one DataFrame job wave:
              --page links ∪ redirect locations, already canonical -->
                one JVM-only policy pipeline--> accepted
              --dedup (delta window, deferred, seen anti-join that
-               never shuffles the seen side, w/ persistent striped
-               Bloom prefilter: auto-sized, incrementally updated,
-               auto-on above BLOOM_AUTO_SEEN_THRESHOLD)--> enqueued
-             --discovery_seq (fused window, or distributed
-               enumeration when wave×fan-out estimate exceeds
+               never shuffles the seen side — a small history is
+               broadcast whole — w/ persistent striped Bloom
+               prefilter: auto-sized, incrementally updated, auto-on
+               above BLOOM_AUTO_SEEN_THRESHOLD)--> enqueued
+             --discovery_seq (one-partition window sharing the dedup's
+               one exchange, or distributed enumeration when
+               wave×fan-out estimate exceeds
                DISTRIBUTED_SEQ_THRESHOLD)-->
                frontier_{k+1} (+ deferred)
              --checkpoint: ONE record_type-partitioned routed write +
@@ -137,11 +139,13 @@ BROADCAST_FETCH_THRESHOLD = 2_000_000
 # megarow IN list.
 POINT_LOOKUP_THRESHOLD = 4096
 
-# Below this many cumulative dimension keys (known free from the
-# manifest counters) the dims MERGE broadcasts the whole dimension
-# history into one LeftAnti; above it, the history streams map-side
-# against the broadcast wave keys (operators/dims.py strategies).
-DIM_BROADCAST_THRESHOLD = 500_000
+# Below this many rows of history, known free from the manifest
+# counters, a history table broadcasts whole into one LeftAnti: the
+# seen set (requested_total rows, the wave's keys included) in the
+# seen exclusion, the dimension keys in the dims MERGE. Above it the
+# history streams map-side against the broadcast wave keys, or takes
+# the storage-partitioned probe (operators/frontier.py, dims.py).
+HISTORY_BROADCAST_THRESHOLD = 500_000
 
 # With use_bloom=None (auto), the persistent striped Bloom prefilter
 # turns on once the cumulative seen set crosses this row count —
@@ -394,6 +398,7 @@ def harvest_candidates(
     policy: CrawlPolicy,
     robots: Optional[DataFrame],
     depth_cap: int,
+    partitions: Optional[int] = None,
 ) -> DataFrame:
     """New frontier candidates: page links and redirect Locations,
     already resolved by the extraction pass (``ex.out_links``), share
@@ -403,7 +408,10 @@ def harvest_candidates(
     that don't point to the start domain", plugin.py:236-245) —
     unlike links, off-host locations are never one-hop probed.
     Returns accepted candidates, deduped to the first (depth,
-    parent_seq, parent_url) observer per url."""
+    parent_seq, parent_url) observer per url. ``partitions`` pins the
+    dedup's url exchange to that many partitions (default: the
+    session's shuffle partitions); the crawl's single-task numbering
+    passes 1, so the numbering window needs no second exchange."""
     is_page = F.col("record_type") == "page"
     is_redirect = F.col("record_type") == "redirect"
     parents = extracted.filter(is_page | is_redirect).select(
@@ -433,6 +441,8 @@ def harvest_candidates(
     )
     accepted = accept_url_filter(candidates, start_host, policy)
     accepted = robots_filter(accepted, robots)
+    if partitions:
+        accepted = accepted.repartition(partitions, "url")
     # within-delta dedup: first observer wins, deterministically
     w_url = Window.partitionBy("url").orderBy("depth", "parent_seq", "parent_url")
     return (
@@ -440,6 +450,20 @@ def harvest_candidates(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
+
+
+def number_in_one_task(accepted: DataFrame, seq_base: int) -> DataFrame:
+    """Dense ``discovery_seq`` from ``seq_base`` in (depth, parent_seq,
+    url) order, by one window over a single partition: the numbering of
+    deltas below DISTRIBUTED_SEQ_THRESHOLD. Fed by
+    ``harvest_candidates(partitions=1)`` through broadcast-only joins,
+    its input already sits in that partition and the window adds no
+    exchange."""
+    w_seq = Window.orderBy("depth", "parent_seq", "url")
+    return accepted.withColumn(
+        "discovery_seq",
+        F.row_number().over(w_seq).cast("long") + F.lit(seq_base - 1),
+    ).drop("parent_seq")
 
 
 @dataclass
@@ -738,8 +762,16 @@ def run_crawl(
 
             t = _mark("route-extract-build", t)
             # --- harvest + policy + within-delta dedup -------------------
+            # the accepted delta's size is unknown until materialized;
+            # estimate it from the wave that generated it (VERDICT r1 #1).
+            # A delta numbered by the single-task window is deduped in
+            # that one partition: the dedup, the seen exclusion and the
+            # numbering then run after the harvest's ONE exchange.
+            est_accepted = n_selected * SEQ_FANOUT_ESTIMATE
+            single_task_seq = est_accepted <= DISTRIBUTED_SEQ_THRESHOLD
             accepted = harvest_candidates(
-                extracted, start_host, policy, robots, depth_cap
+                extracted, start_host, policy, robots, depth_cap,
+                partitions=1 if single_task_seq else None,
             )
             t = _mark("policy-build", t)
 
@@ -748,9 +780,6 @@ def run_crawl(
                 accepted = accepted.join(
                     deferred.select("url"), "url", "left_anti"
                 )
-            # the accepted delta's size is unknown until materialized;
-            # estimate it from the wave that generated it (VERDICT r1 #1)
-            est_accepted = n_selected * SEQ_FANOUT_ESTIMATE
             delta_keys = seen_delta.select("url_hash")
             seen_now = store.read_all("seen").select("url_hash").unionByName(
                 delta_keys
@@ -775,7 +804,15 @@ def run_crawl(
                 use_bloom=use_bloom,
                 bloom_bits=bloom_bits,
             )
-            if est_accepted <= BROADCAST_FETCH_THRESHOLD:
+            if requested_total <= HISTORY_BROADCAST_THRESHOLD:
+                # small history (requested_total IS its row count): the
+                # committed seen rows plus the wave's keys broadcast into
+                # one LeftAnti. The broadcast does not depend on the
+                # harvest, so it runs beside the extraction.
+                accepted = anti_join_seen(
+                    accepted, seen_now, bloom, small_seen=True
+                )
+            elif est_accepted <= BROADCAST_FETCH_THRESHOLD:
                 accepted = anti_join_seen(
                     accepted, seen_now, bloom, broadcast_frontier=True
                 )
@@ -808,7 +845,7 @@ def run_crawl(
 
             # --- deterministic discovery order (§4.2.4) ------------------
             # Small accepted deltas (the common case) take a single-task
-            # window — one job, fused into the frontier write. Huge deltas
+            # window — fused into the frontier write. Huge deltas
             # take the 3-job distributed enumeration. Identical dense
             # numbering either way; the switch keys on the estimated size
             # of the delta being numbered (wave × fan-out bound), not the
@@ -825,7 +862,7 @@ def run_crawl(
                 "parent_seq",
             )
             seq_persists: list = []
-            if est_accepted > DISTRIBUTED_SEQ_THRESHOLD:
+            if not single_task_seq:
                 # persist the accepted chain BEFORE the range exchange:
                 # repartitionByRange's boundary-sampling job scans its
                 # whole (uncached) upstream, so without this the
@@ -841,14 +878,7 @@ def run_crawl(
                     persist_registry=seq_persists,
                 ).drop("parent_seq")
             else:
-                w_seq = Window.orderBy("depth", "parent_seq", "url")
-                enqueued = (
-                    accepted.withColumn(
-                        "discovery_seq",
-                        F.row_number().over(w_seq).cast("long") + F.lit(seq_base - 1),
-                    )
-                    .drop("parent_seq")
-                )
+                enqueued = number_in_one_task(accepted, seq_base)
 
             next_frontier = enqueued.select(*FRONTIER_SCHEMA.fieldNames())
             frontier_pb = None
@@ -914,7 +944,7 @@ def run_crawl(
                 # hash-bucketed dims layout (exact on the key strings;
                 # no dims-side scan or exchange), mirroring the seen
                 # set's bucketed path.
-                if dims_total <= DIM_BROADCAST_THRESHOLD:
+                if dims_total <= HISTORY_BROADCAST_THRESHOLD:
                     dims_delta = dim_upsert_delta(
                         store.read_all("dims"),
                         incoming,

@@ -278,7 +278,14 @@ def build_spark(
 ) -> SparkSession:
     """Session builder with the engine's required configs: AQE (runtime
     coalescing + skew-join splitting), Arrow with bounded batches for
-    multi-MB html blobs."""
+    multi-MB html blobs, and PySpark's DataFrame origin capture off.
+
+    The capture walks the Python stack, reads a conf and sets and
+    clears a JVM thread-local on every ``F.*``/DataFrame call: about
+    half of a crawl's driver-to-JVM commands. With it off, DataFrame
+    error messages no longer name the Python call site; a debugging
+    session turns it back on with ``extra_conf=
+    {"spark.python.sql.dataFrameDebugging.enabled": "true"}``."""
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
@@ -291,6 +298,7 @@ def build_spark(
         "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
         "spark.sql.session.timeZone": "UTC",
         "spark.ui.enabled": "false",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         # v2 commit: tasks move outputs into place at task commit, so
         # job commit is O(1) instead of a serial driver-side rename
         # per file — the crawl writes 4 small deltas per superstep and

@@ -10,10 +10,10 @@ appends to the pages/errors/redirects tables incrementally.
 Operators here:
 * stream_web_pages     — file-source readStream with the input_hint
                          schema (maxFilesPerTrigger bounds batch size)
-* extract_stream       — the same route-in-one-projection plan the
-                         batch superstep uses (plans/crawl.py), so
-                         batch and streaming share one extraction
-                         semantics definition
+* extract_stream       — the batch superstep's route-in-one-projection
+                         plan builders (plans/crawl.py), so batch and
+                         streaming share one extraction semantics
+                         definition and one Python pass per row
 * write_routed_stream  — append-mode parquet sink partitioned by
                          record_type, exactly-once via the streaming
                          checkpoint (the streaming analogue of the
@@ -32,7 +32,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from website_indexer_spark.functions.udfs import extract_udf, with_url_parts
+from website_indexer_spark.functions.udfs import with_url_parts
+from website_indexer_spark.plans.crawl import (
+    route_and_extract,
+    with_effective_status,
+)
 from website_indexer_spark.sources.tables import WEB_PAGES_SCHEMA
 
 
@@ -47,44 +51,13 @@ def stream_web_pages(
 
 
 def extract_stream(pages: DataFrame, start_host: str, crawl_id: int = 1) -> DataFrame:
-    """Route + extract, single projection (mirrors plans/crawl.py's
-    superstep body; streaming sources have no frontier metadata, so
-    depth/discovery_seq/referrer are absent)."""
-    df = with_url_parts(pages)
-    df = df.withColumn(
-        "eff_status",
-        F.when(F.col("status_code").isNull(), F.lit(0))
-        .when(
-            (F.col("status_code") == 200)
-            & F.col("html").isNull()
-            & F.col("location").isNull(),
-            F.lit(0),
-        )
-        .otherwise(F.col("status_code")),
-    )
-    is_on_host_html = (
-        (F.col("eff_status") >= 200)
-        & (F.col("eff_status") < 300)
-        & (F.col("host") == start_host)
-        & F.col("content_type").startswith("text/html")
-        & F.col("html").isNotNull()
-    )
-    df = df.withColumn(
-        "ex",
-        extract_udf(F.when(is_on_host_html, F.col("html")), F.lit(start_host)),
-    ).withColumn(
-        "record_type",
-        F.when(
-            (F.col("eff_status") == 0) | (F.col("eff_status") >= 400), F.lit("error")
-        )
-        .when(
-            (F.col("eff_status") >= 300) & (F.col("eff_status") < 400),
-            F.lit("redirect"),
-        )
-        .when(is_on_host_html & F.col("ex.title").isNotNull(), F.lit("page")),
-    )
+    """Route + extract with the batch superstep's own plan builders
+    (plans/crawl.py ``with_effective_status`` + ``route_and_extract``),
+    so the kernel runs once per row here too; streaming sources have no
+    frontier metadata, so depth/discovery_seq/referrer are absent."""
+    df = route_and_extract(with_effective_status(with_url_parts(pages)), start_host)
     is_page = F.col("record_type") == "page"
-    return df.filter(F.col("record_type").isNotNull()).select(
+    return df.select(
         "record_type",
         F.lit(crawl_id).alias("crawl_id"),
         F.col("warc_ts").alias("timestamp"),
