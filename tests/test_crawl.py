@@ -489,3 +489,48 @@ def test_small_wave_frontier_plan_has_one_exchange(spark, tmp_path):
         assert len(urls) == len(set(urls)) > 0
     finally:
         extracted.unpersist()
+
+
+def _physical_plan(df) -> str:
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+def test_seed_frontier_is_jvm_local(spark):
+    """The seed wave is a LocalTableScan, not a Python RDD (``Scan
+    ExistingRDD``) whose every evaluation runs Python tasks; its one
+    row, column names, types and nullability are the frontier's."""
+    from website_indexer_spark.plans.crawl import _seed_frontier
+    from website_indexer_spark.sources.tables import FRONTIER_SCHEMA
+
+    seed = _seed_frontier(spark, "https://site.test/b/", "site.test")
+    plan = _physical_plan(seed)
+    assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan
+    assert seed.schema == FRONTIER_SCHEMA
+    assert [tuple(r) for r in seed.collect()] == [
+        ("https://site.test/b/", "site.test", 0, 0,
+         "https://site.test/b/", "site.test", "GET")
+    ]
+
+
+@pytest.mark.parametrize("table", ["seen", "dims"])
+def test_empty_store_tables_are_jvm_local(spark, tmp_path, table):
+    """A store with no committed superstep reads its seen and dims
+    tables as empty LocalTableScans with the tables' schemas; superstep
+    0 evaluates both."""
+    from website_indexer_spark.sources.tables import (
+        DIMS_SCHEMA,
+        SEEN_SCHEMA,
+        CrawlStore,
+    )
+
+    df = CrawlStore(spark, str(tmp_path / "s")).read_all(table)
+    plan = _physical_plan(df)
+    assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan
+    assert df.schema == {"seen": SEEN_SCHEMA, "dims": DIMS_SCHEMA}[table]
+    assert df.collect() == []

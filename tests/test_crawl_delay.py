@@ -4,6 +4,8 @@ override path of frontier.politeness_select."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -201,6 +203,52 @@ def test_crawl_budgets_bucketed_path_parity(spark, tmp_path, monkeypatch):
         host_budget=3, host_budgets=budgets, frontier_buckets=4,
     )
     _assert_equivalent(bucketed, bucketed.store, oracle)
+    assert bucketed.supersteps == window.supersteps
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("override", [2, None])
+def test_crawl_overrides_only_bucketed_path_parity(
+    spark, tmp_path, monkeypatch, override
+):
+    """``host_budgets`` without ``host_budget`` arms the bucketed
+    selection and selects what the window path selects, superstep by
+    superstep: with an override on the crawled host (2) and with one
+    only on another host in the same bucket, where the crawled host
+    is unlimited."""
+    from tests.conftest import web_dict_to_df
+    from tests.oracle_crawler import crawl as oracle_crawl
+    from tests.test_crawl import _assert_equivalent, _rich_site
+    from website_indexer_spark.functions.urltools import hostname_with_port
+    from website_indexer_spark.plans import crawl as C
+
+    web, seed = _rich_site()
+    host = hostname_with_port(seed)
+    rows = [("other.test", 1)] + ([(host, override)] if override else [])
+    budgets = spark.createDataFrame(rows, ["host", "budget"])
+    web_df = web_dict_to_df(spark, web)
+
+    def requested(store):
+        seen = spark.read.parquet(os.path.join(store.root, "seen"))
+        return sorted((r["superstep"], r["url"]) for r in seen.collect())
+
+    window = C.run_crawl(
+        spark, web_df, seed, str(tmp_path / "win"), host_budgets=budgets
+    )
+    calls = []
+    real = C.politeness_select_bucketed
+    monkeypatch.setattr(
+        C, "politeness_select_bucketed",
+        lambda *a, **kw: calls.append(a[2]) or real(*a, **kw),
+    )
+    monkeypatch.setattr(C, "FRONTIER_SELECT_BUCKETED_MIN", 0)
+    bucketed = C.run_crawl(
+        spark, web_df, seed, str(tmp_path / "bkt"),
+        host_budgets=budgets, frontier_buckets=1,
+    )
+    assert calls and set(calls) == {None}  # armed, with no global budget
+    _assert_equivalent(bucketed, bucketed.store, oracle_crawl(web, seed))
+    assert requested(bucketed.store) == requested(window.store)
     assert bucketed.supersteps == window.supersteps
 
 

@@ -118,6 +118,9 @@ def test_canonicalize_fast_path_equivalence(href, base):
 
 @settings(max_examples=300, deadline=None)
 @given(_url_text, _fast_base_like)
+# the strip of a fragment-exposed trailing space leaves an empty
+# ";params" that urljoin drops on a second pass
+@example(href="; #", base="https://h.test/a/b")
 def test_canonicalize_idempotent_under_same_base(href, base):
     """canonicalize(canonicalize(x, b), b) == canonicalize(x, b) —
     the exact invariant udfs.resolve_links' identity-skip relies

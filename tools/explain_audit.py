@@ -1165,6 +1165,31 @@ def crawl_operator_plans(spark, work_dir: str):
              and "BroadcastExchange" in p and "LeftSemi" not in p),
         ],
     )
+    # superstep 0 reads the seed wave and the empty seen and dims
+    # history: driver rows that must plan JVM-local, since a Python RDD
+    # runs one Python task per partition on every evaluation
+    from website_indexer_spark.plans.crawl import _seed_frontier
+    from website_indexer_spark.sources.tables import CrawlStore
+
+    empty = CrawlStore(spark, os.path.join(work_dir, "empty_store"))
+    # three plans in one section: a union of them would drop the empty
+    # sides before planning
+    plans["crawl_seed_jvm_only"] = (
+        "\n".join(
+            formatted_plan(df)
+            for df in (
+                _seed_frontier(spark, "https://h.test/", "h.test"),
+                empty.read_all("seen"),
+                empty.read_all("dims"),
+            )
+        ),
+        [
+            ("the seed wave and the empty seen and dims tables are each "
+             "one LocalTableScan: no Python RDD (Scan ExistingRDD)",
+             lambda p: "ExistingRDD" not in p
+             and p.count("== Physical Plan ==\nLocalTableScan (1)\n\n") == 3),
+        ],
+    )
     # the streaming ingest routes with the batch superstep's plan
     # builders, so its pushed-down record_type filter reads the one
     # (nondeterministic) extraction instead of a copy of the UDF

@@ -122,9 +122,15 @@ def _canonicalize_url_slow(href: str, base_url: Optional[str]) -> Optional[str]:
     # The canonical form must be a fixed point of this function: fragment
     # stripping can expose trailing whitespace (href='0 #') that the input
     # .strip() would remove on a second pass, letting one URL enter the
-    # seen set under two byte-forms. Strip the final unsplit string so
-    # canonicalize(canonicalize(x)) == canonicalize(x).
-    out = parse.urlunsplit((scheme, netloc, path, split.query, "")).strip()
+    # seen set under two byte-forms. And the stripped string can end in
+    # an empty ";params" (href='; #') that urljoin drops on a second
+    # pass. So a string the strip shortened goes through once more; each
+    # round is shorter, and canonicalize(canonicalize(x)) ==
+    # canonicalize(x).
+    out = parse.urlunsplit((scheme, netloc, path, split.query, ""))
+    stripped = out.strip()
+    if stripped != out:
+        return _canonicalize_url_slow(stripped, base_url) if stripped else None
     return out or None
 
 

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from website_indexer_spark.sources.tables import write_json_atomic
+from website_indexer_spark.sources.tables import local_frame, write_json_atomic
 
 URL_HASH = lambda col: F.xxhash64(col)  # noqa: E731 — canonical url hash
 
@@ -500,6 +500,11 @@ class StripedBloom:
 # Politeness budget (A11) + mega-host salting (SURVEY.md §4.2.1)
 # --------------------------------------------------------------------
 
+# the budget of a host that has none: no limit
+_UNLIMITED = 1 << 62
+_BUCKET_ID_SCHEMA = T.StructType([T.StructField("bucket", T.IntegerType())])
+
+
 def politeness_select(
     frontier: DataFrame,
     host_budget: Optional[int],
@@ -552,9 +557,9 @@ def politeness_select(
             # overrides only: hosts without one are unthrottled this
             # superstep (None -> "no limit" just like the global path)
             budget_col = F.coalesce(
-                budget_col, F.lit((1 << 62)).cast("long")
+                budget_col, F.lit(_UNLIMITED).cast("long")
             )
-        prelimit = host_budget if host_budget is not None else (1 << 62)
+        prelimit = host_budget if host_budget is not None else _UNLIMITED
     else:
         prelimit = host_budget
 
@@ -628,7 +633,7 @@ def politeness_select(
 def politeness_select_bucketed(
     spark,
     bucket_files: dict,
-    host_budget: int,
+    host_budget: Optional[int],
     schema,
     budgets: Optional[dict] = None,
     budget_files: Optional[dict] = None,
@@ -663,8 +668,9 @@ def politeness_select_bucketed(
     never crosses an exchange on the way back out either).
 
     Per-host Crawl-delay overrides ride one of two forms; hosts absent
-    from either use ``host_budget``, and both are semantically
-    identical to politeness_select's broadcast override join:
+    from either use ``host_budget`` (no limit when it is None), and
+    both are semantically identical to politeness_select's broadcast
+    override join:
 
     * ``budget_files`` (the scale path): {bucket: [parquet files]} of a
       (host, budget) table written partitioned by the SAME
@@ -687,6 +693,8 @@ def politeness_select_bucketed(
         schema.fields + [T.StructField("_selected", T.BooleanType(), False)]
     )
     cols = [f.name for f in schema.fields]
+    # overrides only: hosts without one are unlimited, as on the window path
+    default_budget = host_budget if host_budget is not None else _UNLIMITED
 
     def per_buckets(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow.parquet as pq
@@ -730,16 +738,16 @@ def politeness_select_bucketed(
                         overrides = None
                 if overrides:
                     bud = (
-                        df["host"].map(overrides).fillna(host_budget)
+                        df["host"].map(overrides).fillna(default_budget)
                         .astype("int64")
                     )
                     df["_selected"] = rank < bud
                 else:
-                    df["_selected"] = rank < host_budget
+                    df["_selected"] = rank < default_budget
                 yield df
 
-    ids = spark.createDataFrame(
-        [(int(b),) for b in sorted(files_b)], "bucket int"
+    ids = local_frame(
+        spark, [(int(b),) for b in sorted(files_b)], _BUCKET_ID_SCHEMA
     ).repartition(max(len(files_b), 1), F.col("bucket"))
     return ids.mapInPandas(per_buckets, out_schema)
 

@@ -86,13 +86,16 @@ def recrawl_invalidate(spark: SparkSession, store, topk: DataFrame) -> dict:
     "buckets_rewritten": b, "seen_removed": m}``."""
     seen_dir = os.path.join(store.root, "seen")
     recover_staged_swap(seen_dir)  # finish or drop a crashed swap
-    urls = [r["url"] for r in topk.select("url").distinct().collect()]
-    if not urls:
+    # the keys are hashed in the collecting job itself, so no driver
+    # list goes back to Spark as a DataFrame
+    key_hashes = [
+        r["url_hash"]
+        for r in topk.select("url").distinct()
+        .select(URL_HASH(F.col("url")).alias("url_hash"))
+        .collect()
+    ]  # k-bounded
+    if not key_hashes:
         return {"keys": 0, "buckets_rewritten": 0, "seen_removed": 0}
-    keys = spark.createDataFrame([(u,) for u in urls], ["url"]).select(
-        URL_HASH(F.col("url")).alias("url_hash")
-    )
-    key_hashes = [r["url_hash"] for r in keys.collect()]  # k-bounded
 
     # bucket-pruned rewrite (Iceberg DELETE WHERE analogue). Touched
     # buckets derive from the keys; flat-layout stores fall back to
@@ -136,7 +139,7 @@ def recrawl_invalidate(spark: SparkSession, store, topk: DataFrame) -> dict:
         commit_staged_swap(seen_dir, staged)
 
     return {
-        "keys": len(urls),
+        "keys": len(key_hashes),
         "buckets_rewritten": len(staged),
         "seen_removed": seen_removed,
     }

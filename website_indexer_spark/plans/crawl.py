@@ -100,6 +100,7 @@ from website_indexer_spark.sources.tables import (
     build_spark,
     commit_staged_swap,
     load_web_pages,
+    local_frame,
     recover_staged_swap,
     swap_staging_dir,
 )
@@ -484,7 +485,7 @@ def _seed_frontier(spark: SparkSession, seed_url: str, start_host: str) -> DataF
         )
     canon = unwrap_external_site(canon, start_host)
     row = [(canon, hostname_with_port(canon), 0, 0, canon, start_host, "GET")]
-    return spark.createDataFrame(row, FRONTIER_SCHEMA)
+    return local_frame(spark, row, FRONTIER_SCHEMA)
 
 
 def run_crawl(
@@ -678,7 +679,7 @@ def run_crawl(
             # bucket-aligned override parquet written once per run
             # above (each bucket task reads only its own overrides).
             use_bucketed_select = bool(
-                host_budget is not None
+                (host_budget is not None or budget_files)
                 and frontier_files
                 and frontier_count > FRONTIER_SELECT_BUCKETED_MIN
             )

@@ -202,6 +202,26 @@ DELTA_TABLES = ("routed", "seen", "dims")
 SNAPSHOT_TABLES = ("frontier",)
 
 
+def local_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: T.StructType
+) -> DataFrame:
+    """``rows`` (tuples in ``schema`` field order) as a JVM-local
+    relation. ``spark.createDataFrame(<list>, schema)`` plans a Python
+    RDD (``Scan ExistingRDD``): every evaluation of it runs one Python
+    task per default partition, each paying a worker's per-task set-up
+    for a handful of driver rows. A pyarrow Table plans as a
+    ``LocalTableScan`` with ``schema`` exactly (nullability included),
+    empty or not and whatever the session's Arrow setting."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def write_json_atomic(path: str, obj, **dump_kwargs) -> None:
     """Write ``obj`` as JSON to ``path`` via a sibling ``.tmp`` file and
     ``os.replace``, so readers see the old file or the new one, never a
@@ -882,7 +902,7 @@ class ParquetManifestBackend(TableBackend):
             for k in self.committed_steps(name)
         ]
         if not paths:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         df = self.spark.read.schema(schema).option("basePath", tdir).parquet(
             *paths
         )
