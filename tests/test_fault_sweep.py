@@ -130,10 +130,14 @@ def _state(spark, root):
     return {"rows": rows, "layout": layout, "meta": store._meta}
 
 
-def _sweep_rewrite(spark, faults, tmp_path, base, op):
+def _sweep_rewrite(spark, faults, tmp_path, base, op, after_rollback=None):
+    """``after_rollback(root, start, want, call)``, when given, checks
+    the state right after the crashed store's ``rollback_uncommitted``
+    (``start``: the state before the op)."""
     clean = str(tmp_path / "clean")
     shutil.copytree(base, clean)
-    before = _state(spark, clean)["rows"]
+    start = _state(spark, clean)
+    before = start["rows"]
     with faults.watch(clean) as calls:
         op(CrawlStore(spark, clean))
     want = _state(spark, clean)
@@ -146,6 +150,8 @@ def _sweep_rewrite(spark, faults, tmp_path, base, op):
         CrawlStore(spark, root).rollback_uncommitted()
         # no row is lost or duplicated at any crash point
         assert _state(spark, root)["rows"] in (before, want["rows"]), call
+        if after_rollback is not None:
+            after_rollback(root, start, want, call)
         op(CrawlStore(spark, root))
         assert _state(spark, root) == want, call
 
@@ -158,12 +164,26 @@ def test_sweep_compact(spark, faults, tmp_path, site):
 
 
 def test_sweep_rebucket(spark, faults, tmp_path, site):
+    """The writer entry finishes an interrupted rebucket on its own:
+    right after ``rollback_uncommitted`` the store already equals the
+    uninterrupted run (rows, layout and meta) — unless the crash hit
+    the first meta write, before which nothing had changed."""
+
+    def finished(root, start, want, call):
+        got = _state(spark, root)
+        if got["meta"] == start["meta"]:
+            assert call == "replace store_meta.json.tmp", call
+            assert got == start, call
+        else:
+            assert got == want, call
+
     _sweep_rewrite(
         spark,
         faults,
         tmp_path,
         site["base"],
         lambda s: s.rebucket(seen_buckets=4, dims_buckets=4),
+        after_rollback=finished,
     )
 
 

@@ -1,5 +1,6 @@
 """Store-level bucket-count config (VERDICT r3 #3), legacy flat-layout
-detection (ADVICE r3), rebucketing via compaction, and the parallel
+detection and repair (ADVICE r3), rebucketing via compaction, the
+writer entry that finishes an interrupted rebucket, and the parallel
 above-threshold seen/dims delta write (VERDICT r3 #2).
 
 The bucket counts are PHYSICAL layout: a probe run with a different
@@ -17,11 +18,13 @@ from pyspark.sql import functions as F
 from tests.conftest import web_dict_to_df
 from tests.oracle_crawler import crawl as oracle_crawl, fan_site
 from website_indexer_spark.operators import frontier as FR
+from website_indexer_spark.operators.recrawl import recrawl_invalidate
 from website_indexer_spark.plans import crawl as C
 from website_indexer_spark.sources.tables import (
     SEEN_SCHEMA,
     CrawlStore,
 )
+from website_indexer_spark.streaming.crawl_stream import crawl_stream_step
 
 
 def _crawl(spark, tmp_path, name, **kwargs):
@@ -109,7 +112,9 @@ def test_legacy_store_without_meta(spark, tmp_path):
     os.remove(os.path.join(root, "store_meta.json"))
     store = CrawlStore(spark, root)
     assert store.seen_buckets == 8 and store.dims_buckets == 8
-    assert store.bucketed_path_available("seen")
+    store.rollback_uncommitted()
+    assert store.backend.bucketed_layout_ok("seen")
+    assert store.backend.bucketed_layout_ok("dims")
     os.remove(os.path.join(root, "store_meta.json"))
     with pytest.raises(ValueError, match="predates store_meta"):
         CrawlStore(spark, root, seen_buckets=16)
@@ -117,9 +122,9 @@ def test_legacy_store_without_meta(spark, tmp_path):
 
 def test_flat_legacy_layout_detected_and_repaired(spark, tmp_path):
     """ADVICE r3: committed seen deltas written FLAT (pre-bucketed-
-    layout store) are invisible to bucketed_files — the store must
-    disable the bucketed fast path (fallback = scanned anti-join stays
-    exact) until compact() rewrites the layout."""
+    layout store) are invisible to bucketed_files — the writer entry
+    (rollback_uncommitted) must detect them and compact the table into
+    the bucketed layout before any probe reads it."""
     root = str(tmp_path / "f")
     store = CrawlStore(spark, root)
     rows = [(i * 7919, f"u{i}") for i in range(40)]
@@ -127,7 +132,6 @@ def test_flat_legacy_layout_detected_and_repaired(spark, tmp_path):
     store.write_delta("seen", flat.coalesce(1), 0)  # no bucket dirs
     store.commit(0, {"requested": 40})
     assert not store.backend.bucketed_layout_ok("seen")
-    assert not store.bucketed_path_available("seen")
     # the bucketed probe WOULD forget all 40 committed keys:
     probe = store.read_all("seen")
     assert (
@@ -136,9 +140,11 @@ def test_flat_legacy_layout_detected_and_repaired(spark, tmp_path):
         ).count()
         == 40
     )
-    # compact() recomputes the bucket column and restores the fast path
-    store.compact(tables=["seen"])
-    assert store.bucketed_path_available("seen")
+    # the writer entry compacts the flat table: compact()'s augment
+    # recomputes the bucket column
+    store.rollback_uncommitted()
+    assert store.backend.bucketed_layout_ok("seen")
+    assert set(_seen_urls(store)) == {f"u{i}" for i in range(40)}
     assert (
         FR.exclude_keys_bucketed(
             store.read_all("seen"), store.seen_bucket_files(), store.seen_buckets
@@ -147,11 +153,11 @@ def test_flat_legacy_layout_detected_and_repaired(spark, tmp_path):
     )
 
 
-def test_flat_legacy_crawl_resume_falls_back_scanned(spark, tmp_path, monkeypatch):
+def test_flat_legacy_crawl_resume_repairs_layout(spark, tmp_path, monkeypatch):
     """End-to-end: resume a crawl whose committed seen layout is flat,
-    with the broadcast threshold forced off — the driver must take the
-    scanned fallback (not the bucketed probe) and never re-request a
-    committed URL."""
+    with the broadcast threshold forced off — the resume's writer entry
+    must rewrite the layout bucketed before the bucketed probe runs, so
+    no committed URL is re-requested and no flat delta is appended."""
     web, seed = fan_site()
     oracle = oracle_crawl(web, seed)
     root = str(tmp_path / "r")
@@ -177,7 +183,7 @@ def test_flat_legacy_crawl_resume_falls_back_scanned(spark, tmp_path, monkeypatc
         )
     os.remove(os.path.join(root, "store_meta.json"))
     # phase 2: resume with the bucketed path forced on by wave size —
-    # the layout check must reroute to the scanned anti-join
+    # the writer entry must repair the layout first
     monkeypatch.setattr(C, "BROADCAST_FETCH_THRESHOLD", -1)
     monkeypatch.setattr(C, "HISTORY_BROADCAST_THRESHOLD", -1)
     result = C.run_crawl(
@@ -190,6 +196,7 @@ def test_flat_legacy_crawl_resume_falls_back_scanned(spark, tmp_path, monkeypatc
     # request-once: no URL admitted twice into the seen table
     seen_df = result.store.read_all("seen")
     assert seen_df.count() == seen_df.select("url").distinct().count()
+    _assert_bucketed_at_meta_count(spark, root)
 
 
 def test_rebucket_rewrites_layout(spark, tmp_path):
@@ -203,7 +210,10 @@ def test_rebucket_rewrites_layout(spark, tmp_path):
     assert _bucket_dirs(root, "seen") <= set(range(5))
     assert _bucket_dirs(root, "dims") <= set(range(3))
     assert set(_seen_urls(store)) == want
-    assert store.bucketed_path_available("seen")
+    store.rollback_uncommitted()  # nothing to repair: a no-op
+    assert store.backend.bucketed_layout_ok("seen")
+    assert store.backend.bucketed_layout_ok("dims")
+    assert _bucket_dirs(root, "seen") <= set(range(5))
     assert (
         FR.exclude_keys_bucketed(
             store.read_all("seen"), store.seen_bucket_files(), 5
@@ -217,25 +227,117 @@ def test_rebucket_rewrites_layout(spark, tmp_path):
         CrawlStore(spark, root, seen_buckets=8)
 
 
-def test_rebucket_pending_disables_fast_path(spark, tmp_path):
+def test_rebucket_pending_finished_at_writer_entry(spark, tmp_path):
     """A crash between the meta update and the compaction rewrite
-    leaves rebucket_pending set — the bucketed path must stay off
-    (counts in meta may not match files) until compact() finishes."""
+    leaves rebucket_pending set with the new count in the meta and the
+    files still at the old count. The writer entry must finish the
+    rewrite before anything probes the buckets."""
     result = _crawl(spark, tmp_path, "p")
     store = result.store
+    want = set(_seen_urls(store))
     meta = dict(store._meta)
     meta["seen_buckets"] = 5
     meta["rebucket_pending"] = ["seen"]
     store._write_meta(meta)
-    assert not store.bucketed_path_available("seen")
-    assert store.bucketed_path_available("dims")
-    # finishing the rebucket restores it
-    store.compact(tables=["seen"])
-    meta = dict(store._meta)
-    meta.pop("rebucket_pending")
-    store._write_meta(meta)
-    assert store.bucketed_path_available("seen")
+    # the bucketed probe at the meta's count would forget committed keys
+    probe = store.read_all("seen")
+    assert FR.exclude_keys_bucketed(probe, store.seen_bucket_files(), 5).count()
+    store.rollback_uncommitted()
+    assert "rebucket_pending" not in CrawlStore(spark, store.root)._meta
+    assert store.backend.bucketed_layout_ok("seen")
     assert _bucket_dirs(store.root, "seen") <= set(range(5))
+    assert set(_seen_urls(store)) == want
+    assert (
+        FR.exclude_keys_bucketed(
+            store.read_all("seen"), store.seen_bucket_files(), 5
+        ).count()
+        == 0
+    )
+    _assert_bucketed_at_meta_count(spark, store.root)
+
+
+def _pending_store(spark, tmp_path, name, lost_supersteps):
+    """A fan_site crawl whose last ``lost_supersteps`` manifests are
+    gone (a crash before their commit) and whose meta reads as a
+    rebucket that crashed right after its meta write: seen_buckets=5
+    while the files sit at 8, seen and dims flagged pending."""
+    store = _crawl(spark, tmp_path, name).store
+    last = store.last_committed()
+    assert last >= lost_supersteps
+    for k in range(last - lost_supersteps + 1, last + 1):
+        os.remove(store._manifest_path(k))
+    meta = dict(store._meta)
+    meta["seen_buckets"] = 5
+    meta["rebucket_pending"] = ["seen", "dims"]
+    store._write_meta(meta)
+    return store.root
+
+
+def _assert_bucketed_at_meta_count(spark, root):
+    """Every committed seen/dims file sits under bucket=B, and every
+    row in it hashes to B at the store meta's count."""
+    store = CrawlStore(spark, root)
+    assert "rebucket_pending" not in store._meta
+    for name in ("seen", "dims"):
+        assert store.backend.bucketed_layout_ok(name), name
+        df = spark.read.parquet(os.path.join(root, name))
+        assert df.count() > 0, name
+        assert df.filter(F.col("bucket") != store.bucket_expr(name)).count() == 0
+
+
+def test_resume_on_pending_rebucket_store(spark, tmp_path):
+    """A crawl resumed on a store a rebucket crashed in must equal the
+    oracle, admit no URL twice and leave every seen/dims file bucketed
+    at the meta's count (a flat delta beside the bucketed ones makes
+    the next superstep's seen read fail partition discovery)."""
+    web, seed = fan_site()
+    oracle = oracle_crawl(web, seed)
+    root = _pending_store(spark, tmp_path, "pr", lost_supersteps=2)
+    result = C.run_crawl(
+        spark, web_dict_to_df(spark, web), seed, root, resume=True
+    )
+    assert result.store.read_crawl_record()["status"] == "Finished"
+    assert _seen_urls(result.store) == sorted(set(oracle.requested))
+    assert {r["url"] for r in result.store.read_all("pages").collect()} == set(
+        oracle.pages
+    )
+    _assert_bucketed_at_meta_count(spark, root)
+
+
+def test_recrawl_invalidate_on_pending_rebucket_store(spark, tmp_path):
+    """Recrawl invalidation on a store a rebucket crashed in: bucketing
+    the keys at the meta's count while the files sit at the old one
+    would leave scheduled URLs in seen, never to be refetched."""
+    web, seed = fan_site()
+    root = _pending_store(spark, tmp_path, "rp", lost_supersteps=0)
+    store = CrawlStore(spark, root)
+    before = set(_seen_urls(store))
+    scheduled = sorted(r["url"] for r in store.read_all("pages").collect())
+    assert len(scheduled) > 1
+    topk = spark.createDataFrame([(u,) for u in scheduled], ["url"])
+    stats = recrawl_invalidate(spark, store, topk)
+    assert stats["seen_removed"] == len(scheduled)
+    assert set(_seen_urls(CrawlStore(spark, root))) == before - set(scheduled)
+    _assert_bucketed_at_meta_count(spark, root)
+
+
+def test_stream_batch_on_pending_rebucket_store(spark, tmp_path):
+    """One crawl_stream_step batch on a store a rebucket crashed in:
+    the batch's seen delta must land bucketed at the meta's count, so
+    the seen table still reads afterwards."""
+    web, seed = fan_site()
+    root = _pending_store(spark, tmp_path, "sp", lost_supersteps=2)
+    store = CrawlStore(spark, root)
+    before = set(_seen_urls(store))
+    batch = store.read_frontier(store.last_committed())
+    wave = {r["url"] for r in batch.collect()}
+    assert wave - before
+    step = crawl_stream_step(web_dict_to_df(spark, web), root, seed)
+    step(batch, 0)
+    after = CrawlStore(spark, root)
+    assert set(_seen_urls(after)) == before | wave
+    assert after.read_all("seen").count() == len(before | wave)
+    _assert_bucketed_at_meta_count(spark, root)
 
 
 def test_parallel_delta_write_above_threshold(spark, tmp_path, monkeypatch):

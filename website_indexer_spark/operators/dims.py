@@ -54,11 +54,12 @@ def dim_upsert_delta(
       LeftAnti(BuildRight) — the URL-seen-set composition
       (operators/frontier.py exclude_keys); right once the dimension
       outgrows broadcast but the wave's keys don't.
-    * both False: plain shuffled anti-join. The crawl store does NOT
-      use this above the broadcast threshold — it uses the genuinely
-      storage-partitioned ``dim_upsert_delta_bucketed`` against the
-      hash-bucketed dims layout; this fallback remains for callers
-      without a bucketed table.
+    * both False: plain shuffled anti-join, for callers without a
+      bucketed table whose incoming side is too big to broadcast (the
+      catalog's ``q_dimension_upsert``). The crawl store never uses
+      it: above the broadcast threshold it runs the storage-
+      partitioned ``dim_upsert_delta_bucketed`` against the dims
+      layout, which is always hash-bucketed.
     """
     if isinstance(key_cols, str):
         key_cols = [key_cols]

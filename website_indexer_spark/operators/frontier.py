@@ -76,12 +76,13 @@ def exclude_keys(
     joins are BroadcastHashJoin BuildRight; the exclude table sees one
     sequential scan and zero exchanges.
 
-    broadcast_df=False (huge-delta fallback): a plain shuffled
-    left_anti on ``key``. The crawl does NOT use this for the seen
-    set above the broadcast threshold — it uses the genuinely
-    storage-partitioned ``exclude_keys_bucketed`` against the
-    key-bucketed seen layout instead; this fallback remains for
-    callers without a bucketed table (dims MERGE's huge-wave path).
+    broadcast_df=False: a plain shuffled left_anti on ``key``, for
+    callers without a bucketed table where both sides are big (the
+    catalog's ``q_dimension_upsert``). The crawl never takes it: above
+    the broadcast threshold it probes the key-bucketed seen and dims
+    layouts storage-partitioned (``exclude_keys_bucketed``,
+    ``dims.dim_upsert_delta_bucketed``), and the store keeps those
+    layouts bucketed (``CrawlStore.rollback_uncommitted``).
     """
     if small_exclude:
         return df.join(F.broadcast(exclude.select(key)), key, "left_anti")

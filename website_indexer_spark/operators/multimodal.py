@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from website_indexer_spark.sources.tables import local_frame
+
 MEDIA_META_SCHEMA = T.StructType(
     [
         T.StructField("width", T.IntegerType()),
@@ -357,4 +359,4 @@ def synth_media(spark, n: int = 64, seed: int = 5) -> DataFrame:
             ],
         }
         rows.append((i, kind, payload, meta))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)

@@ -16,7 +16,10 @@ picks the k URLs most worth refetching. This module makes those URLs
    deletes. The rewrites are staged outside the partition namespace
    and swapped in under a marker (sources/tables.py
    ``commit_staged_swap``), so a crash mid-swap is finished by the
-   next invalidation or by ``rollback_uncommitted`` on resume.
+   next invalidation or by ``rollback_uncommitted`` on resume. The
+   invalidation itself starts at that writer entry, so the seen files
+   it rewrites are always bucketed at the store's count (an
+   interrupted rebucket is finished first).
 2. **Re-enqueue** — ``recrawl_seed_frontier`` shapes the scheduled
    URLs as FRONTIER_SCHEMA rows (depth 0, priority order); the next
    ``run_crawl(resume=True, extra_frontier=...)`` unions them into
@@ -52,7 +55,6 @@ from pyspark.sql import functions as F
 from website_indexer_spark.operators.frontier import URL_HASH
 from website_indexer_spark.sources.tables import (
     commit_staged_swap,
-    recover_staged_swap,
     swap_staging_dir,
 )
 
@@ -84,8 +86,10 @@ def recrawl_invalidate(spark: SparkSession, store, topk: DataFrame) -> dict:
     """Evict the scheduled URLs from the crawl's committed seen table
     so a resumed crawl refetches them. Returns ``{"keys": k,
     "buckets_rewritten": b, "seen_removed": m}``."""
+    # the writer entry: finish or drop a crashed swap, and finish an
+    # interrupted rebucket, so the files sit at store.seen_buckets
+    store.rollback_uncommitted()
     seen_dir = os.path.join(store.root, "seen")
-    recover_staged_swap(seen_dir)  # finish or drop a crashed swap
     # the keys are hashed in the collecting job itself, so no driver
     # list goes back to Spark as a DataFrame
     key_hashes = [
@@ -97,27 +101,16 @@ def recrawl_invalidate(spark: SparkSession, store, topk: DataFrame) -> dict:
     if not key_hashes:
         return {"keys": 0, "buckets_rewritten": 0, "seen_removed": 0}
 
-    # bucket-pruned rewrite (Iceberg DELETE WHERE analogue). Touched
-    # buckets derive from the keys; flat-layout stores fall back to
-    # rewriting every superstep dir.
-    nb = store.seen_buckets
-    touched = {h % nb for h in key_hashes}
-    targets = []
-    for k in store.backend.committed_steps("seen"):
-        entry = f"superstep={k}"
-        bucket_dirs = [
-            d
-            for d in os.listdir(os.path.join(seen_dir, entry))
-            if d.startswith("bucket=")
-        ]
-        if bucket_dirs:
-            targets.extend(
-                f"{entry}/{d}"
-                for d in sorted(bucket_dirs)
-                if int(d.split("=", 1)[1]) in touched
-            )
-        else:
-            targets.append(entry)  # legacy flat delta
+    # bucket-pruned rewrite (Iceberg DELETE WHERE analogue): touched
+    # buckets derive from the keys (Python's % is pmod's non-negative
+    # remainder)
+    touched = sorted({h % store.seen_buckets for h in key_hashes})
+    targets = [
+        f"superstep={k}/bucket={b}"
+        for k in store.backend.committed_steps("seen")
+        for b in touched
+        if os.path.isdir(os.path.join(seen_dir, f"superstep={k}", f"bucket={b}"))
+    ]
 
     seen_removed = 0
     staged = []

@@ -155,6 +155,8 @@ def stratified_quota(
     spark = df.sparkSession
     from pyspark.sql import types as T
 
+    from website_indexer_spark.sources.tables import local_frame
+
     # fresh StructType (StructType.add mutates cached schemas)
     thr_schema = T.StructType(
         [
@@ -162,8 +164,8 @@ def stratified_quota(
             T.StructField("_thr16", T.LongType()),
         ]
     )
-    thr = spark.createDataFrame(
-        [(s, int(round(f * 65536))) for s, f in armed.items()], thr_schema
+    thr = local_frame(
+        spark, [(s, int(round(f * 65536))) for s, f in armed.items()], thr_schema
     )
     pre = (
         df.join(F.broadcast(thr), strata_col, "left")

@@ -1003,14 +1003,25 @@ def q_bpe_merges(spark, sf):
     the 5-row merge table. Rows-only (the oracle cannot express the
     iterative re-segmentation in one SQL query); the trainer is
     pinned against a plain-Python reference in pytest."""
+    from pyspark.sql import types as T
+
     from website_indexer_spark.operators import bpe
+    from website_indexer_spark.sources.tables import local_frame
 
     # trainer corpus: ordered, so the slice never depends on file packing
     docs = _t(spark, sf, "documents").orderBy("doc_id").limit(120)
     merges = bpe.fit_bpe(docs, n_merges=5)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, l, r, int(c)) for i, (l, r, c) in enumerate(merges)],
-        "rank int, sym_left string, sym_right string, cnt long",
+        T.StructType(
+            [
+                T.StructField("rank", T.IntegerType()),
+                T.StructField("sym_left", T.StringType()),
+                T.StructField("sym_right", T.StringType()),
+                T.StructField("cnt", T.LongType()),
+            ]
+        ),
     )
 
 

@@ -49,9 +49,14 @@ persistent striped Bloom filter prefilters most candidates without
 any driver ever holding the whole bitmap; the politeness window
 partitions by host with optional deterministic salting for
 mega-hosts; and every superstep's plan is cut at the checkpoint (no
-lineage blowup across iterations). A crash anywhere in the loop
-records status=Failed + failure_message on the crawl record
-(reference crawler/wpull/crawler.py:16-25) before re-raising.
+lineage blowup across iterations). The seen and dims tables are
+always hash-bucketed: a resumed run first goes through the store's
+writer entry (``CrawlStore.rollback_uncommitted``), which finishes an
+interrupted rebucket and compacts a legacy flat table, so each
+superstep picks only among the broadcast tiers and the storage-
+partitioned probe. A crash anywhere in the loop records status=Failed
++ failure_message on the crawl record (reference
+crawler/wpull/crawler.py:16-25) before re-raising.
 """
 
 from __future__ import annotations
@@ -164,6 +169,19 @@ BLOOM_AUTO_SEEN_THRESHOLD = 5_000_000
 # task per bucket (VERDICT r3 #2).
 DELTA_WRITE_SINGLE_TASK_MAX = 200_000
 
+
+def bucketed_write(
+    df: DataFrame, bucket_expr, n_buckets: int, est_rows: int
+) -> DataFrame:
+    """``df`` with its ``bucket`` partition column, planned for a
+    ``partitionBy(..., "bucket")`` write: ONE task up to
+    DELTA_WRITE_SINGLE_TASK_MAX estimated rows, one task per bucket
+    above it. One file per bucket dir either way."""
+    out = df.withColumn("bucket", bucket_expr)
+    if est_rows > DELTA_WRITE_SINGLE_TASK_MAX:
+        return out.repartition(n_buckets, F.col("bucket"))
+    return out.coalesce(1)
+
 # Above this wave size the shared extraction cache is materialized by
 # ONE full-parallelism job BEFORE the concurrent delta writes. A task
 # that first-touches a persisted block another job is computing BLOCKS
@@ -242,8 +260,8 @@ def maintain_bloom(
 def fetch_sim_join(web, selected, n_selected):
     """A13 fetch-simulate: the wave left-outer-joined into the huge
     web_pages lookup, synthesized as hits ∪ misses (see the call
-    site's comment). Returns (fetched, [DataFrames to unpersist once
-    the superstep's outputs are materialized])."""
+    site's comment). Returns (fetched, []): no path caches anything,
+    so the list of DataFrames to unpersist is always empty."""
     if n_selected > BROADCAST_FETCH_THRESHOLD:
         # wave itself not broadcastable: plain join — on a real
         # deployment a storage-partitioned join against the
@@ -264,28 +282,21 @@ def fetch_sim_join(web, selected, n_selected):
             "'" + u.replace("\\", "\\\\").replace("'", "\\'") + "'" for u in urls
         )
         lookup = web.filter(F.expr(f"url IN ({in_list})"))
-        hits = lookup.join(F.broadcast(selected), "url", "inner")
         in_web = lookup.select("url")
-        null_web_cols = [
-            F.lit(None).cast(f.dataType).alias(f.name)
-            for f in web.schema.fields
-            if f.name != "url"
-        ]
-        misses = selected.join(F.broadcast(in_web), "url", "left_anti").select(
-            "*", *null_web_cols
+    else:
+        # hits: one full-width streamed pass over the lookup scan with
+        # the wave broadcast as BuildRight — html bytes stay in
+        # executor partitions end to end
+        lookup = web
+        # misses: which wave urls exist in the lookup at all — answered
+        # by a SECOND, url-column-only streamed pass (columnar pruning
+        # makes it a tiny fraction of the full-width pass), then a
+        # broadcast anti-join of the wave against that wave-bounded
+        # url set
+        in_web = web.select("url").join(
+            F.broadcast(selected.select("url")), "url", "left_semi"
         )
-        return hits.unionByName(misses), []
-    # hits: one full-width streamed pass over the lookup scan with the
-    # wave broadcast as BuildRight — html bytes stay in executor
-    # partitions end to end
-    hits = web.join(F.broadcast(selected), "url", "inner")
-    # misses: which wave urls exist in the lookup at all — answered by
-    # a SECOND, url-column-only streamed pass (columnar pruning makes
-    # it a tiny fraction of the full-width pass), then a broadcast
-    # anti-join of the wave against that wave-bounded url set
-    in_web = web.select("url").join(
-        F.broadcast(selected.select("url")), "url", "left_semi"
-    )
+    hits = lookup.join(F.broadcast(selected), "url", "inner")
     null_web_cols = [
         F.lit(None).cast(f.dataType).alias(f.name)
         for f in web.schema.fields
@@ -509,7 +520,6 @@ def run_crawl(
     crawl_id: int = 1,
     max_supersteps: int = 1000,
     verbose: bool = False,
-    cache_lookup: bool = True,
     maintain_dims: bool = True,
 ) -> CrawlResult:
     policy = policy or CrawlPolicy(start_url=seed_url, max_pages=max_pages, depth=depth_cap)
@@ -527,14 +537,16 @@ def run_crawl(
     # cluster the equivalent is a url-hash-bucketed Iceberg table
     # (storage-partitioned join) — caching 100 TB is not an option,
     # pruning + bucket-local joins are.
-    if cache_lookup:
-        web = web.persist()
+    web = web.persist()
 
     requested_total = 0
     seq_base = 1  # seed took seq 0
     dims_total = 0  # cumulative dimension keys (manifest-tracked)
 
     if resume and store.last_committed() >= 0:
+        # the writer entry: drops a torn superstep and restores the
+        # hash-bucketed seen/dims layout (interrupted rebucket, legacy
+        # flat store) that every superstep below assumes
         store.rollback_uncommitted()
         last = store.last_committed()
         frontier = store.read_frontier(last)
@@ -600,17 +612,6 @@ def run_crawl(
         if verbose:
             print(f"    [crawl] step {k} {label}: {now - t0:.2f}s", flush=True)
         return now
-
-    # Layout mode, decided ONCE per run (it can only change between
-    # runs, via compact()/rebucket()): a legacy store whose committed
-    # seen/dims deltas are FLAT must keep receiving flat deltas —
-    # parquet partition discovery rejects a table whose supersteps mix
-    # (superstep) and (superstep, bucket) partition columns — and must
-    # take the scanned anti-join / streamed MERGE instead of the
-    # bucketed probe (which only sees bucket= files). compact() rewrites
-    # the whole table bucketed, after which both fast paths re-arm.
-    seen_bucketed_ok = store.bucketed_path_available("seen")
-    dims_bucketed_ok = store.bucketed_path_available("dims")
 
     # Per-host Crawl-delay overrides, written ONCE per run as a
     # parquet table partitioned by the SAME pmod(xxhash64(host), B)
@@ -746,7 +747,7 @@ def run_crawl(
             # the hit rows added html-sized memory churn; the adopted
             # hits ∪ (url-only-scan misses) plan scales 2.9x on the
             # same corpus.
-            fetched, step_persists = fetch_sim_join(web, selected, n_selected)
+            fetched, _ = fetch_sim_join(web, selected, n_selected)
             t = _mark("fetch-join-build", t)
             fetched = with_effective_status(fetched)
 
@@ -817,7 +818,7 @@ def run_crawl(
                 accepted = anti_join_seen(
                     accepted, seen_now, bloom, broadcast_frontier=True
                 )
-            elif seen_bucketed_ok:
+            else:
                 # above the broadcast threshold the delta's keys must
                 # not be broadcast — run the STORAGE-PARTITIONED
                 # anti-join against the hash-bucketed committed seen
@@ -832,15 +833,6 @@ def run_crawl(
                     extra_exclude=delta_keys,
                     bloom=bloom,
                     broadcast_extra=n_selected <= BROADCAST_FETCH_THRESHOLD,
-                )
-            else:
-                # legacy flat seen layout or a pending rebucket: the
-                # bucketed point-read would miss committed keys, so
-                # take the exact SCANNED anti-join (shuffled left_anti
-                # over the full seen table) until compact()/rebucket()
-                # restores the bucketed layout (ADVICE r3).
-                accepted = anti_join_seen(
-                    accepted, seen_now, bloom, broadcast_frontier=False
                 )
             t = _mark("seen-antijoin-build", t)
 
@@ -896,13 +888,9 @@ def run_crawl(
                 # take the same single-task/per-bucket switch as the
                 # seen delta writes.
                 bucket_col = F.pmod(F.xxhash64("host"), F.lit(frontier_buckets))
-                new_rows = next_frontier.withColumn("bucket", bucket_col)
-                if est_accepted > DELTA_WRITE_SINGLE_TASK_MAX:
-                    new_rows = new_rows.repartition(
-                        frontier_buckets, F.col("bucket")
-                    )
-                else:
-                    new_rows = new_rows.coalesce(1)
+                new_rows = bucketed_write(
+                    next_frontier, bucket_col, frontier_buckets, est_accepted
+                )
                 if deferred is not None:
                     carried = deferred.select(
                         *FRONTIER_SCHEMA.fieldNames()
@@ -962,22 +950,12 @@ def run_crawl(
                         ["kind", "key"],
                         broadcast_incoming=True,
                     )
-                elif dims_bucketed_ok:
+                else:
                     dims_delta = dim_upsert_delta_bucketed(
                         incoming,
                         store.backend.bucketed_files("dims"),
                         store.dims_buckets,
                         ["kind", "key"],
-                    )
-                else:
-                    # legacy flat dims layout / pending rebucket: exact
-                    # shuffled-anti-join fallback until compact()
-                    # restores the bucketed layout (ADVICE r3)
-                    dims_delta = dim_upsert_delta(
-                        store.read_all("dims"),
-                        incoming,
-                        ["kind", "key"],
-                        broadcast_incoming=False,
                     )
 
             # The four delta writes are mutually independent (all hang
@@ -992,27 +970,13 @@ def run_crawl(
             # is written strictly after every future resolves.
             # seen deltas are narrow (hash+url), written hash-bucketed
             # (bucket=pmod(url_hash, seen_buckets) dirs) so the
-            # storage-partitioned anti-join can point-read per bucket.
-            # Small waves take ONE write task (fewest files); above
-            # DELTA_WRITE_SINGLE_TASK_MAX the delta repartitions by the
-            # bucket column — same layout and file count (one file per
-            # bucket), one parallel task per bucket (VERDICT r3 #2).
-            if seen_bucketed_ok:
-                seen_out = seen_delta.withColumn(
-                    "bucket",
-                    F.pmod(F.col("url_hash"), F.lit(store.seen_buckets)),
-                )
-                if n_selected > DELTA_WRITE_SINGLE_TASK_MAX:
-                    seen_out = seen_out.repartition(
-                        store.seen_buckets, F.col("bucket")
-                    )
-                else:
-                    seen_out = seen_out.coalesce(1)
-                seen_pb = ["bucket"]
-            else:
-                # legacy flat store: keep the layout homogeneous (mixed
-                # flat/bucketed supersteps break partition discovery)
-                seen_out, seen_pb = seen_delta.coalesce(1), None
+            # storage-partitioned anti-join can point-read per bucket
+            # (bucketed_write: one task, or one per bucket above
+            # DELTA_WRITE_SINGLE_TASK_MAX — VERDICT r3 #2).
+            seen_out = bucketed_write(
+                seen_delta, store.bucket_expr("seen"), store.seen_buckets,
+                n_selected,
+            )
             writes = [
                 (
                     "routed",
@@ -1023,7 +987,7 @@ def run_crawl(
                 (
                     "seen",
                     lambda: store.write_delta(
-                        "seen", seen_out, k, partition_by=seen_pb
+                        "seen", seen_out, k, partition_by=["bucket"]
                     ),
                 ),
                 (
@@ -1034,31 +998,17 @@ def run_crawl(
                 ),
             ]
             if maintain_dims:
-                if dims_bucketed_ok:
-                    dims_out = dims_delta.withColumn(
-                        "bucket",
-                        F.pmod(
-                            F.xxhash64("kind", "key"),
-                            F.lit(store.dims_buckets),
-                        ),
-                    )
-                    # dims deltas are sized by the wave's fan-out, not
-                    # the wave: switch on the same estimate the MERGE uses
-                    if est_accepted > DELTA_WRITE_SINGLE_TASK_MAX:
-                        dims_out = dims_out.repartition(
-                            store.dims_buckets, F.col("bucket")
-                        )
-                    else:
-                        dims_out = dims_out.coalesce(1)
-                    dims_pb = ["kind", "bucket"]
-                else:
-                    dims_out = dims_delta.coalesce(1)
-                    dims_pb = ["kind"]
+                # dims deltas are sized by the wave's fan-out, not the
+                # wave: size the write on the same estimate the MERGE uses
+                dims_out = bucketed_write(
+                    dims_delta, store.bucket_expr("dims"), store.dims_buckets,
+                    est_accepted,
+                )
                 writes.append(
                     (
                         "dims",
                         lambda: store.write_delta(
-                            "dims", dims_out, k, partition_by=dims_pb
+                            "dims", dims_out, k, partition_by=["kind", "bucket"]
                         ),
                     )
                 )
@@ -1137,8 +1087,6 @@ def run_crawl(
             if selection_cache is not None:
                 selection_cache.unpersist()
             extracted.unpersist()
-            for cached in step_persists:
-                cached.unpersist()
             frontier = store.read_frontier(k)
             frontier_files = (
                 (store.frontier_bucket_files(k) or None)
@@ -1166,8 +1114,7 @@ def run_crawl(
         store.write_crawl_record(record)
         raise
     finally:
-        if cache_lookup:  # don't leak cached blocks across runs (ADVICE r1)
-            web.unpersist()
+        web.unpersist()  # don't leak cached blocks across runs (ADVICE r1)
 
     record = store.read_crawl_record() or {}
     record.update({"status": "Finished", "supersteps": k})

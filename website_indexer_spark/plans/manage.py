@@ -103,8 +103,8 @@ def main() -> None:  # pragma: no cover - CLI veneer
     rb = sub.add_parser(
         "rebucket",
         help="change a crawl store's physical bucket count(s) — a "
-        "crash-safe compaction rewrite (meta-first pending flag, "
-        "bucketed fast paths disabled until the rewrite lands)",
+        "crash-safe compaction rewrite (meta-first pending flag; an "
+        "interrupted rewrite is finished at the next writer entry)",
     )
     rb.add_argument("name")
     rb.add_argument("--seen-buckets", type=int)

@@ -101,9 +101,9 @@ BUDGETS_SCHEMA = T.StructType(
 # open (a mismatching explicit count raises), and threaded through the
 # crawl/compaction via CrawlStore.seen_buckets / .dims_buckets.
 # Changing a live store's count = a compaction rewrite
-# (CrawlStore.rebucket); the bucketed fast paths disable themselves
-# while a rebucket is pending, so a crash mid-rewrite can never
-# mis-bucket a probe.
+# (CrawlStore.rebucket); a crash mid-rewrite leaves a pending flag in
+# the meta, and the next writer entry (rollback_uncommitted) finishes
+# the rewrite before any probe reads the buckets.
 SEEN_BUCKETS = 8
 
 # The dims table gets the same treatment, sub-partitioned
@@ -404,11 +404,10 @@ class TableBackend:
         """True iff EVERY committed parquet file of ``name`` sits under
         a ``bucket=`` partition dir — i.e. ``bucketed_files`` sees the
         whole committed table. A store written before the bucketed
-        layout existed (flat superstep dirs) returns False and callers
-        must fall back to the scanned anti-join / streamed MERGE, or
-        run ``compact()`` (whose augment recomputes buckets) first —
-        otherwise the storage-partitioned probe would silently forget
-        those committed keys (ADVICE r3)."""
+        layout existed (flat superstep dirs) returns False; the writer
+        entry (``CrawlStore.rollback_uncommitted``) then compacts the
+        table, whose augment recomputes the buckets, so no superstep
+        ever probes or appends to a flat table."""
         raise NotImplementedError
 
 
@@ -1003,17 +1002,13 @@ class CrawlStore:
     def dims_buckets(self) -> int:
         return int(self._meta["dims_buckets"])
 
-    def bucketed_path_available(self, name: str) -> bool:
-        """Whether the storage-partitioned fast path may be used for
-        ``name``: False while a rebucket is pending (counts in meta may
-        not match files on disk yet) or when any committed file sits
-        outside a bucket= dir (legacy flat layout). Callers fall back
-        to the scanned anti-join / streamed MERGE — exact either way,
-        only the physical strategy differs."""
-        pending = self._meta.get("rebucket_pending") or []
-        if name in pending:
-            return False
-        return self.backend.bucketed_layout_ok(name)
+    def bucket_expr(self, name: str):
+        """The ``bucket`` partition value of a ``seen`` or ``dims`` row
+        at the store's configured count — what every delta write and
+        compaction of those tables lays out by."""
+        if name == "dims":
+            return F.pmod(F.xxhash64("kind", "key"), F.lit(self.dims_buckets))
+        return F.pmod(F.col("url_hash"), F.lit(self.seen_buckets))
 
     def rebucket(
         self,
@@ -1022,12 +1017,13 @@ class CrawlStore:
     ) -> Dict[str, Dict[str, int]]:
         """Change the physical bucket count(s) — a compaction rewrite.
         Crash-safe ordering: the new counts land in the meta FIRST
-        together with a pending flag (which disables the bucketed fast
-        paths), then each affected table is rewritten (compact's
-        augment recomputes buckets from the new count), then the flag
-        clears. A crash at any point leaves a store that is correct,
-        merely slower, until rebucket() is re-run: tables still flagged
-        pending are rewritten again even when their count is unchanged."""
+        together with a pending flag, then each affected table is
+        rewritten (compact's augment recomputes buckets from the new
+        count), then the flag clears. A crash at any point leaves the
+        flag set, and the rewrite is finished at the next writer entry
+        (``rollback_uncommitted``), which calls rebucket() again: tables
+        still flagged pending are rewritten again even when their count
+        is unchanged."""
         targets: Dict[str, int] = {
             name: int(self._meta[f"{name}_buckets"])
             for name in self._meta.get("rebucket_pending") or []
@@ -1078,7 +1074,22 @@ class CrawlStore:
         return [self.read_manifest(k) for k in range(self.last_committed() + 1)]
 
     def rollback_uncommitted(self) -> None:
+        """The writer entry (crawl resume, each stream batch, recrawl
+        invalidation). Drops what a crash left uncommitted (torn
+        superstep dirs, staged swaps), then restores the hash-bucketed
+        layout of ``seen`` and ``dims`` that every writer assumes: a
+        rebucket a crash interrupted is finished, and a table still
+        holding flat (pre-bucketed-layout) files is compacted. A no-op
+        on a store that is already whole."""
         self.backend.rollback_uncommitted()
+        self.rebucket()
+        flat = [
+            name
+            for name in ("seen", "dims")
+            if not self.backend.bucketed_layout_ok(name)
+        ]
+        if flat:
+            self.compact(tables=flat)
 
     def _manifest_path(self, superstep: int) -> str:
         # exposed for crash-simulation tests (delete the marker)
@@ -1137,24 +1148,16 @@ class CrawlStore:
             augment = None
             if name == "routed":
                 schema, pb = ROUTED_SCHEMA, ["record_type"]
-            elif name == "dims":
-                # preserve the kind + hash-bucket layout (bucket is
-                # derived, so recompute it through the rewrite with the
-                # STORE's configured count — this is also how rebucket()
-                # and legacy flat-layout repair materialize)
-                nb = self.dims_buckets
-                schema, pb = _DELTA_SCHEMAS[name], ["kind", "bucket"]
-                augment = lambda df, nb=nb: df.withColumn(  # noqa: E731
-                    "bucket",
-                    F.pmod(F.xxhash64("kind", "key"), F.lit(nb)),
-                )
             else:
-                # seen: preserve the hash-bucketed layout through the
-                # rewrite (bucket is derived, so recompute it)
-                nb = self.seen_buckets
-                schema, pb = _DELTA_SCHEMAS[name], ["bucket"]
-                augment = lambda df, nb=nb: df.withColumn(  # noqa: E731
-                    "bucket", F.pmod(F.col("url_hash"), F.lit(nb))
+                # seen, dims: preserve the hash-bucketed layout (bucket
+                # is derived, so recompute it through the rewrite with
+                # the STORE's configured count — this is also how
+                # rebucket() and legacy flat-layout repair materialize)
+                schema = _DELTA_SCHEMAS[name]
+                pb = ["kind", "bucket"] if name == "dims" else ["bucket"]
+                bucket = self.bucket_expr(name)
+                augment = lambda df, b=bucket: df.withColumn(  # noqa: E731
+                    "bucket", b
                 )
             results[name] = self.backend.compact_table(
                 name, schema, partition_by=pb, augment=augment

@@ -15,7 +15,10 @@ frontier log) and the engine keeps crawling without a driver loop.
 Consistency story, identical to batch resume:
 * cross-batch dedup state IS the store's committed seen table (plus
   its Bloom/bucketed layouts) — no separate streaming state store to
-  drift out of sync;
+  drift out of sync. Each batch enters through the store's writer
+  entry (``rollback_uncommitted``), which also restores the
+  hash-bucketed seen layout (an interrupted rebucket, a legacy flat
+  store), so every batch writes and probes one layout;
 * exactly-once per superstep: deltas land under ``superstep=K`` first,
   the manifest commit is last. A batch that crashes mid-write leaves
   no manifest; on restart Structured Streaming replays the batch,
@@ -48,7 +51,7 @@ from website_indexer_spark.operators.policy import CrawlPolicy
 from website_indexer_spark.plans.crawl import (
     BLOOM_AUTO_SEEN_THRESHOLD,
     BROADCAST_FETCH_THRESHOLD,
-    DELTA_WRITE_SINGLE_TASK_MAX,
+    bucketed_write,
     fetch_sim_join,
     harvest_candidates,
     maintain_bloom,
@@ -84,7 +87,8 @@ def crawl_stream_step(
     def step(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         store = CrawlStore(spark, out_dir)
-        store.rollback_uncommitted()  # replayed batch: drop torn delta
+        # replayed batch: drop the torn delta; restore the bucketed layout
+        store.rollback_uncommitted()
         k = store.last_committed() + 1
 
         # cumulative requested count from the manifest counters — the
@@ -104,21 +108,15 @@ def crawl_stream_step(
         # the batch driver's threshold switch (VERDICT r3 next #4):
         # broadcastable batches take the broadcast anti-join; above the
         # threshold the storage-partitioned bucketed probe (no seen-side
-        # scan or exchange) when the layout supports it, else the exact
-        # scanned fallback
-        seen_bucketed_ok = store.bucketed_path_available("seen")
+        # scan or exchange)
         if n_in <= BROADCAST_FETCH_THRESHOLD:
             wave = anti_join_seen(batch_df, seen, bloom)
-        elif seen_bucketed_ok:
+        else:
             wave = anti_join_seen_bucketed(
                 batch_df,
                 store.seen_bucket_files(),
                 store.seen_buckets,
                 bloom=bloom,
-            )
-        else:
-            wave = anti_join_seen(
-                batch_df, seen, bloom, broadcast_frontier=False
             )
         # within-batch dedup: first observer in BFS order wins
         w = Window.partitionBy("url").orderBy("depth", "discovery_seq")
@@ -156,26 +154,16 @@ def crawl_stream_step(
                     k,
                     partition_by=["record_type"],
                 )
-                # same single-task/parallel switch as the batch driver
-                # (VERDICT r3 #2): one file per bucket either way. A
-                # legacy flat store keeps receiving flat deltas (mixed
-                # flat/bucketed supersteps break partition discovery)
-                # until compact() rewrites the layout.
-                if seen_bucketed_ok:
-                    seen_out = seen_delta.withColumn(
-                        "bucket",
-                        F.pmod(F.col("url_hash"), F.lit(store.seen_buckets)),
-                    )
-                    if n > DELTA_WRITE_SINGLE_TASK_MAX:
-                        seen_out = seen_out.repartition(
-                            store.seen_buckets, F.col("bucket")
-                        )
-                    else:
-                        seen_out = seen_out.coalesce(1)
-                    seen_pb = ["bucket"]
-                else:
-                    seen_out, seen_pb = seen_delta.coalesce(1), None
-                store.write_delta("seen", seen_out, k, partition_by=seen_pb)
+                # the batch driver's bucketed seen write (VERDICT r3 #2)
+                store.write_delta(
+                    "seen",
+                    bucketed_write(
+                        seen_delta, store.bucket_expr("seen"),
+                        store.seen_buckets, n,
+                    ),
+                    k,
+                    partition_by=["bucket"],
+                )
                 if emit_discovered is not None:
                     accepted = harvest_candidates(
                         extracted, start_host, pol, robots, depth_cap
