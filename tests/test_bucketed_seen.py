@@ -19,6 +19,7 @@ from tests.test_crawl import _rich_site
 from website_indexer_spark.operators import frontier as FR
 from website_indexer_spark.plans import crawl as C
 from website_indexer_spark.sources.tables import (
+    DIMS_BUCKETS,
     SEEN_BUCKETS,
     SEEN_SCHEMA,
     ParquetManifestBackend,
@@ -155,7 +156,9 @@ def test_forced_bucketed_path_crawl_matches_oracle(spark, tmp_path, monkeypatch)
     assert pages == set(oracle.pages)
     seen = {r["url"] for r in result.store.read_all("seen").collect()}
     assert seen == set(oracle.requested)
-    # the layout really is bucketed
+    # the layout really is bucketed, grown to SEEN_BUCKETS at
+    # superstep 0 (a history of 1 exceeds the threshold -1)
+    assert result.store.seen_buckets == SEEN_BUCKETS
     files = result.store.seen_bucket_files()
     assert files and all(
         f"bucket={b}" in p for b, ps in files.items() for p in ps
@@ -291,6 +294,9 @@ def test_forced_bucketed_dims_crawl_matches_default(spark, tmp_path, monkeypatch
         a = sorted(r[0] for r in base.store.read_all(view).collect())
         b = sorted(r[0] for r in forced.store.read_all(view).collect())
         assert a == b, view
-    # and the dims layout really is bucketed
+    # and the dims layout really is bucketed, grown to DIMS_BUCKETS
+    # (the default crawl stays at one bucket)
+    assert base.store.dims_buckets == 1
+    assert forced.store.dims_buckets == DIMS_BUCKETS
     files = forced.store.backend.bucketed_files("dims")
     assert files and all("bucket=" in p for ps in files.values() for p in ps)

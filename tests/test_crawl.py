@@ -205,6 +205,41 @@ def test_spark_crawl_max_pages(spark, tmp_path):
     _assert_equivalent(result, result.store, oracle)
 
 
+@pytest.mark.parametrize("max_pages,cutoffs", [(4, 1), (9, 0), (20, 0)])
+def test_max_pages_cutoff_only_where_budget_ends(
+    spark, tmp_path, monkeypatch, max_pages, cutoffs
+):
+    """A page budget alone runs the ordered cutoff only in the
+    superstep where it ends: the fan site's waves are 1, 5 and 3 URLs,
+    so max_pages=4 cuts superstep 1, while 9 (the last wave fills the
+    budget exactly) and 20 never cut. Either way the requested set and
+    each superstep's requested counter equal the oracle's, whose BFS
+    level is the superstep."""
+    import collections
+
+    from website_indexer_spark.plans import crawl as C
+
+    web, seed = fan_site()
+    oracle = oracle_crawl(web, seed, max_pages=max_pages)
+    selects = []
+    real = C.politeness_select
+
+    def counting(*args, **kwargs):
+        selects.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(C, "politeness_select", counting)
+    result = _spark_crawl(spark, tmp_path, web, seed, max_pages=max_pages)
+    assert len(selects) == cutoffs
+    assert sorted(
+        r["url"] for r in result.store.read_all("seen").collect()
+    ) == sorted(oracle.requested)
+    per_level = collections.Counter(depth for depth, _url in oracle.visit_order)
+    assert [m["counters"]["requested"] for m in result.store.manifests()] == [
+        per_level[d] for d in sorted(per_level)
+    ]
+
+
 @pytest.mark.slow
 def test_spark_crawl_resume(spark, tmp_path):
     """Kill-and-resume: delete the last superstep's manifest, resume,

@@ -18,6 +18,7 @@ from website_indexer_spark.plans import crawl as C
 from website_indexer_spark.sources.tables import (
     FRONTIER_SCHEMA,
     ROUTED_SCHEMA,
+    SEEN_BUCKETS,
     CrawlStore,
 )
 from website_indexer_spark.streaming.crawl_stream import run_crawl_stream
@@ -130,6 +131,9 @@ def test_stream_forced_bucketed_seen_path_matches_batch(
     )
 
     monkeypatch.setattr(CS, "BROADCAST_FETCH_THRESHOLD", -1)
+    # grow the new store's one-bucket seen table at its first batch, so
+    # the bucketed probe runs at SEEN_BUCKETS
+    monkeypatch.setattr(C, "HISTORY_BROADCAST_THRESHOLD", -1)
     # the pre-load check reads the stream module's imported copy; the
     # shared maintain_bloom helper reads plans.crawl's global — patch
     # both so the Bloom turns on from the first batch
@@ -153,6 +157,7 @@ def test_stream_forced_bucketed_seen_path_matches_batch(
     stream_seen = {r["url"] for r in sstore.read_all("seen").collect()}
     assert stream_seen == batch_seen
     # the layout really is bucketed and the Bloom stripes were written
+    assert sstore.seen_buckets == SEEN_BUCKETS
     files = sstore.seen_bucket_files()
     assert files and all(
         f"bucket={b}" in p for b, ps in files.items() for p in ps

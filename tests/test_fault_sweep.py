@@ -3,8 +3,10 @@
 ``os.rename``, ``os.replace`` and ``shutil.rmtree`` are made to raise on
 their n-th call under the store being rewritten, for every n that the
 uninterrupted operation reaches: compaction, rebucket, recrawl
-invalidation, and a resumed crawl superstep whose Bloom prefilter
-outgrows its capacity and is rebuilt. After each crash the store goes
+invalidation, a resumed crawl superstep whose Bloom prefilter
+outgrows its capacity and is rebuilt, and a resumed superstep whose
+history crosses HISTORY_BROADCAST_THRESHOLD and grows the seen/dims
+layout. After each crash the store goes
 back through its writer entry point and the result must equal the
 uninterrupted run's. Each sweep asserts that it found injection points,
 so it cannot pass vacuously. The crash cases of one sweep run three at
@@ -20,13 +22,20 @@ from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 import pytest
+from pyspark.sql import functions as F
 
 from tests.conftest import web_dict_to_df
 from tests.oracle_crawler import crawl as oracle_crawl, fan_site
 from website_indexer_spark.operators import frontier as FR
 from website_indexer_spark.operators.recrawl import recrawl_invalidate
+from website_indexer_spark.plans import crawl as C
 from website_indexer_spark.plans.crawl import run_crawl
-from website_indexer_spark.sources.tables import ROUTED_SCHEMA, CrawlStore
+from website_indexer_spark.sources.tables import (
+    DIMS_BUCKETS,
+    ROUTED_SCHEMA,
+    SEEN_BUCKETS,
+    CrawlStore,
+)
 
 
 class InjectedCrash(Exception):
@@ -241,3 +250,56 @@ def test_sweep_crawl_bloom_rebuild(spark, faults, monkeypatch, tmp_path, site):
 
     _sweep(tmp_path, site["base"], calls, case)
     assert "rename .swap/0" in calls  # the rebuild was swapped in
+
+
+def test_sweep_crawl_layout_growth(spark, faults, monkeypatch, tmp_path, site):
+    """The resumed superstep takes the seen history past
+    HISTORY_BROADCAST_THRESHOLD, so it rebuckets the one-bucket seen
+    and dims tables before reading them; a crash at any point of the
+    resume, then another resume, must request exactly the oracle's
+    URLs and leave the grown layout."""
+    base = CrawlStore(spark, site["base"])
+    assert (base.seen_buckets, base.dims_buckets) == (1, 1)
+    committed = sum(m["counters"]["requested"] for m in base.manifests())
+    monkeypatch.setattr(C, "HISTORY_BROADCAST_THRESHOLD", committed)
+    want = sorted(oracle_crawl(site["web"], site["seed"]).requested)
+
+    def resume(root):
+        run_crawl(spark, site["web_df"], site["seed"], root, resume=True)
+
+    def grown(root):
+        store = CrawlStore(spark, root)
+        seen = sorted(r["url"] for r in store.read_all("seen").collect())
+        return seen, store._meta
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(site["base"], clean)
+    with faults.watch(clean) as calls:
+        resume(clean)
+    done = (
+        want,
+        {
+            "layout_version": 2,
+            "seen_buckets": SEEN_BUCKETS,
+            "dims_buckets": DIMS_BUCKETS,
+        },
+    )
+    assert grown(clean) == done
+
+    def case(root, n, call):
+        with faults.watch(root, crash_at=n):
+            with pytest.raises(InjectedCrash):
+                resume(root)
+        resume(root)
+        assert grown(root) == done, call
+        # every row sits under the bucket its key hashes to at 8
+        store = CrawlStore(spark, root)
+        for name in ("seen", "dims"):
+            assert store.backend.bucketed_layout_ok(name), (name, call)
+            rows = spark.read.parquet(os.path.join(root, name))
+            misplaced = rows.filter(F.col("bucket") != store.bucket_expr(name))
+            assert misplaced.count() == 0, (name, call)
+
+    _sweep(tmp_path, site["base"], calls, case)
+    assert "replace store_meta.json.tmp" in calls  # the growth ran
+    print(f"layout-growth sweep: {len(calls)} injection points")

@@ -21,6 +21,8 @@ from website_indexer_spark.operators import frontier as FR
 from website_indexer_spark.operators.recrawl import recrawl_invalidate
 from website_indexer_spark.plans import crawl as C
 from website_indexer_spark.sources.tables import (
+    DIMS_BUCKETS,
+    SEEN_BUCKETS,
     SEEN_SCHEMA,
     CrawlStore,
 )
@@ -98,15 +100,20 @@ def test_bucket_count_mismatch_raises(spark, tmp_path):
         CrawlStore(spark, root, seen_buckets=7)
     with pytest.raises(ValueError, match="dims_buckets mismatch"):
         CrawlStore(spark, root, dims_buckets=7)
-    # matching explicit counts are fine
-    s = CrawlStore(spark, root, seen_buckets=5, dims_buckets=8)
+    # matching explicit counts are fine (dims kept the new store's 1)
+    s = CrawlStore(spark, root, seen_buckets=5, dims_buckets=1)
     assert s.seen_buckets == 5
 
 
 def test_legacy_store_without_meta(spark, tmp_path):
     """A committed store that predates store_meta.json reopens with the
     module defaults (its layout's counts); a differing explicit count
-    raises instead of silently mis-bucketing."""
+    raises instead of silently mis-bucketing. Such a store was laid
+    out at SEEN_BUCKETS/DIMS_BUCKETS, so the crawl writes it there."""
+    CrawlStore(
+        spark, str(tmp_path / "l"), seen_buckets=SEEN_BUCKETS,
+        dims_buckets=DIMS_BUCKETS,
+    )
     result = _crawl(spark, tmp_path, "l")
     root = result.store.root
     os.remove(os.path.join(root, "store_meta.json"))
@@ -161,7 +168,9 @@ def test_flat_legacy_crawl_resume_repairs_layout(spark, tmp_path, monkeypatch):
     web, seed = fan_site()
     oracle = oracle_crawl(web, seed)
     root = str(tmp_path / "r")
-    # phase 1: full crawl, then simulate a crash after superstep last-1
+    # phase 1: full crawl at the legacy layout's counts (the meta is
+    # removed below), then simulate a crash after superstep last-1
+    CrawlStore(spark, root, seen_buckets=SEEN_BUCKETS, dims_buckets=DIMS_BUCKETS)
     first = C.run_crawl(spark, web_dict_to_df(spark, web), seed, root)
     store = first.store
     last = store.last_committed()
@@ -260,7 +269,8 @@ def _pending_store(spark, tmp_path, name, lost_supersteps):
     """A fan_site crawl whose last ``lost_supersteps`` manifests are
     gone (a crash before their commit) and whose meta reads as a
     rebucket that crashed right after its meta write: seen_buckets=5
-    while the files sit at 8, seen and dims flagged pending."""
+    while the files sit at the new store's one bucket, seen and dims
+    flagged pending."""
     store = _crawl(spark, tmp_path, name).store
     last = store.last_committed()
     assert last >= lost_supersteps
@@ -345,11 +355,13 @@ def test_parallel_delta_write_above_threshold(spark, tmp_path, monkeypatch):
     deltas are written by one task PER BUCKET (repartition by the
     bucket column) instead of coalesce(1) — same bucket=dir layout,
     multiple distinct writer tasks — and the layout still drives an
-    exact bucketed anti-join and an oracle-identical crawl."""
+    exact bucketed anti-join and an oracle-identical crawl. The store
+    is created at the grown counts: one bucket is one task either way."""
     monkeypatch.setattr(C, "DELTA_WRITE_SINGLE_TASK_MAX", -1)
     web, seed = fan_site()
     oracle = oracle_crawl(web, seed)
     root = str(tmp_path / "pw")
+    CrawlStore(spark, root, seen_buckets=SEEN_BUCKETS, dims_buckets=DIMS_BUCKETS)
     result = C.run_crawl(spark, web_dict_to_df(spark, web), seed, root)
     assert {r["url"] for r in result.store.read_all("pages").collect()} == set(
         oracle.pages
@@ -381,7 +393,7 @@ def test_meta_file_contents(spark, tmp_path):
     assert meta == {
         "layout_version": 2,
         "seen_buckets": 12,
-        "dims_buckets": 8,
+        "dims_buckets": 1,
     }
 
 
@@ -419,3 +431,119 @@ def test_manifest_records_per_partition_lineage(spark, tmp_path):
     store.compact()
     after = [json.dumps(m, sort_keys=True) for m in store.manifests()]
     assert before == after  # lineage log is immutable history
+
+
+def _manifest_buckets(manifest, table):
+    """The bucket value of every file a superstep's manifest lists for
+    ``table`` (dims keyed by kind)."""
+    out = []
+    for rel in manifest["files"].get(table, {}):
+        parts = dict(seg.split("=", 1) for seg in rel.split(os.sep)[:-1])
+        out.append((parts.get("kind"), int(parts["bucket"])))
+    return out
+
+
+def test_fresh_crawl_writes_one_bucket(spark, tmp_path):
+    """Below HISTORY_BROADCAST_THRESHOLD the crawl never reads a bucket
+    dir, so a new store stays at one bucket: one seen file per
+    superstep, at most one dims file per kind."""
+    result = _crawl(spark, tmp_path, "one")
+    store = result.store
+    assert (store.seen_buckets, store.dims_buckets) == (1, 1)
+    manifests = store.manifests()
+    assert len(manifests) == result.supersteps
+    for m in manifests:
+        assert _manifest_buckets(m, "seen") == [(None, 0)], m["superstep"]
+        dims = _manifest_buckets(m, "dims")
+        assert {b for _k, b in dims} <= {0}, m["superstep"]
+        assert len(dims) == len({k for k, _b in dims}) <= 2, m["superstep"]
+    with open(os.path.join(store.root, "store_meta.json")) as f:
+        assert json.load(f) == {
+            "layout_version": 2, "seen_buckets": 1, "dims_buckets": 1,
+        }
+
+
+def test_growth_at_history_threshold(spark, tmp_path, monkeypatch):
+    """The superstep whose seen and dims history first exceeds
+    HISTORY_BROADCAST_THRESHOLD grows both tables to SEEN_BUCKETS/
+    DIMS_BUCKETS before reading them, so the bucketed probes it and
+    every later superstep run read the grown layout. The crawl equals
+    the one that never grew and the oracle."""
+    web, seed = fan_site()
+    oracle = oracle_crawl(web, seed)
+    plain = _crawl(spark, tmp_path, "plain").store
+    assert (plain.seen_buckets, plain.dims_buckets) == (1, 1)
+
+    # superstep 0 requests 1 URL and commits the home page's dims keys;
+    # superstep 1's history (6 requested, >= 6 dims keys) crosses 3
+    monkeypatch.setattr(C, "HISTORY_BROADCAST_THRESHOLD", 3)
+    monkeypatch.setattr(C, "BROADCAST_FETCH_THRESHOLD", -1)
+    probes = []
+
+    def spy(name, real):
+        def wrapped(*args, **kwargs):
+            probes.append((name, args[2]))
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(C, name, wrapped)
+
+    spy("anti_join_seen_bucketed", C.anti_join_seen_bucketed)
+    spy("dim_upsert_delta_bucketed", C.dim_upsert_delta_bucketed)
+    grown = _crawl(spark, tmp_path, "grown").store
+    assert (grown.seen_buckets, grown.dims_buckets) == (SEEN_BUCKETS, DIMS_BUCKETS)
+    assert "rebucket_pending" not in grown._meta
+    assert probes and set(probes) == {
+        ("anti_join_seen_bucketed", SEEN_BUCKETS),
+        ("dim_upsert_delta_bucketed", DIMS_BUCKETS),
+    }
+    # the lineage shows where it grew: superstep 0 wrote one bucket,
+    # superstep 1 already wrote at the grown count
+    m0, m1 = grown.read_manifest(0), grown.read_manifest(1)
+    assert _manifest_buckets(m0, "seen") == [(None, 0)]
+    assert {b for _k, b in _manifest_buckets(m0, "dims")} == {0}
+    assert len({b for _k, b in _manifest_buckets(m1, "seen")}) > 1
+    assert len({b for _k, b in _manifest_buckets(m1, "dims")}) > 1
+    _assert_bucketed_at_meta_count(spark, grown.root)
+
+    def rows(store, name):
+        # page timestamps are wall-clock for these NULL-warc_ts rows
+        df = store.read_all(name)
+        if "timestamp" in df.columns:
+            df = df.drop("timestamp")
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    assert rows(grown, "pages") == rows(plain, "pages")
+    assert rows(grown, "seen") == rows(plain, "seen")
+    assert rows(grown, "dims") == rows(plain, "dims")
+    assert set(_seen_urls(grown)) == set(oracle.requested)
+    assert {r["url"] for r in grown.read_all("pages").collect()} == set(
+        oracle.pages
+    )
+
+
+def test_stream_growth_at_history_threshold(spark, tmp_path, monkeypatch):
+    """crawl_stream_step grows a one-bucket seen table in the first
+    batch whose history, its own rows counted in, exceeds
+    HISTORY_BROADCAST_THRESHOLD, and lands the batch crawl's seen
+    rows."""
+    web, seed = fan_site()
+    web_df = web_dict_to_df(spark, web)
+    batch = _crawl(spark, tmp_path, "batch").store
+    monkeypatch.setattr(C, "HISTORY_BROADCAST_THRESHOLD", 3)
+    root = str(tmp_path / "stream")
+    step = crawl_stream_step(web_df, root, seed)
+    waves = [C._seed_frontier(spark, seed, "fan.test")] + [
+        batch.read_frontier(k) for k in range(batch.last_committed())
+    ]
+    counts = []
+    for i, wave in enumerate(waves):
+        step(wave, i)
+        counts.append(CrawlStore(spark, root).seen_buckets)
+    # committed history + batch rows: 0 + 1, 1 + 5, 6 + 3
+    assert counts == [1, SEEN_BUCKETS, SEEN_BUCKETS]
+    store = CrawlStore(spark, root)
+    assert store.dims_buckets == 1
+    assert _seen_urls(store) == _seen_urls(batch)
+    assert store.backend.bucketed_layout_ok("seen")
+    df = spark.read.parquet(os.path.join(root, "seen"))
+    assert df.filter(F.col("bucket") != store.bucket_expr("seen")).count() == 0

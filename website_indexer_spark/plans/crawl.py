@@ -54,9 +54,12 @@ always hash-bucketed: a resumed run first goes through the store's
 writer entry (``CrawlStore.rollback_uncommitted``), which finishes an
 interrupted rebucket and compacts a legacy flat table, so each
 superstep picks only among the broadcast tiers and the storage-
-partitioned probe. A crash anywhere in the loop records status=Failed
-+ failure_message on the crawl record (reference
-crawler/wpull/crawler.py:16-25) before re-raising.
+partitioned probe. A new store writes them at one bucket, and the
+superstep whose history leaves the broadcast tier grows them
+(``grow_history_layout``) before the first bucketed probe. A crash
+anywhere in the loop records status=Failed + failure_message on the
+crawl record (reference crawler/wpull/crawler.py:16-25) before
+re-raising.
 """
 
 from __future__ import annotations
@@ -100,12 +103,15 @@ from website_indexer_spark.operators.policy import (
     robots_filter,
 )
 from website_indexer_spark.sources.tables import (
+    DIMS_BUCKETS,
     FRONTIER_SCHEMA,
+    SEEN_BUCKETS,
     CrawlStore,
     build_spark,
     commit_staged_swap,
     load_web_pages,
     local_frame,
+    partition_counts,
     recover_staged_swap,
     swap_staging_dir,
 )
@@ -181,6 +187,31 @@ def bucketed_write(
     if est_rows > DELTA_WRITE_SINGLE_TASK_MAX:
         return out.repartition(n_buckets, F.col("bucket"))
     return out.coalesce(1)
+
+
+def grow_history_layout(
+    store: CrawlStore, seen_rows: int, dims_rows: Optional[int] = None
+) -> None:
+    """Rebucket a ``seen`` (``dims``) table still at one bucket to
+    SEEN_BUCKETS (DIMS_BUCKETS) the first time its history of
+    ``seen_rows`` (``dims_rows``) rows exceeds
+    HISTORY_BROADCAST_THRESHOLD: from there on the crawl probes the
+    table's buckets instead of broadcasting it whole, and below it one
+    bucket writes the fewest files. Goes through the crash-safe
+    ``CrawlStore.rebucket``. Any other count was chosen on purpose
+    (at store creation or by ``rebucket``) and is left alone. Call it
+    before the history is read: the rewrite replaces the superstep
+    dirs a DataFrame read earlier would list."""
+
+    def grown(n_buckets: int, rows: Optional[int], to: int):
+        crossed = rows is not None and rows > HISTORY_BROADCAST_THRESHOLD
+        return to if n_buckets == 1 and crossed else None
+
+    store.rebucket(
+        seen_buckets=grown(store.seen_buckets, seen_rows, SEEN_BUCKETS),
+        dims_buckets=grown(store.dims_buckets, dims_rows, DIMS_BUCKETS),
+    )
+
 
 # Above this wave size the shared extraction cache is materialized by
 # ONE full-parallelism job BEFORE the concurrent delta writes. A task
@@ -667,11 +698,15 @@ def run_crawl(
             # queue never crosses an exchange. Below it (or for the
             # in-memory seed wave) the exact window path runs; both
             # produce the identical (depth, discovery_seq)-ordered
-            # per-host selection.
+            # per-host selection. A page budget alone throttles only the
+            # superstep where it ends: a frontier that fits it
+            # (frontier_count is exact, from the footers) is selected
+            # whole, with no cutoff job.
             throttled = (
                 host_budget is not None
                 or host_budgets is not None
                 or bool(max_pages)
+                and frontier_count > max_pages - requested_total
             )
             selection_cache = None
             # per-host Crawl-delay overrides (policy.crawl_delay_budgets)
@@ -729,6 +764,9 @@ def run_crawl(
                     selection_cache.unpersist()
                 break
             requested_total += n_selected
+            # the seen/dims history leaves the broadcast tier: grow a
+            # one-bucket table before anything below reads it
+            grow_history_layout(store, requested_total, dims_total)
 
             # --- seen delta: every selected URL is now "requested" ------
             seen_delta = selected.select(
@@ -1038,15 +1076,15 @@ def run_crawl(
                 cached.unpersist()
             t = _mark("write-deltas", t)
 
-            # counters from parquet footers — metadata only, no jobs
-            counts = store.footer_counts("routed", k)
+            # counters from parquet footers — metadata only, no jobs;
+            # the same one walk is the manifest's file list
+            files = store.delta_files(k)
+            counts = partition_counts(files.get("routed", {}))
             n_pages = counts.get("page", 0)
             n_errors = counts.get("error", 0)
             n_redirects = counts.get("redirect", 0)
-            n_enqueued = sum(store.footer_counts("frontier", k).values())
-            dim_counts = (
-                store.footer_counts("dims", k) if maintain_dims else {}
-            )
+            n_enqueued = sum(files.get("frontier", {}).values())
+            dim_counts = partition_counts(files.get("dims", {}))
             t = _mark("count-footers", t)
             # dense numbering: the delta occupies [seq_base, seq_base+n)
             if deferred is None:
@@ -1076,6 +1114,7 @@ def run_crawl(
                     "components_new": dim_counts.get("component", 0),
                     "links_new": dim_counts.get("link", 0),
                 },
+                files,
             )
 
             dims_total += dim_counts.get("component", 0) + dim_counts.get(

@@ -102,9 +102,12 @@ def main() -> None:  # pragma: no cover - CLI veneer
     k.add_argument("name")
     rb = sub.add_parser(
         "rebucket",
-        help="change a crawl store's physical bucket count(s) — a "
-        "crash-safe compaction rewrite (meta-first pending flag; an "
-        "interrupted rewrite is finished at the next writer entry)",
+        help="change a crawl store's physical seen/dims bucket "
+        "count(s) — a crash-safe compaction rewrite (meta-first "
+        "pending flag; an interrupted rewrite is finished at the next "
+        "writer entry). A new store starts at 1 and a crawl grows it "
+        "to 8 once its history leaves the broadcast tier; a count "
+        "set here other than 1 is never changed by a crawl",
     )
     rb.add_argument("name")
     rb.add_argument("--seen-buckets", type=int)

@@ -7,8 +7,9 @@ with a JSON manifest as the atomic commit marker:
     <root>/
       crawl.json                      # run manifest (config, status)
       routed/superstep=K/record_type=page|error|redirect/*.parquet
-      seen/superstep=K/...            # delta of newly-requested urls
-      dims/superstep=K/kind=component|link/  # MERGE-new keys only
+      store_meta.json                 # seen/dims bucket counts
+      seen/superstep=K/bucket=B/      # delta of newly-requested urls
+      dims/superstep=K/kind=component|link/bucket=B/  # MERGE-new keys
       frontier/superstep=K/...        # FULL next frontier after step K
       manifests/K.json                # commit marker + counters
       bloom/bucket=B.bin              # striped persistent Bloom filter
@@ -86,29 +87,40 @@ BUDGETS_SCHEMA = T.StructType(
 )
 
 # The seen table's physical layout is hash-bucketed by url_hash
-# (bucket = pmod(url_hash, SEEN_BUCKETS) as a partition dir under each
-# superstep delta) so the above-broadcast-threshold anti-join can run
+# (bucket = pmod(url_hash, n) as a partition dir under each superstep
+# delta) so the above-broadcast-threshold anti-join can run
 # storage-partitioned — each probe task point-reads exactly its
 # bucket's files, no seen-side scan or exchange (operators/frontier.py
 # exclude_keys_bucketed). Iceberg analogue: bucket(N, url_hash)
-# partition transform. 8 buckets keeps local file counts sane; a
-# deployment sizes this so one bucket's hash column fits a task
-# (~4096 buckets at 10^10 seen keys = ~20 MB/task).
+# partition transform.
 #
-# These module values are only the DEFAULTS for newly created stores:
-# the layout is physical, so the effective counts are store-level
-# config persisted in <root>/store_meta.json at creation, validated on
-# open (a mismatching explicit count raises), and threaded through the
-# crawl/compaction via CrawlStore.seen_buckets / .dims_buckets.
-# Changing a live store's count = a compaction rewrite
-# (CrawlStore.rebucket); a crash mid-rewrite leaves a pending flag in
-# the meta, and the next writer entry (rollback_uncommitted) finishes
-# the rewrite before any probe reads the buckets.
+# A new store starts at ONE bucket per table: below
+# plans/crawl.py HISTORY_BROADCAST_THRESHOLD the crawl broadcasts the
+# whole history and never reads a bucket dir, so more buckets would
+# only multiply the files every superstep writes. SEEN_BUCKETS is the
+# count the crawl grows a one-bucket table to (plans/crawl.py
+# grow_history_layout) the first time its history crosses that
+# threshold, and the count a store without store_meta.json (written
+# before the meta existed) was laid out with. A deployment sizes the
+# grown count so one bucket's hash column fits a task (~4096 buckets
+# at 10^10 seen keys = ~20 MB/task) and sets it at creation
+# (CrawlStore(seen_buckets=...)) or with rebucket(); the crawl never
+# changes a count other than one.
+#
+# The effective counts are store-level config persisted in
+# <root>/store_meta.json at creation, validated on open (a mismatching
+# explicit count raises), and threaded through the crawl/compaction
+# via CrawlStore.seen_buckets / .dims_buckets. Changing a live store's
+# count = a compaction rewrite (CrawlStore.rebucket); a crash
+# mid-rewrite leaves a pending flag in the meta, and the next writer
+# entry (rollback_uncommitted) finishes the rewrite before any probe
+# reads the buckets.
 SEEN_BUCKETS = 8
 
 # The dims table gets the same treatment, sub-partitioned
-# kind=K/bucket=B with bucket = pmod(xxhash64(kind, key), DIMS_BUCKETS)
-# — the hash only ROUTES rows to buckets; the storage-partitioned
+# kind=K/bucket=B with bucket = pmod(xxhash64(kind, key), n), starting
+# at one bucket and grown to DIMS_BUCKETS like seen — the hash only
+# ROUTES rows to buckets; the storage-partitioned
 # MERGE probe (operators/dims.py dim_upsert_delta_bucketed) decides
 # membership on the exact (kind, key) strings it reads from the
 # bucket's files, so hash collisions cannot drop a genuinely-new key.
@@ -200,6 +212,20 @@ _DELTA_SCHEMAS = {
 
 DELTA_TABLES = ("routed", "seen", "dims")
 SNAPSHOT_TABLES = ("frontier",)
+
+
+def partition_counts(files: Dict[str, int]) -> Dict[str, int]:
+    """Rows per FIRST partition-dir value (``record_type=page`` ->
+    ``page``; deeper levels such as the seen/dims hash buckets add up)
+    of one table's ``delta_files`` entry; key ``''`` holds unpartitioned
+    files' rows. The driver-side analogue of Iceberg snapshot
+    summaries: footer metadata only, no Spark job."""
+    counts: Dict[str, int] = {}
+    for rel, rows in files.items():
+        first = rel.split(os.sep)[0] if os.sep in rel else ""
+        part = first.split("=", 1)[1] if "=" in first else ""
+        counts[part] = counts.get(part, 0) + rows
+    return counts
 
 
 def local_frame(
@@ -357,10 +383,14 @@ class TableBackend:
         """One superstep's full snapshot of a SNAPSHOT_TABLES table."""
         raise NotImplementedError
 
-    def footer_counts(self, name: str, superstep: int) -> Dict[str, int]:
+    def delta_files(self, superstep: int) -> Dict[str, Dict[str, int]]:
+        """Every data file one superstep wrote, per table, with its
+        row count: {table: {relative/path: rows}}."""
         raise NotImplementedError
 
-    def commit(self, superstep: int, counters: dict) -> None:
+    def commit(
+        self, superstep: int, counters: dict, files: Optional[dict] = None
+    ) -> None:
         raise NotImplementedError
 
     def last_committed(self) -> int:
@@ -667,37 +697,14 @@ class ParquetManifestBackend(TableBackend):
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
 
-    def footer_counts(self, name: str, superstep: int) -> Dict[str, int]:
-        """Row counts for a just-written superstep delta straight from
-        the parquet footers — metadata reads, NO Spark job. Returns
-        counts per partition-directory value (e.g. record_type=page)
-        under the superstep dir; key '' holds unpartitioned files'
-        rows. The driver-side analogue of Iceberg snapshot summaries."""
-        import pyarrow.parquet as pq
-
-        base = os.path.join(self.root, name, f"superstep={superstep}")
-        counts: Dict[str, int] = {}
-        for dirpath, _dirs, files in os.walk(base):
-            rel = os.path.relpath(dirpath, base)
-            # key on the FIRST partition level (record_type / kind);
-            # deeper levels (the dims/seen hash buckets) aggregate up
-            part = ""
-            first = rel.split(os.sep)[0]
-            if "=" in first:
-                part = first.split("=", 1)[1]
-            for fname in files:
-                if not fname.endswith(".parquet"):
-                    continue
-                n = pq.ParquetFile(os.path.join(dirpath, fname)).metadata.num_rows
-                counts[part] = counts.get(part, 0) + n
-        return counts
-
     def delta_files(self, superstep: int) -> Dict[str, Dict[str, int]]:
         """Per-partition lineage for a just-written superstep: every
         data file each delta table produced, with its footer row count
         — {table: {relative/path.parquet: rows}}. Driver-side parquet
         metadata reads only (no Spark job), the manifest-file analogue
-        of an Iceberg snapshot's data-file list."""
+        of an Iceberg snapshot's data-file list. One walk serves both
+        the superstep's counters (``partition_counts``) and its
+        manifest (``commit(files=)``)."""
         import pyarrow.parquet as pq
 
         out: Dict[str, Dict[str, int]] = {}
@@ -718,14 +725,17 @@ class ParquetManifestBackend(TableBackend):
                 out[name] = files
         return out
 
-    def commit(self, superstep: int, counters: dict) -> None:
+    def commit(
+        self, superstep: int, counters: dict, files: Optional[dict] = None
+    ) -> None:
         """Write the manifest LAST — it is the commit marker. Torn
         superstep directories without a manifest are invisible to
         readers and get overwritten on resume.
 
         Besides the aggregate counters, the manifest records the
         superstep's per-partition lineage (``files``: every data file
-        written, with row counts — see delta_files). It is a lineage
+        written, with row counts — the caller's delta_files walk, or a
+        fresh one). It is a lineage
         LOG of what this commit produced, not the live file listing:
         compaction later rewrites old supersteps' data into one
         coalesced superstep without editing history (Iceberg keeps old
@@ -733,7 +743,7 @@ class ParquetManifestBackend(TableBackend):
         manifest = {
             "superstep": superstep,
             "counters": counters,
-            "files": self.delta_files(superstep),
+            "files": self.delta_files(superstep) if files is None else files,
         }
         write_json_atomic(
             self._manifest_path(superstep), manifest, indent=2, sort_keys=True
@@ -986,11 +996,13 @@ class CrawlStore:
                         f"open with the default, then rebucket()."
                     )
             seen_buckets, dims_buckets = SEEN_BUCKETS, DIMS_BUCKETS
+        # a new store starts at one bucket per table; the crawl grows
+        # it once the history leaves the broadcast tier
         self._write_meta(
             {
                 "layout_version": 2,
-                "seen_buckets": int(seen_buckets or SEEN_BUCKETS),
-                "dims_buckets": int(dims_buckets or DIMS_BUCKETS),
+                "seen_buckets": int(seen_buckets or 1),
+                "dims_buckets": int(dims_buckets or 1),
             }
         )
 
@@ -1053,16 +1065,18 @@ class CrawlStore:
     ) -> None:
         self.backend.write_delta(name, df, superstep, partition_by)
 
-    def footer_counts(self, name: str, superstep: int) -> Dict[str, int]:
-        return self.backend.footer_counts(name, superstep)
+    def delta_files(self, superstep: int) -> Dict[str, Dict[str, int]]:
+        return self.backend.delta_files(superstep)
 
     def seen_bucket_files(self) -> Dict[int, List[str]]:
         """The committed seen table's files grouped by hash bucket —
         the input of the storage-partitioned anti-join."""
         return self.backend.bucketed_files("seen")
 
-    def commit(self, superstep: int, counters: dict) -> None:
-        self.backend.commit(superstep, counters)
+    def commit(
+        self, superstep: int, counters: dict, files: Optional[dict] = None
+    ) -> None:
+        self.backend.commit(superstep, counters, files)
 
     def last_committed(self) -> int:
         return self.backend.last_committed()

@@ -53,13 +53,14 @@ from website_indexer_spark.plans.crawl import (
     BROADCAST_FETCH_THRESHOLD,
     bucketed_write,
     fetch_sim_join,
+    grow_history_layout,
     harvest_candidates,
     maintain_bloom,
     route_and_extract,
     routed_projection,
     with_effective_status,
 )
-from website_indexer_spark.sources.tables import CrawlStore
+from website_indexer_spark.sources.tables import CrawlStore, partition_counts
 
 
 def crawl_stream_step(
@@ -104,6 +105,11 @@ def crawl_stream_step(
             else None
         )
         n_in = batch_df.count()
+        # the batch driver's layout growth, on the seen history with
+        # this batch counted in as the driver counts its wave: a batch
+        # big enough for the bucketed probe below grows a one-bucket
+        # table first (the stream keeps no dims table)
+        grow_history_layout(store, requested_total + n_in)
         seen = store.read_all("seen").select("url_hash")
         # the batch driver's threshold switch (VERDICT r3 next #4):
         # broadcastable batches take the broadcast anti-join; above the
@@ -172,7 +178,8 @@ def crawl_stream_step(
                         accepted, seen.unionByName(delta_keys)
                     )
                     emit_discovered(accepted, k)
-                counts = store.footer_counts("routed", k)
+                files = store.delta_files(k)
+                counts = partition_counts(files.get("routed", {}))
                 store.commit(
                     k,
                     {
@@ -182,6 +189,7 @@ def crawl_stream_step(
                         "redirects": counts.get("redirect", 0),
                         "stream_batch_id": batch_id,
                     },
+                    files,
                 )
             finally:
                 extracted.unpersist()
