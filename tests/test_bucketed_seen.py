@@ -22,22 +22,23 @@ from website_indexer_spark.sources.tables import (
     DIMS_BUCKETS,
     SEEN_BUCKETS,
     SEEN_SCHEMA,
-    ParquetManifestBackend,
+    CrawlStore,
+    bucket_files,
 )
 
 
 def _write_seen_deltas(spark, tmp_path, deltas, n_buckets=4, commit_all=True):
     """Write each delta (list of (url_hash, url)) as one committed
-    superstep through the real backend, bucketed like the crawl does."""
-    backend = ParquetManifestBackend(spark, str(tmp_path / "store"))
+    superstep through the real store, bucketed like the crawl does."""
+    store = CrawlStore(spark, str(tmp_path / "store"))
     for k, rows in enumerate(deltas):
         df = spark.createDataFrame(rows, SEEN_SCHEMA).withColumn(
             "bucket", F.pmod(F.col("url_hash"), F.lit(n_buckets))
         )
-        backend.write_delta("seen", df.coalesce(1), k, partition_by=["bucket"])
+        store.write_delta("seen", df.coalesce(1), k, partition_by=["bucket"])
         if commit_all or k < len(deltas) - 1:
-            backend.commit(k, {})
-    return backend
+            store.commit(k, {})
+    return store
 
 
 def _hashed(spark, lo, hi, stride=1):
@@ -51,12 +52,12 @@ def test_exclude_keys_bucketed_matches_left_anti(spark, tmp_path):
     nb = 4
     d1 = [(r["url_hash"], r["url"]) for r in _hashed(spark, 0, 300, 3).collect()]
     d2 = [(r["url_hash"], r["url"]) for r in _hashed(spark, 1, 300, 3).collect()]
-    backend = _write_seen_deltas(spark, tmp_path, [d1, d2], n_buckets=nb)
-    files = backend.bucketed_files("seen")
+    store = _write_seen_deltas(spark, tmp_path, [d1, d2], n_buckets=nb)
+    files = store.bucketed_files("seen")
     assert set(files) <= set(range(nb)) and sum(map(len, files.values())) >= nb
 
     probe = _hashed(spark, 0, 400)
-    seen = backend.read_table("seen", SEEN_SCHEMA).select("url_hash")
+    seen = store.read_table("seen", SEEN_SCHEMA).select("url_hash")
     want = sorted(
         r["url"] for r in probe.join(seen, "url_hash", "left_anti").collect()
     )
@@ -70,14 +71,49 @@ def test_exclude_keys_bucketed_matches_left_anti(spark, tmp_path):
 def test_bucketed_files_sees_only_committed(spark, tmp_path):
     d1 = [(r["url_hash"], r["url"]) for r in _hashed(spark, 0, 50).collect()]
     d2 = [(r["url_hash"], r["url"]) for r in _hashed(spark, 50, 100).collect()]
-    backend = _write_seen_deltas(
+    store = _write_seen_deltas(
         spark, tmp_path, [d1, d2], n_buckets=4, commit_all=False
     )  # superstep 1 written but NOT committed
-    files = backend.bucketed_files("seen")
+    files = store.bucketed_files("seen")
     assert all("superstep=1" not in p for ps in files.values() for p in ps)
     # the uncommitted delta must not exclude anything
     probe = _hashed(spark, 50, 100)
     assert FR.exclude_keys_bucketed(probe, files, 4).count() == 50
+
+
+def test_bucket_files_nesting_sidecars_order(tmp_path):
+    """The one bucket-dir lister: nested kind=K/bucket=B dirs are
+    found, checksum sidecars, _SUCCESS markers, flat files and staged
+    .swap dirs are skipped, and each bucket's paths come back sorted
+    whatever order they were created in, across several trees."""
+    def touch(*parts):
+        path = tmp_path.joinpath(*parts)
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_bytes(b"")
+        return str(path)
+
+    s0, s1 = tmp_path / "superstep=0", tmp_path / "superstep=1"
+    want = {
+        0: [touch("superstep=0", "bucket=0", "part-1.parquet")],
+        2: sorted(
+            [
+                touch("superstep=1", "kind=link", "bucket=2", "part-b.parquet"),
+                touch("superstep=1", "kind=link", "bucket=2", "part-a.parquet"),
+                touch("superstep=1", "kind=component", "bucket=2", "part-c.parquet"),
+                touch("superstep=0", "bucket=2", "part-9.parquet"),
+            ]
+        ),
+    }
+    touch("superstep=1", "kind=link", "bucket=2", ".part-a.parquet.crc")
+    touch("superstep=1", "kind=link", "bucket=2", "_SUCCESS")
+    touch("superstep=0", "flat.parquet")
+    touch("superstep=0", ".swap", "0", "bucket=3", "part-0.parquet")
+    touch("superstep=1", "bucket=5", "._SUCCESS.crc")  # no parquet: absent
+
+    got = bucket_files(str(s1), str(s0))
+    assert got == want
+    assert list(got) == sorted(got)
+    assert bucket_files(str(tmp_path / "missing")) == {}
 
 
 def test_anti_join_seen_bucketed_full_composition(spark, tmp_path):
@@ -85,8 +121,8 @@ def test_anti_join_seen_bucketed_full_composition(spark, tmp_path):
     broadcast exclusion == the plain broadcast anti_join_seen."""
     nb = 4
     d1 = [(r["url_hash"], r["url"]) for r in _hashed(spark, 0, 200, 2).collect()]
-    backend = _write_seen_deltas(spark, tmp_path, [d1], n_buckets=nb)
-    seen = backend.read_table("seen", SEEN_SCHEMA).select("url_hash")
+    store = _write_seen_deltas(spark, tmp_path, [d1], n_buckets=nb)
+    seen = store.read_table("seen", SEEN_SCHEMA).select("url_hash")
     wave_delta = _hashed(spark, 200, 230).select("url_hash")
 
     bloom = FR.StripedBloom.create(str(tmp_path / "bl"), expected_keys=200)
@@ -106,7 +142,7 @@ def test_anti_join_seen_bucketed_full_composition(spark, tmp_path):
             r["url"]
             for r in FR.anti_join_seen_bucketed(
                 frontier,
-                backend.bucketed_files("seen"),
+                store.bucketed_files("seen"),
                 nb,
                 extra_exclude=wave_delta,
                 bloom=bl,
@@ -122,9 +158,9 @@ def test_bucketed_anti_join_plan_has_no_seen_side_exchange(spark, tmp_path):
     bucket) and zero scans of the seen table — the seen side is
     storage-partitioned, read per-bucket inside the probe tasks."""
     d1 = [(r["url_hash"], r["url"]) for r in _hashed(spark, 0, 100).collect()]
-    backend = _write_seen_deltas(spark, tmp_path, [d1], n_buckets=4)
+    store = _write_seen_deltas(spark, tmp_path, [d1], n_buckets=4)
     probe = _hashed(spark, 0, 1000)
-    plan_df = FR.exclude_keys_bucketed(probe, backend.bucketed_files("seen"), 4)
+    plan_df = FR.exclude_keys_bucketed(probe, store.bucketed_files("seen"), 4)
     import io
     from contextlib import redirect_stdout
 
@@ -172,16 +208,16 @@ def _write_dims_deltas(spark, tmp_path, deltas, n_buckets=4):
     from pyspark.sql import functions as F
     from website_indexer_spark.sources.tables import DIMS_SCHEMA
 
-    backend = ParquetManifestBackend(spark, str(tmp_path / "dstore"))
+    store = CrawlStore(spark, str(tmp_path / "dstore"))
     for k, rows in enumerate(deltas):
         df = spark.createDataFrame(rows, DIMS_SCHEMA).withColumn(
             "bucket", F.pmod(F.xxhash64("kind", "key"), F.lit(n_buckets))
         )
-        backend.write_delta(
+        store.write_delta(
             "dims", df.coalesce(1), k, partition_by=["kind", "bucket"]
         )
-        backend.commit(k, {})
-    return backend
+        store.commit(k, {})
+    return store
 
 
 def test_dim_upsert_bucketed_matches_plain(spark, tmp_path):
@@ -197,7 +233,7 @@ def test_dim_upsert_bucketed_matches_plain(spark, tmp_path):
     existing_rows = [("component", f"o-c{i}") for i in range(40)] + [
         ("link", f"/p{i}/") for i in range(40)
     ] + [("link", "weird\x00nul"), ("component", "ünïcødé")]
-    backend = _write_dims_deltas(
+    store = _write_dims_deltas(
         spark, tmp_path, [existing_rows[:30], existing_rows[30:]], n_buckets=4
     )
     incoming_rows = (
@@ -208,7 +244,7 @@ def test_dim_upsert_bucketed_matches_plain(spark, tmp_path):
         + [("link", "weird\x00nul2")]  # near-collision string: IS new
     )
     incoming = spark.createDataFrame(incoming_rows, DIMS_SCHEMA)
-    existing = backend.read_table("dims", DIMS_SCHEMA)
+    existing = store.read_table("dims", DIMS_SCHEMA)
     want = sorted(
         (r["kind"], r["key"])
         for r in dim_upsert_delta(existing, incoming, ["kind", "key"]).collect()
@@ -216,7 +252,7 @@ def test_dim_upsert_bucketed_matches_plain(spark, tmp_path):
     got = sorted(
         (r["kind"], r["key"])
         for r in dim_upsert_delta_bucketed(
-            incoming, backend.bucketed_files("dims"), 4
+            incoming, store.bucketed_files("dims"), 4
         ).collect()
     )
     assert got == want
@@ -236,19 +272,17 @@ def test_dim_upsert_bucketed_matches_plain(spark, tmp_path):
 
 
 def test_dim_upsert_bucketed_plan_single_exchange(spark, tmp_path):
-    """Default (pre_distinct): exactly two exchanges — the wave's
-    dropDuplicates (whose partial HashAggregate collapses web-fan-out
-    href repeats map-side, BEFORE any bytes cross the wire) plus the
-    bucket repartition; pre_distinct=False folds dedup into the probe
-    and keeps the single bucket exchange. Neither shape scans the dims
-    table or broadcasts anything."""
+    """Exactly two exchanges — the wave's dropDuplicates (whose
+    partial HashAggregate collapses web-fan-out href repeats map-side,
+    BEFORE any bytes cross the wire) plus the bucket repartition; the
+    plan neither scans the dims table nor broadcasts anything."""
     import io
     from contextlib import redirect_stdout
 
     from website_indexer_spark.operators.dims import dim_upsert_delta_bucketed
     from website_indexer_spark.sources.tables import DIMS_SCHEMA
 
-    backend = _write_dims_deltas(
+    store = _write_dims_deltas(
         spark, tmp_path, [[("link", f"/p{i}/") for i in range(20)]], 4
     )
     incoming = spark.createDataFrame(
@@ -261,18 +295,10 @@ def test_dim_upsert_bucketed_plan_single_exchange(spark, tmp_path):
             df.explain()
         return buf.getvalue()
 
-    out = dim_upsert_delta_bucketed(incoming, backend.bucketed_files("dims"), 4)
+    out = dim_upsert_delta_bucketed(incoming, store.bucketed_files("dims"), 4)
     plan = plan_of(out)
     assert plan.count("Exchange hashpartitioning") == 2, plan
     assert "partial_" in plan or "HashAggregate" in plan, plan
-    assert "dstore" not in plan, plan
-    assert "BroadcastExchange" not in plan, plan
-
-    folded = dim_upsert_delta_bucketed(
-        incoming, backend.bucketed_files("dims"), 4, pre_distinct=False
-    )
-    plan = plan_of(folded)
-    assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "dstore" not in plan, plan
     assert "BroadcastExchange" not in plan, plan
 
@@ -298,5 +324,5 @@ def test_forced_bucketed_dims_crawl_matches_default(spark, tmp_path, monkeypatch
     # (the default crawl stays at one bucket)
     assert base.store.dims_buckets == 1
     assert forced.store.dims_buckets == DIMS_BUCKETS
-    files = forced.store.backend.bucketed_files("dims")
+    files = forced.store.bucketed_files("dims")
     assert files and all("bucket=" in p for ps in files.values() for p in ps)

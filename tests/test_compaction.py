@@ -25,7 +25,7 @@ def _rows(store, name):
 
         # timestamp is wall-clock for NULL-warc_ts fixtures: excluded
         # so row sets compare across independent runs
-        df = store.backend.read_table("routed", ROUTED_SCHEMA).drop("timestamp")
+        df = store.read_table("routed", ROUTED_SCHEMA).drop("timestamp")
     else:
         df = store.read_all(name)
     return {

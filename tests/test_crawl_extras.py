@@ -199,21 +199,12 @@ def test_large_scale_paths_forced(spark, tmp_path, monkeypatch):
     assert seen2 == set(oracle.requested)
 
 
-def test_table_backend_seam(spark, tmp_path):
-    """CrawlStore runs unchanged through an explicitly-passed
-    ParquetManifestBackend; IcebergBackend is an honest stub that
-    raises with configuration guidance."""
-    import pytest as _pytest
+def test_store_manifest_commit_visibility(spark, tmp_path):
+    """A delta written to the store stays invisible to readers until
+    its superstep's manifest (the commit marker) lands."""
+    from website_indexer_spark.sources.tables import CrawlStore
 
-    from website_indexer_spark.sources.tables import (
-        CrawlStore,
-        IcebergBackend,
-        ParquetManifestBackend,
-    )
-
-    root = str(tmp_path / "seam")
-    backend = ParquetManifestBackend(spark, root)
-    store = CrawlStore(spark, root, backend=backend)
+    store = CrawlStore(spark, str(tmp_path / "store"))
     df = spark.createDataFrame([(1, "u")], "url_hash long, url string")
     store.write_delta("seen", df, 0)
     assert store.read_all("seen").count() == 0  # not committed yet
@@ -221,9 +212,6 @@ def test_table_backend_seam(spark, tmp_path):
     assert store.read_all("seen").count() == 1
     assert store.last_committed() == 0
     assert store.read_manifest(0)["counters"]["requested"] == 1
-
-    with _pytest.raises(NotImplementedError, match="iceberg-spark-runtime"):
-        IcebergBackend(spark)
 
 
 def test_parse_robots_rules(spark):

@@ -26,7 +26,7 @@ from website_indexer_spark.streaming.crawl_stream import run_crawl_stream
 
 def _routed_rows(store):
     # timestamp excluded: wall-clock for NULL-warc_ts fixture rows
-    df = store.backend.read_table("routed", ROUTED_SCHEMA).drop("timestamp")
+    df = store.read_table("routed", ROUTED_SCHEMA).drop("timestamp")
     return {
         tuple(tuple(v) if isinstance(v, list) else v for v in r)
         for r in df.collect()

@@ -123,7 +123,7 @@ def _state(spark, root):
     holding parquet files, and the store meta."""
     store = CrawlStore(spark, root)
     tables = {
-        "routed": store.backend.read_table("routed", ROUTED_SCHEMA),
+        "routed": store.read_table("routed", ROUTED_SCHEMA),
         "seen": store.read_all("seen"),
         "dims": store.read_all("dims"),
     }
@@ -295,7 +295,7 @@ def test_sweep_crawl_layout_growth(spark, faults, monkeypatch, tmp_path, site):
         # every row sits under the bucket its key hashes to at 8
         store = CrawlStore(spark, root)
         for name in ("seen", "dims"):
-            assert store.backend.bucketed_layout_ok(name), (name, call)
+            assert store.bucketed_layout_ok(name), (name, call)
             rows = spark.read.parquet(os.path.join(root, name))
             misplaced = rows.filter(F.col("bucket") != store.bucket_expr(name))
             assert misplaced.count() == 0, (name, call)

@@ -120,8 +120,8 @@ def test_legacy_store_without_meta(spark, tmp_path):
     store = CrawlStore(spark, root)
     assert store.seen_buckets == 8 and store.dims_buckets == 8
     store.rollback_uncommitted()
-    assert store.backend.bucketed_layout_ok("seen")
-    assert store.backend.bucketed_layout_ok("dims")
+    assert store.bucketed_layout_ok("seen")
+    assert store.bucketed_layout_ok("dims")
     os.remove(os.path.join(root, "store_meta.json"))
     with pytest.raises(ValueError, match="predates store_meta"):
         CrawlStore(spark, root, seen_buckets=16)
@@ -138,7 +138,7 @@ def test_flat_legacy_layout_detected_and_repaired(spark, tmp_path):
     flat = spark.createDataFrame(rows, SEEN_SCHEMA)
     store.write_delta("seen", flat.coalesce(1), 0)  # no bucket dirs
     store.commit(0, {"requested": 40})
-    assert not store.backend.bucketed_layout_ok("seen")
+    assert not store.bucketed_layout_ok("seen")
     # the bucketed probe WOULD forget all 40 committed keys:
     probe = store.read_all("seen")
     assert (
@@ -150,7 +150,7 @@ def test_flat_legacy_layout_detected_and_repaired(spark, tmp_path):
     # the writer entry compacts the flat table: compact()'s augment
     # recomputes the bucket column
     store.rollback_uncommitted()
-    assert store.backend.bucketed_layout_ok("seen")
+    assert store.bucketed_layout_ok("seen")
     assert set(_seen_urls(store)) == {f"u{i}" for i in range(40)}
     assert (
         FR.exclude_keys_bucketed(
@@ -185,9 +185,9 @@ def test_flat_legacy_crawl_resume_repairs_layout(spark, tmp_path, monkeypatch):
         [(r["url_hash"], r["url"]) for r in seen_rows], SEEN_SCHEMA
     )
     fresh = CrawlStore(spark, root)
-    fresh.backend.write_delta("seen", flat.coalesce(1), 0)
+    fresh.write_delta("seen", flat.coalesce(1), 0)
     for k in range(1, last):
-        fresh.backend.write_delta(
+        fresh.write_delta(
             "seen", spark.createDataFrame([], SEEN_SCHEMA).coalesce(1), k
         )
     os.remove(os.path.join(root, "store_meta.json"))
@@ -220,8 +220,8 @@ def test_rebucket_rewrites_layout(spark, tmp_path):
     assert _bucket_dirs(root, "dims") <= set(range(3))
     assert set(_seen_urls(store)) == want
     store.rollback_uncommitted()  # nothing to repair: a no-op
-    assert store.backend.bucketed_layout_ok("seen")
-    assert store.backend.bucketed_layout_ok("dims")
+    assert store.bucketed_layout_ok("seen")
+    assert store.bucketed_layout_ok("dims")
     assert _bucket_dirs(root, "seen") <= set(range(5))
     assert (
         FR.exclude_keys_bucketed(
@@ -253,7 +253,7 @@ def test_rebucket_pending_finished_at_writer_entry(spark, tmp_path):
     assert FR.exclude_keys_bucketed(probe, store.seen_bucket_files(), 5).count()
     store.rollback_uncommitted()
     assert "rebucket_pending" not in CrawlStore(spark, store.root)._meta
-    assert store.backend.bucketed_layout_ok("seen")
+    assert store.bucketed_layout_ok("seen")
     assert _bucket_dirs(store.root, "seen") <= set(range(5))
     assert set(_seen_urls(store)) == want
     assert (
@@ -289,7 +289,7 @@ def _assert_bucketed_at_meta_count(spark, root):
     store = CrawlStore(spark, root)
     assert "rebucket_pending" not in store._meta
     for name in ("seen", "dims"):
-        assert store.backend.bucketed_layout_ok(name), name
+        assert store.bucketed_layout_ok(name), name
         df = spark.read.parquet(os.path.join(root, name))
         assert df.count() > 0, name
         assert df.filter(F.col("bucket") != store.bucket_expr(name)).count() == 0
@@ -544,6 +544,6 @@ def test_stream_growth_at_history_threshold(spark, tmp_path, monkeypatch):
     store = CrawlStore(spark, root)
     assert store.dims_buckets == 1
     assert _seen_urls(store) == _seen_urls(batch)
-    assert store.backend.bucketed_layout_ok("seen")
+    assert store.bucketed_layout_ok("seen")
     df = spark.read.parquet(os.path.join(root, "seen"))
     assert df.filter(F.col("bucket") != store.bucket_expr("seen")).count() == 0

@@ -324,15 +324,15 @@ def test_paragraph_dedup_snapshot_bucketed_parity(spark, tmp_path):
     from website_indexer_spark.operators.dedup import (
         dedup_paragraphs_against_snapshot,
         dedup_paragraphs_against_snapshot_bucketed,
-        snapshot_hash_bucket_files,
         write_snapshot_line_layout,
     )
+    from website_indexer_spark.sources.tables import bucket_files
 
     inc = _docs(spark, INC_ROWS)
     snap = _docs(spark, SNAP_ROWS)
     layout = str(tmp_path / "snap_lines")
     write_snapshot_line_layout(snap, layout, n_buckets=4)
-    files = snapshot_hash_bucket_files(layout)
+    files = bucket_files(layout)
     assert set(files) <= set(range(4)) and files
     rel = dedup_paragraphs_against_snapshot(inc, snap).toPandas()
     buck = dedup_paragraphs_against_snapshot_bucketed(
@@ -349,9 +349,9 @@ def test_paragraph_dedup_snapshot_plans(spark, tmp_path):
     from website_indexer_spark.operators.dedup import (
         dedup_paragraphs_against_snapshot,
         dedup_paragraphs_against_snapshot_bucketed,
-        snapshot_hash_bucket_files,
         write_snapshot_line_layout,
     )
+    from website_indexer_spark.sources.tables import bucket_files
 
     inc = _docs(spark, INC_ROWS)
     snap = _docs(spark, SNAP_ROWS)
@@ -369,7 +369,7 @@ def test_paragraph_dedup_snapshot_plans(spark, tmp_path):
     write_snapshot_line_layout(snap, layout, n_buckets=4)
     plan2 = (
         dedup_paragraphs_against_snapshot_bucketed(
-            inc, snapshot_hash_bucket_files(layout), 4
+            inc, bucket_files(layout), 4
         )
         ._jdf.queryExecution()
         .executedPlan()

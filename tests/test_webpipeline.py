@@ -242,9 +242,9 @@ def test_dedup_against_snapshot_bucketed_parity(spark, tmp_path):
     from website_indexer_spark.operators.dedup import (
         dedup_against_snapshot,
         dedup_against_snapshot_bucketed,
-        snapshot_hash_bucket_files,
         write_snapshot_hash_layout,
     )
+    from website_indexer_spark.sources.tables import bucket_files
 
     snapshot = _docs(spark, [
         (100 + i, f"published {i}", "old") for i in range(20)
@@ -260,7 +260,7 @@ def test_dedup_against_snapshot_bucketed_parity(spark, tmp_path):
 
     layout = str(tmp_path / "snap_hashes")
     write_snapshot_hash_layout(snapshot, layout, n_buckets=4)
-    files = snapshot_hash_bucket_files(layout)
+    files = bucket_files(layout)
     assert set(files) <= set(range(4)) and sum(
         len(v) for v in files.values()
     ) >= 1

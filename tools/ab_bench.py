@@ -21,27 +21,10 @@ import os
 import subprocess
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from scaling_run import cpu_ceiling  # noqa: E402
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _burn(n):
-    x = 0
-    for i in range(n):
-        x += i * i
-    return x
-
-
-def probe(low=1, high=4) -> float:
-    import multiprocessing as mp
-    import time
-
-    def rate(k, n=3_000_000):
-        with mp.Pool(k) as p:
-            t0 = time.time()
-            p.map(_burn, [n] * k * 2)
-            return (k * 2 * n) / (time.time() - t0)
-
-    return max(rate(high) for _ in range(2)) / max(rate(low) for _ in range(2))
 
 
 def run_bench(repo: str, label: str) -> dict:
@@ -81,7 +64,7 @@ def main() -> None:
     if not pairs:
         pairs = [("HEAD", ROOT)]
 
-    p0 = probe()
+    p0 = cpu_ceiling(1, 4)
     print(f"probe(before) 1->4: {p0:.2f}x", flush=True)
     results: dict = {label: [] for label, _ in pairs}
     for rnd in range(rounds):
@@ -93,7 +76,7 @@ def main() -> None:
                 f"urls/s={r['value']} requested={r['crawl']['requested']}",
                 flush=True,
             )
-    p1 = probe()
+    p1 = cpu_ceiling(1, 4)
     print(f"probe(after) 1->4: {p1:.2f}x", flush=True)
 
     summary = {

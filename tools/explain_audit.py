@@ -858,19 +858,16 @@ def crawl_operator_plans(spark, work_dir: str):
         StripedBloom,
         anti_join_seen_bucketed,
     )
-    from website_indexer_spark.sources.tables import (
-        SEEN_BUCKETS,
-        ParquetManifestBackend,
-    )
+    from website_indexer_spark.sources.tables import SEEN_BUCKETS, CrawlStore
 
-    backend = ParquetManifestBackend(spark, os.path.join(work_dir, "bstore"))
+    bstore = CrawlStore(spark, os.path.join(work_dir, "bstore"))
     big.select(
         "url_hash", "url",
         F.pmod(F.col("url_hash"), F.lit(SEEN_BUCKETS)).alias("bucket"),
     ).write.mode("overwrite").partitionBy("bucket").parquet(
         os.path.join(work_dir, "bstore", "seen", "superstep=0")
     )
-    backend.commit(0, {})
+    bstore.commit(0, {})
     wave_delta = spark.range(0, 1000).select(
         F.xxhash64(F.concat(F.lit("https://h.test/q"), F.col("id"))).alias(
             "url_hash"
@@ -878,7 +875,7 @@ def crawl_operator_plans(spark, work_dir: str):
     )
     plans["crawl_seen_anti_join_bucketed"] = (
         anti_join_seen_bucketed(
-            wave, backend.bucketed_files("seen"), SEEN_BUCKETS,
+            wave, bstore.bucketed_files("seen"), SEEN_BUCKETS,
             extra_exclude=wave_delta,
         ),
         [
@@ -932,7 +929,7 @@ def crawl_operator_plans(spark, work_dir: str):
     from website_indexer_spark.operators.frontier import (
         politeness_select_bucketed,
     )
-    from website_indexer_spark.sources.tables import FRONTIER_SCHEMA
+    from website_indexer_spark.sources.tables import FRONTIER_SCHEMA, bucket_files
 
     fsnap = os.path.join(work_dir, "fsnap")
     (
@@ -950,16 +947,10 @@ def crawl_operator_plans(spark, work_dir: str):
         .write.partitionBy("bucket")
         .parquet(fsnap)
     )
-    fbuckets: dict = {}
-    for dirpath, _dirs, fnames in os.walk(fsnap):
-        marker = os.path.basename(dirpath)
-        if marker.startswith("bucket="):
-            b = int(marker.split("=", 1)[1])
-            fbuckets.setdefault(b, []).extend(
-                os.path.join(dirpath, f) for f in fnames if f.endswith(".parquet")
-            )
     plans["crawl_politeness_bucketed"] = (
-        politeness_select_bucketed(spark, fbuckets, 100, FRONTIER_SCHEMA),
+        politeness_select_bucketed(
+            spark, bucket_files(fsnap), 100, FRONTIER_SCHEMA
+        ),
         [
             ("frontier snapshot absent from the plan (no scan node "
              "reads fsnap/): selection tasks point-read their bucket's "
@@ -1031,7 +1022,7 @@ def crawl_operator_plans(spark, work_dir: str):
     )
     plans["dims_merge_delta_bucketed"] = (
         dim_upsert_delta_bucketed(
-            incoming_dims, backend.bucketed_files("dims"), DIMS_BUCKETS
+            incoming_dims, bstore.bucketed_files("dims"), DIMS_BUCKETS
         ),
         [
             ("dims table absent from the plan: probe tasks point-read "
@@ -1043,24 +1034,6 @@ def crawl_operator_plans(spark, work_dir: str):
              "bucket repartition; no dims-side exchange",
              lambda p: p.count("Arguments: hashpartitioning") == 2
              and "HashAggregate" in p),
-            ("probe is an Arrow-batched MapInPandas",
-             lambda p: "MapInPandas" in p),
-        ],
-    )
-
-    plans["dims_merge_delta_bucketed_folded"] = (
-        dim_upsert_delta_bucketed(
-            incoming_dims,
-            backend.bucketed_files("dims"),
-            DIMS_BUCKETS,
-            pre_distinct=False,
-        ),
-        [
-            ("dims table absent from the plan",
-             lambda p: "bstore" not in p),
-            ("ONE exchange total — the bucket repartition; dedup folds "
-             "into the probe pass (for mostly-unique waves)",
-             lambda p: p.count("Arguments: hashpartitioning") == 1),
             ("probe is an Arrow-batched MapInPandas",
              lambda p: "MapInPandas" in p),
         ],

@@ -67,19 +67,6 @@ STOPWORDS = {
 LANGS = ["en", "es", "fr", "de", "zh"]
 
 
-def lang_scores(col: Column) -> List[Column]:
-    toks = tokens(F.lower(col))
-    scores = []
-    for lang in LANGS:
-        sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-        scores.append(
-            F.size(F.filter(toks, lambda t: F.array_contains(sw, t))).alias(
-                f"score_{lang}"
-            )
-        )
-    return scores
-
-
 def lang_id(col: Column, model=None) -> Column:
     """Predicted language code, 'und' when no stopword hits at all.
 

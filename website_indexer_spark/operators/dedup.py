@@ -667,28 +667,6 @@ def write_snapshot_hash_layout(
     keys.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
 
-def snapshot_hash_bucket_files(path: str) -> dict:
-    """bucket id -> committed parquet files of a
-    ``write_snapshot_hash_layout`` directory (the ``bucketed_files``
-    analogue for the content-hash snapshot)."""
-    import os
-
-    out: dict = {}
-    if not os.path.isdir(path):
-        return out
-    for entry in sorted(os.listdir(path)):
-        if not entry.startswith("bucket="):
-            continue
-        b = int(entry.split("=", 1)[1])
-        d = os.path.join(path, entry)
-        out[b] = [
-            os.path.join(d, f)
-            for f in sorted(os.listdir(d))
-            if f.endswith(".parquet")
-        ]
-    return out
-
-
 def dedup_against_snapshot_bucketed(
     increment: DataFrame,
     bucket_files: dict,

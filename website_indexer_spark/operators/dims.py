@@ -74,12 +74,11 @@ def dim_upsert_delta_bucketed(
     bucket_files: dict,
     n_buckets: int,
     key_cols: Union[str, List[str]] = ("kind", "key"),
-    pre_distinct: bool = True,
 ) -> DataFrame:
     """The MERGE delta for waves too big to broadcast, computed
     storage-partitioned against the hash-bucketed dims layout
     (``bucket_files``: bucket id -> parquet paths, bucket =
-    pmod(xxhash64(*key_cols), n_buckets) — what ParquetManifestBackend
+    pmod(xxhash64(*key_cols), n_buckets) — what CrawlStore
     writes; Iceberg's bucket(N, ...) transform at deployment).
 
     Like the seen set's ``exclude_keys_bucketed``: the ONLY exchange
@@ -90,16 +89,12 @@ def dim_upsert_delta_bucketed(
     (kind, key) columns) — the 64-bit hash only routes rows to
     buckets, so collisions cannot drop a new key.
 
-    The MERGE's distinct: with ``pre_distinct`` (default) a Spark-side
-    ``dropDuplicates`` collapses the wave's repeated keys with a
-    map-side partial aggregate BEFORE any exchange — at web fan-out
-    the exploded href stream is overwhelmingly duplicates (nav/footer
-    links recur on every page), so shipping only distinct keys shrinks
-    both exchanges and the probe's input by the duplication factor.
-    With ``pre_distinct=False`` the dedup folds into the probe pass
-    instead (bucketing co-locates all copies of a key, so it stays
-    partition-local) — fewer exchanges, more probe input; right when
-    the wave's keys are mostly unique."""
+    The MERGE's distinct: a Spark-side ``dropDuplicates`` collapses
+    the wave's repeated keys with a map-side partial aggregate BEFORE
+    any exchange — at web fan-out the exploded href stream is
+    overwhelmingly duplicates (nav/footer links recur on every page),
+    so shipping only distinct keys shrinks both exchanges and the
+    probe's input by the duplication factor."""
     import os as _os
     from typing import Iterator
 
@@ -115,7 +110,6 @@ def dim_upsert_delta_bucketed(
         import pyarrow.parquet as pq
 
         loaded: dict = {}
-        emitted: set = set()  # partition-local distinct (co-located keys)
 
         def read_file_keys(path: str) -> "pd.DataFrame":
             # key columns that are PARTITION columns (e.g. the dims
@@ -173,36 +167,18 @@ def dim_upsert_delta_bucketed(
                     continue
                 keep_mask[sel] = idx.get_indexer(row_index[sel]) == -1
             out = pdf.loc[keep_mask, cols]
-            if len(out) == 0:
-                continue
-            if known_distinct:
-                # the Spark-side pre-distinct already made the input
+            if len(out):
+                # the Spark-side pre-distinct below made the input
                 # globally unique — no in-task bookkeeping needed
                 yield out
-                continue
-            # vectorized first-wins: in-batch duplicates fold via
-            # drop_duplicates (keep='first' preserves arrival order);
-            # the Python set only carries keys across BATCH boundaries,
-            # so its cost is bounded by distinct fresh keys, not rows
-            out = out.drop_duplicates(subset=cols, keep="first")
-            if emitted:
-                out = out.loc[
-                    ~pd.MultiIndex.from_frame(out[cols]).isin(emitted)
-                ]
-            if len(out):
-                emitted.update(out.itertuples(index=False, name=None))
-                yield out
 
-    inc = incoming.select(*cols).na.drop(subset=cols)
-    known_distinct = bool(pre_distinct)
-    if pre_distinct:
-        # Web waves repeat hrefs massively (nav/footer links recur on
-        # every page of a host), so collapsing duplicates BEFORE the
-        # bucket exchange is almost always a volume win: dropDuplicates
-        # plans a partial (map-side) HashAggregate, so each upstream
-        # task ships only its distinct keys. Costs one extra (small,
-        # already-distinct) exchange into the bucket layout below.
-        inc = inc.dropDuplicates(cols)
+    # Web waves repeat hrefs massively (nav/footer links recur on every
+    # page of a host), so collapsing duplicates BEFORE the bucket
+    # exchange is almost always a volume win: dropDuplicates plans a
+    # partial (map-side) HashAggregate, so each upstream task ships
+    # only its distinct keys. Costs one extra (small, already-distinct)
+    # exchange into the bucket layout below.
+    inc = incoming.select(*cols).na.drop(subset=cols).dropDuplicates(cols)
     inc = inc.withColumn(
         "_bk", F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(nb))
     )

@@ -20,8 +20,10 @@ Reference parity (/root/reference/crawler/wpull/crawler.py:33-45):
   in one task
 
 Output schema matches the web_pages lookup-join shape, so
-`run_crawl(..., fetcher=real_fetch_table)` is a drop-in swap for the
-Iceberg lookup (same downstream routing).
+``real_fetch`` is a drop-in swap for the Iceberg lookup: replace the
+``fetch_sim_join`` call at the ``fetched =`` line of
+``plans/crawl.py::run_crawl`` (or of ``streaming/crawl_stream.py``);
+the downstream routing is the same.
 
 The HTTP call is injectable (``fetch_fn``) — tests use a fake; the
 default is a stdlib urllib client (no external deps).

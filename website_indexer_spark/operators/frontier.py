@@ -132,7 +132,7 @@ def exclude_keys_bucketed(
     """Rows of ``df`` whose ``key`` is NOT present in a hash-bucketed
     parquet layout (``bucket_files``: bucket id -> list of parquet
     paths whose ``key`` column holds that bucket's committed keys,
-    bucket = pmod(key, n_buckets) — the layout ParquetManifestBackend
+    bucket = pmod(key, n_buckets) — the layout CrawlStore
     writes for the seen table and Iceberg's ``bucket(N, url_hash)``
     partition transform writes at deployment).
 

@@ -35,16 +35,13 @@ HEAD_URL_PATTERNS = [r"https://files\.consumerfinance\.gov/.*"]
 
 @dataclass
 class CrawlPolicy:
-    """Config mirror of the reference CrawlConfig + plugin constants
-    (models.py:12-16, plugin.py:22-34)."""
+    """The accept-url cascade's config: the reference's start URL and
+    plugin pattern constants (models.py:12-16, plugin.py:22-34). The
+    page budget, depth cap and host budget are ``run_crawl`` options."""
 
     start_url: str
-    max_pages: int = 0
-    depth: int = 0
     skip_url_patterns: List[str] = field(default_factory=lambda: SKIP_URL_PATTERNS)
     head_url_patterns: List[str] = field(default_factory=lambda: HEAD_URL_PATTERNS)
-    robots_enabled: bool = False  # reference runs --no-robots (crawler.py:35)
-    host_budget: Optional[int] = None  # politeness budget per host per superstep
 
 
 def _any_rlike(col: Column, patterns: List[str]) -> Column:

@@ -107,7 +107,7 @@ def recrawl_invalidate(spark: SparkSession, store, topk: DataFrame) -> dict:
     touched = sorted({h % store.seen_buckets for h in key_hashes})
     targets = [
         f"superstep={k}/bucket={b}"
-        for k in store.backend.committed_steps("seen")
+        for k in store.committed_steps("seen")
         for b in touched
         if os.path.isdir(os.path.join(seen_dir, f"superstep={k}", f"bucket={b}"))
     ]

@@ -436,18 +436,18 @@ def q_mixture_sample(spark, sf):
     )
 
 
-def _fresh_backend(spark, prefix):
+def _fresh_store(spark, prefix):
     import tempfile
 
-    from website_indexer_spark.sources.tables import ParquetManifestBackend
+    from website_indexer_spark.sources.tables import CrawlStore
 
-    return ParquetManifestBackend(spark, tempfile.mkdtemp(prefix=prefix))
+    return CrawlStore(spark, tempfile.mkdtemp(prefix=prefix))
 
 
 def q_seen_anti_join_bucketed(spark, sf):
     """THE crawl-scale dedup path under the oracle gate: even doc_ids
     are the committed seen keys, written hash-bucketed through the
-    real backend; the storage-partitioned probe over all doc_ids must
+    real store; the storage-partitioned probe over all doc_ids must
     keep exactly the odds. doc_id stands in for the 64-bit url hash
     (any int64 key works and DuckDB replays it exactly); the operator
     is byte-for-byte the one the crawl uses above the broadcast
@@ -458,17 +458,17 @@ def q_seen_anti_join_bucketed(spark, sf):
     seen = docs.filter(F.col("doc_id") % 2 == 0).select(
         F.col("doc_id").alias("url_hash"), F.col("doc_id").cast("string").alias("url")
     )
-    backend = _fresh_backend(spark, "gate_seen_")
-    backend.write_delta(
+    store = _fresh_store(spark, "gate_seen_")
+    store.write_delta(
         "seen",
         seen.withColumn("bucket", F.pmod(F.col("url_hash"), F.lit(8))).coalesce(1),
         0,
         partition_by=["bucket"],
     )
-    backend.commit(0, {})
+    store.commit(0, {})
     probe = docs.select(F.col("doc_id").alias("url_hash"))
     return exclude_keys_bucketed(
-        probe, backend.bucketed_files("seen"), 8
+        probe, store.bucketed_files("seen"), 8
     ).select(F.col("url_hash").alias("doc_id"))
 
 
@@ -512,13 +512,12 @@ def q_politeness_bucketed(spark, sf):
     the operator is byte-for-byte the one the throttled crawl uses
     above FRONTIER_SELECT_BUCKETED_MIN (operators/frontier.py
     politeness_select_bucketed)."""
-    import os
     import tempfile
 
     from website_indexer_spark.operators.frontier import (
         politeness_select_bucketed,
     )
-    from website_indexer_spark.sources.tables import FRONTIER_SCHEMA
+    from website_indexer_spark.sources.tables import FRONTIER_SCHEMA, bucket_files
 
     rows = _t(spark, sf, "documents").select(
         F.concat(F.lit("https://h"), F.col("doc_id") % 37, F.lit(".test/p"), F.col("doc_id")).alias("url"),
@@ -535,15 +534,9 @@ def q_politeness_bucketed(spark, sf):
         .repartition(8, F.col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(snap)
     )
-    files: dict = {}
-    for dirpath, _dirs, fnames in os.walk(snap):
-        marker = os.path.basename(dirpath)
-        if marker.startswith("bucket="):
-            b = int(marker.split("=", 1)[1])
-            files.setdefault(b, []).extend(
-                os.path.join(dirpath, f) for f in fnames if f.endswith(".parquet")
-            )
-    out = politeness_select_bucketed(spark, files, 5, FRONTIER_SCHEMA)
+    out = politeness_select_bucketed(
+        spark, bucket_files(snap), 5, FRONTIER_SCHEMA
+    )
     return out.select(
         F.col("discovery_seq").alias("doc_id"),
         F.col("_selected").alias("selected"),
@@ -564,8 +557,8 @@ def q_dimension_upsert_bucketed(spark, sf):
     incoming = sh.filter(F.col("doc") % 2 == 1).select(
         F.lit("tok").alias("kind"), F.col("shingle").alias("key")
     )
-    backend = _fresh_backend(spark, "gate_dims_")
-    backend.write_delta(
+    store = _fresh_store(spark, "gate_dims_")
+    store.write_delta(
         "dims",
         existing.withColumn(
             "bucket", F.pmod(F.xxhash64("kind", "key"), F.lit(8))
@@ -573,9 +566,9 @@ def q_dimension_upsert_bucketed(spark, sf):
         0,
         partition_by=["kind", "bucket"],
     )
-    backend.commit(0, {})
+    store.commit(0, {})
     return dim_upsert_delta_bucketed(
-        incoming, backend.bucketed_files("dims"), 8
+        incoming, store.bucketed_files("dims"), 8
     ).select(F.col("key").alias("token"))
 
 

@@ -107,6 +107,7 @@ from website_indexer_spark.sources.tables import (
     FRONTIER_SCHEMA,
     SEEN_BUCKETS,
     CrawlStore,
+    bucket_files,
     build_spark,
     commit_staged_swap,
     load_web_pages,
@@ -538,7 +539,6 @@ def run_crawl(
     *,
     max_pages: int = 0,
     depth_cap: int = 0,
-    policy: Optional[CrawlPolicy] = None,
     robots: Optional[DataFrame] = None,
     host_budget: Optional[int] = None,
     host_budgets: Optional[DataFrame] = None,
@@ -551,9 +551,8 @@ def run_crawl(
     crawl_id: int = 1,
     max_supersteps: int = 1000,
     verbose: bool = False,
-    maintain_dims: bool = True,
 ) -> CrawlResult:
-    policy = policy or CrawlPolicy(start_url=seed_url, max_pages=max_pages, depth=depth_cap)
+    policy = CrawlPolicy(start_url=seed_url)
     start_host = hostname_with_port(seed_url)
     store = CrawlStore(spark, out_dir)
 
@@ -667,17 +666,7 @@ def run_crawl(
             .partitionBy("bucket")
             .parquet(budgets_dir)
         )
-        budget_files = {}
-        for dirpath, _dirs, files in os.walk(budgets_dir):
-            marker = os.path.basename(dirpath)
-            if not marker.startswith("bucket="):
-                continue
-            b = int(marker.split("=", 1)[1])
-            for fname in files:
-                if fname.endswith(".parquet"):
-                    budget_files.setdefault(b, []).append(
-                        os.path.join(dirpath, fname)
-                    )
+        budget_files = bucket_files(budgets_dir)
 
     bloom: Optional[StripedBloom] = None
     try:
@@ -953,48 +942,47 @@ def run_crawl(
             # append only the wave's NEW component classes / link hrefs.
             # The full dimension streams map-side against the broadcast
             # wave keys (dims.py) — never shuffled, never rewritten.
-            if maintain_dims:
-                page_rows = extracted.filter(is_page)
-                incoming = page_rows.select(
-                    F.lit("component").alias("kind"),
-                    F.explode("ex.components").alias("key"),
-                ).unionByName(
-                    page_rows.select(
-                        F.lit("link").alias("kind"),
-                        F.explode("ex.links").alias("key"),
-                    )
+            page_rows = extracted.filter(is_page)
+            incoming = page_rows.select(
+                F.lit("component").alias("kind"),
+                F.explode("ex.components").alias("key"),
+            ).unionByName(
+                page_rows.select(
+                    F.lit("link").alias("kind"),
+                    F.explode("ex.links").alias("key"),
                 )
-                # same wave-size guard as the seen anti-join: a huge
-                # wave's href keys (≈ wave × fan-out) must not be
-                # broadcast — above the threshold run the
-                # STORAGE-PARTITIONED MERGE probe against the
-                # hash-bucketed dims layout (exact on the key strings;
-                # no dims-side scan or exchange), mirroring the seen
-                # set's bucketed path.
-                if dims_total <= HISTORY_BROADCAST_THRESHOLD:
-                    dims_delta = dim_upsert_delta(
-                        store.read_all("dims"),
-                        incoming,
-                        ["kind", "key"],
-                        small_existing=True,
-                    )
-                elif (
-                    n_selected * SEQ_FANOUT_ESTIMATE
-                    <= BROADCAST_FETCH_THRESHOLD
-                ):
-                    dims_delta = dim_upsert_delta(
-                        store.read_all("dims"),
-                        incoming,
-                        ["kind", "key"],
-                        broadcast_incoming=True,
-                    )
-                else:
-                    dims_delta = dim_upsert_delta_bucketed(
-                        incoming,
-                        store.backend.bucketed_files("dims"),
-                        store.dims_buckets,
-                        ["kind", "key"],
-                    )
+            )
+            # same wave-size guard as the seen anti-join: a huge
+            # wave's href keys (≈ wave × fan-out) must not be
+            # broadcast — above the threshold run the
+            # STORAGE-PARTITIONED MERGE probe against the
+            # hash-bucketed dims layout (exact on the key strings;
+            # no dims-side scan or exchange), mirroring the seen
+            # set's bucketed path.
+            if dims_total <= HISTORY_BROADCAST_THRESHOLD:
+                dims_delta = dim_upsert_delta(
+                    store.read_all("dims"),
+                    incoming,
+                    ["kind", "key"],
+                    small_existing=True,
+                )
+            elif (
+                n_selected * SEQ_FANOUT_ESTIMATE
+                <= BROADCAST_FETCH_THRESHOLD
+            ):
+                dims_delta = dim_upsert_delta(
+                    store.read_all("dims"),
+                    incoming,
+                    ["kind", "key"],
+                    broadcast_incoming=True,
+                )
+            else:
+                dims_delta = dim_upsert_delta_bucketed(
+                    incoming,
+                    store.bucketed_files("dims"),
+                    store.dims_buckets,
+                    ["kind", "key"],
+                )
 
             # The four delta writes are mutually independent (all hang
             # off the persisted extraction / the already-counted wave),
@@ -1015,6 +1003,12 @@ def run_crawl(
                 seen_delta, store.bucket_expr("seen"), store.seen_buckets,
                 n_selected,
             )
+            # dims deltas are sized by the wave's fan-out, not the
+            # wave: size the write on the same estimate the MERGE uses
+            dims_out = bucketed_write(
+                dims_delta, store.bucket_expr("dims"), store.dims_buckets,
+                est_accepted,
+            )
             writes = [
                 (
                     "routed",
@@ -1034,22 +1028,13 @@ def run_crawl(
                         "frontier", next_frontier, k, partition_by=frontier_pb
                     ),
                 ),
+                (
+                    "dims",
+                    lambda: store.write_delta(
+                        "dims", dims_out, k, partition_by=["kind", "bucket"]
+                    ),
+                ),
             ]
-            if maintain_dims:
-                # dims deltas are sized by the wave's fan-out, not the
-                # wave: size the write on the same estimate the MERGE uses
-                dims_out = bucketed_write(
-                    dims_delta, store.bucket_expr("dims"), store.dims_buckets,
-                    est_accepted,
-                )
-                writes.append(
-                    (
-                        "dims",
-                        lambda: store.write_delta(
-                            "dims", dims_out, k, partition_by=["kind", "bucket"]
-                        ),
-                    )
-                )
             # warm the shared extraction cache before the concurrent
             # writers (see EAGER_EXTRACT_MATERIALIZE_MIN)
             if n_selected >= EAGER_EXTRACT_MATERIALIZE_MIN:
@@ -1194,12 +1179,6 @@ def main() -> None:  # pragma: no cover - CLI for spark-submit --py-files
         f"{BLOOM_AUTO_SEEN_THRESHOLD} seen URLs)",
     )
     ap.add_argument("--no-bloom", dest="bloom", action="store_const", const=False)
-    ap.add_argument(
-        "--no-dims",
-        dest="dims",
-        action="store_false",
-        help="skip the per-superstep Component/Link dimension MERGE",
-    )
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
@@ -1218,7 +1197,6 @@ def main() -> None:  # pragma: no cover - CLI for spark-submit --py-files
         frontier_buckets=args.frontier_buckets,
         use_bloom=args.bloom,
         resume=args.resume,
-        maintain_dims=args.dims,
     )
     print(
         f"crawl finished: supersteps={result.supersteps} pages={result.pages} "

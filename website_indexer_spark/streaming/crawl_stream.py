@@ -69,7 +69,6 @@ def crawl_stream_step(
     start_url: str,
     *,
     depth_cap: int = 0,
-    policy: Optional[CrawlPolicy] = None,
     robots: Optional[DataFrame] = None,
     crawl_id: int = 1,
     emit_discovered: Optional[Callable[[DataFrame, int], None]] = None,
@@ -79,7 +78,7 @@ def crawl_stream_step(
     line, same as the batch driver). ``emit_discovered(accepted_df,
     superstep)`` receives each batch's accepted, seen-deduped candidate
     harvest for external re-enqueue."""
-    pol = policy or CrawlPolicy(start_url=start_url, depth=depth_cap)
+    pol = CrawlPolicy(start_url=start_url)
     start_host = hostname_with_port(start_url)
     lookup = web.select(
         "url", "warc_ts", "html", "status_code", "location", "content_type"

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from website_indexer_spark.operators.frontier import exclude_keys_bucketed
-from website_indexer_spark.sources.tables import write_json_atomic
+from website_indexer_spark.sources.tables import bucket_files, write_json_atomic
 
 DEDUP_STREAM_BUCKETS = 8
 
@@ -94,28 +94,18 @@ class DedupStreamStore:
 
     def hash_bucket_files(self) -> dict:
         """bucket -> committed parquet files across supersteps."""
-        out: dict = {}
         hdir = os.path.join(self.root, "hashes")
         if not os.path.isdir(hdir):
-            return out
+            return {}
         last = self.last_committed()
-        for step in sorted(os.listdir(hdir)):
-            if not step.startswith("superstep="):
-                continue
-            if int(step.split("=", 1)[1]) > last:
-                continue
-            sdir = os.path.join(hdir, step)
-            for bdir in sorted(os.listdir(sdir)):
-                if not bdir.startswith("bucket="):
-                    continue
-                b = int(bdir.split("=", 1)[1])
-                d = os.path.join(sdir, bdir)
-                out.setdefault(b, []).extend(
-                    os.path.join(d, fn)
-                    for fn in sorted(os.listdir(d))
-                    if fn.endswith(".parquet")
-                )
-        return out
+        return bucket_files(
+            *(
+                os.path.join(hdir, step)
+                for step in os.listdir(hdir)
+                if step.startswith("superstep=")
+                and int(step.split("=", 1)[1]) <= last
+            )
+        )
 
     def read_accepted(self, spark) -> DataFrame:
         dirs = []
