@@ -5,6 +5,7 @@ attachment bytes (BOM, csv_header names, CRLF, dated filename), the
 detail view's 404, and the WSGI adapter."""
 
 import codecs
+import itertools
 from datetime import datetime
 from io import BytesIO
 
@@ -235,3 +236,171 @@ def test_unknown_route_and_wsgi(app):
     import json
 
     assert json.loads(body)["count"] == 1
+
+
+# --------------------------------------------------------------------
+# One Spark job per numbered JSON page
+# --------------------------------------------------------------------
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, app, path, params):
+    """(response, Spark jobs the request ran): the request runs under
+    its own job group, counted once the listener bus has delivered
+    every job-start event."""
+    sc = spark.sparkContext
+    group = f"envelope-request-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        resp = app.handle(path, dict(params))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return resp, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+ONE_JOB_REQUESTS = [
+    pytest.param(path, params, id=name)
+    for name, path, params in [
+        ("list", "/", {}),
+        ("page1", "/", {"page": "1"}),
+        ("title", "/", {"search_type": "title", "q": "sample"}),
+        ("url", "/", {"search_type": "url", "q": "child"}),
+        ("text", "/", {"search_type": "text", "q": "sample"}),
+        ("html", "/", {"search_type": "html", "q": "<HTML>"}),
+        ("components", "/", {"search_type": "components", "q": "o-"}),
+        ("links", "/", {"search_type": "links", "q": "Example.com"}),
+        ("language", "/", {"language": "en"}),
+        ("errors", "/errors/", {}),
+        ("redirects", "/redirects/", {}),
+        ("redirects_status", "/redirects/", {"status_code": "301"}),
+    ]
+]
+
+
+@pytest.mark.parametrize("path,params", ONE_JOB_REQUESTS)
+def test_numbered_page_is_one_job(spark, app, path, params):
+    resp, jobs = _jobs(spark, app, path, params)
+    assert resp.status == 200
+    assert jobs == 1
+
+
+def test_page_jobs_last_and_invalid(spark, app, monkeypatch):
+    monkeypatch.setattr(E, "PAGE_SIZE", 2)
+    # page=last counts first, then fetches the page
+    resp, jobs = _jobs(spark, app, "/", {"page": "last"})
+    assert resp.json()["page_number"] == 2 and jobs == 2
+    # out of range: 404 after the one page job
+    resp, jobs = _jobs(spark, app, "/", {"page": "3"})
+    assert resp.status == 404 and jobs == 1
+    # malformed or below 1: 404 with no job
+    for bad in ("0", "nope"):
+        resp, jobs = _jobs(spark, app, "/", {"page": bad})
+        assert resp.status == 404 and jobs == 0
+        assert resp.json() == {"detail": "Invalid page."}
+
+
+def test_page_beyond_int_offsets_is_404(app):
+    # its row offset does not fit Spark's int LIMIT/OFFSET
+    resp = app.handle("/", {"page": str(2**40)})
+    assert resp.status == 404
+    assert resp.json() == {"detail": "Invalid page."}
+
+
+def test_csv_crawl_start_computed_once(spark, app):
+    """The scoped tables are fixed at construction, so the crawl-start
+    date of the CSV filename is computed by the app's first CSV
+    request only: a repeat runs fewer jobs and returns the same bytes."""
+    fresh = E.ViewerApp({"pages": app.pages, "errors": app.errors})
+    first, jobs_first = _jobs(spark, fresh, "/errors/", {"format": "csv"})
+    again, jobs_again = _jobs(spark, fresh, "/errors/", {"format": "csv"})
+    assert first.headers["Content-Disposition"] == (
+        "attachment; filename=errors-20260201.csv"
+    )
+    assert (again.body, again.headers) == (first.body, first.headers)
+    assert jobs_again < jobs_first
+
+
+# --------------------------------------------------------------------
+# The observed count is the result's count
+# --------------------------------------------------------------------
+
+@pytest.mark.parametrize("path,params", ONE_JOB_REQUESTS)
+def test_observed_count_matches_count(app, path, params, monkeypatch):
+    from website_indexer_spark.plans import queries as Q
+
+    if path == "/":
+        expected = Q.search(app.pages, params.get("search_type"), params.get("q"))
+        if params.get("language"):
+            expected = Q.filter_language(expected, params["language"])
+    else:
+        expected = app.errors if path == "/errors/" else app.redirects
+        if params.get("status_code"):
+            expected = Q.filter_status_code(expected, int(params["status_code"]))
+    n = expected.count()
+    assert app.handle(path, dict(params)).json()["count"] == n
+    # every page of a smaller page size observes the whole count
+    monkeypatch.setattr(E, "PAGE_SIZE", 1)
+    for page in range(1, n + 1):
+        body = app.handle(path, dict(params, page=str(page))).json()
+        assert body["count"] == n and len(body["results"]) == 1
+
+
+@pytest.mark.parametrize("source", ["parquet", "range"])
+def test_observed_count_across_partitions(spark, tmp_path, source, monkeypatch):
+    """A result spread over several partitions: every page's count is
+    the whole result's, and the pages tile it in url order. Over a
+    parquet scan each numbered page is one job; over a range, whose
+    size the optimizer knows, the last page counts first and still
+    reports the right count."""
+    from pyspark.sql import functions as F
+
+    pages = spark.range(0, 60, 1, 4).select(
+        F.lit(_ts("2026-02-01T10:00:00")).alias("timestamp"),
+        F.format_string("https://h.test/p%02d/", (F.col("id") * 7) % 60).alias("url"),
+        F.lit("t").alias("title"),
+        F.lit("en").alias("language"),
+        F.array(F.lit("/")).alias("links"),
+        F.array(F.lit("o-a")).alias("components"),
+    )
+    if source == "parquet":
+        pages.write.parquet(str(tmp_path / "pages"))
+        pages = spark.read.parquet(str(tmp_path / "pages"))
+    app = E.ViewerApp({"pages": pages})
+    monkeypatch.setattr(E, "PAGE_SIZE", 25)
+    urls = []
+    for page in ("1", "2", "3"):
+        resp, jobs = _jobs(spark, app, "/", {"page": page})
+        body = resp.json()
+        assert body["count"] == 60 and body["num_pages"] == 3
+        if source == "parquet":
+            assert jobs == 1
+        urls += [r["url"] for r in body["results"]]
+    assert urls == [f"https://h.test/p{i:02d}/" for i in range(60)]
+    assert app.handle("/", {"page": "4"}).status == 404
+    comps = app.handle("/", {"search_type": "components", "q": "O-A", "page": "3"})
+    assert comps.json()["count"] == 60 and len(comps.json()["results"]) == 10
+
+
+def test_empty_scope_counts_zero(spark, app):
+    """A crawls table with no Finished crawl scopes every table empty:
+    page 1 is an empty page, page 2 is out of range."""
+    crawls = spark.createDataFrame(
+        [(3, "Started", _ts("2026-03-01T10:00:00"))],
+        "crawl_id long, status string, started timestamp",
+    )
+    empty = E.ViewerApp(
+        {"pages": app.pages, "errors": app.errors, "crawls": crawls}
+    )
+    for path in ("/", "/errors/"):
+        body = empty.handle(path, {}).json()
+        assert body == {
+            "count": 0, "next": None, "previous": None, "results": [],
+            "num_pages": 1, "page_number": 1,
+        }
+        assert empty.handle(path, {"page": "last"}).json() == body
+        assert empty.handle(path, {"page": "2"}).status == 404
+    resp = empty.handle("/", {"format": "csv"})
+    # no pages: no date suffix
+    assert resp.headers["Content-Disposition"] == "attachment; filename=pages.csv"

@@ -220,3 +220,65 @@ def test_export_csv_distributed_parity(spark, scoped, tmp_path):
         ordered, Q.CSV_HEADERS["pages"], str(tmp_path / "pages.csv")
     )
     assert open(out, "rb").read() == expected
+
+
+def _explode_dedup(pages, array, pred):
+    """The explode + dropDuplicates shape the component/link searches
+    had, kept here as the oracle of their row filter."""
+    return (
+        pages.select(*Q.PAGE_VALUES, F.explode(array).alias("m"))
+        .filter(pred(F.col("m")))
+        .drop("m")
+        .dropDuplicates(Q.PAGE_VALUES)
+        .orderBy("url")
+    )
+
+
+@pytest.mark.parametrize("q", ["o-hero", "O-", "NOTIFICATION", "zzz", "-"])
+def test_components_filter_matches_explode_oracle(scoped, q):
+    want = _explode_dedup(
+        scoped, "components", lambda c: F.lower(c).contains(q.lower())
+    )
+    got = Q.search_components(scoped, q)
+    assert got.collect() == want.collect()
+
+
+@pytest.mark.parametrize("q", ["/a/", "A B", "EXT.test", "zzz", "/"])
+def test_links_filter_matches_explode_oracle(scoped, q):
+    from urllib.parse import quote_plus
+
+    def pred(h):
+        lh = F.lower(h)
+        return lh.contains(q.lower()) | lh.contains(quote_plus(q).lower())
+
+    want = _explode_dedup(scoped, "links", pred)
+    got = Q.search_links(scoped, q)
+    assert got.collect() == want.collect()
+
+
+def test_array_searches_plan_no_exchange(scoped):
+    """The JSON forms of C4/C5 are one row filter: no explode, no
+    exchange before the sort."""
+    import io
+    from contextlib import redirect_stdout
+
+    for df in (
+        Q.match_components(scoped, "o-"),
+        Q.match_links(scoped, "/a/"),
+    ):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain()
+        plan = buf.getvalue()
+        assert "Exchange" not in plan and "Generate" not in plan, plan
+
+
+def test_component_list_single_exchange(scoped):
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        Q.component_list(scoped).explain()
+    plan = buf.getvalue()
+    assert plan.count("Exchange") == 1 and "rangepartitioning" not in plan

@@ -1184,6 +1184,77 @@ def crawl_operator_plans(spark, work_dir: str):
     return plans
 
 
+def viewer_plans(spark, work_dir: str):
+    """Plans of the viewer's JSON requests (plans/envelope.py) over a
+    parquet pages table, as the crawl store serves it: a numbered page
+    is one job only while the page query is a TakeOrderedAndProject
+    directly over the CollectMetrics that counts the result, and the
+    component/link searches are a row filter with no exchange.
+
+    Returns name -> (DataFrame, checks)."""
+    import datetime
+
+    from pyspark.sql import Observation
+
+    from website_indexer_spark.plans import envelope as E
+    from website_indexer_spark.plans import queries as Q
+
+    path = os.path.join(work_dir, "viewer_pages")
+    spark.createDataFrame(
+        [
+            (datetime.datetime(2026, 2, 1, 10, 0, i), f"https://h.test/p{i}/",
+             f"Page {i}", "en", "<html></html>", "text",
+             ["/", f"https://ext.test/{i}"], ["o-hero", f"m-{i}"])
+            for i in range(60)
+        ],
+        "timestamp timestamp, url string, title string, language string, "
+        "html string, text string, links array<string>, "
+        "components array<string>",
+    ).write.mode("overwrite").parquet(path)
+    pages = spark.read.parquet(path)
+
+    def json_page(params: dict, page: int = 2):
+        qs, order, _ = E._pages_queryset(pages, params, rendering_csv=False)
+        return E.counted_page(
+            Q.with_scrubbed_titles(qs), order, page, Observation()
+        )
+
+    def page_over_count(p):
+        tree = tree_of(p).splitlines()
+        return (
+            "TakeOrderedAndProject" in tree[1]
+            and "CollectMetrics" in tree[2]
+        )
+
+    no_exchange = (
+        "a row filter: no explode, no exchange",
+        lambda p: "Exchange" not in p and "Generate" not in p,
+    )
+    one_job = (
+        "TakeOrderedAndProject directly over the CollectMetrics that "
+        "counts the result: the page job reads every row and observes "
+        "the count",
+        page_over_count,
+    )
+    return {
+        "viewer_numbered_page": (json_page({"language": "en"}), [one_job]),
+        "viewer_search_components": (
+            json_page({"search_type": "components", "q": "O-HERO"}),
+            [no_exchange, one_job],
+        ),
+        "viewer_search_links": (
+            json_page({"search_type": "links", "q": "ext.test"}),
+            [no_exchange, one_job],
+        ),
+        "viewer_component_list": (
+            Q.component_list(pages),
+            [("one exchange (the distinct), no range-partitioned sort",
+              lambda p: tree_of(p).count("Exchange") == 1
+              and "rangepartitioning" not in p)],
+        ),
+    }
+
+
 def tree_of(plan: str) -> str:
     """The operator tree of a formatted plan (its first block)."""
     return plan.split("\n\n", 1)[0]
@@ -1216,7 +1287,8 @@ def python_nodes(plan: str) -> list:
 
 def stable_plan_text(plan: str, work_dir: str) -> str:
     """The plan as PLANS.md records it: expression ids (``#NNN``),
-    ``plan_id=NNN`` and RDD ids renumbered in order of appearance, and
+    ``plan_id=NNN``, RDD ids and observation names (random UUIDs)
+    renumbered in order of appearance, and
     the temp work dir replaced by a fixed name, so regenerating PLANS.md
     only shows real plan changes. Checks still run on the raw text."""
     plan = plan.replace(work_dir, "/tmp/plan_audit")
@@ -1224,6 +1296,7 @@ def stable_plan_text(plan: str, work_dir: str) -> str:
         (r"#(\d+)", "#{}"),
         (r"plan_id=(\d+)", "plan_id={}"),
         (r"RDD\[(\d+)\]", "RDD[{}]"),
+        (r"\b([0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12})\b", "observation-{}"),
     ):
         ids: dict = {}
         plan = re.sub(
@@ -1257,7 +1330,8 @@ def main() -> None:
     work = tempfile.mkdtemp(prefix="plan_audit_")
     sections += [
         (name, df, checks)
-        for name, (df, checks) in crawl_operator_plans(spark, work).items()
+        for plans in (crawl_operator_plans, viewer_plans)
+        for name, (df, checks) in plans(spark, work).items()
     ]
     for name, df, checks in sections:
         # a section holds a DataFrame, or the plan text already captured

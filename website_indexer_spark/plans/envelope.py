@@ -32,12 +32,15 @@ in viewer/tests/test_views.py:
 * the search/filter semantics are EXACTLY plans/queries.py's — this
   module never re-implements a predicate.
 
-Scale note: the JSON path collects one page (≤ page_size rows) plus
-a count — a serving-layer pattern, not a pipeline one. The CSV path
-collects the full result through queries.render-style driver code to
-mirror the reference's attachment bytes; a 100 TB export routes
-through queries.export_csv_distributed instead (same rows, parallel
-write), which is why that operator exists.
+Scale note: a numbered JSON page is one Spark job that collects the
+page (≤ page_size rows) and observes the result's row count on the
+way; ``page=last`` counts first (``_paginated_json`` lists the other
+count-first cases). That is a serving-layer pattern, not a pipeline
+one. The CSV path collects the
+full result through queries.render-style driver code to mirror the
+reference's attachment bytes; a 100 TB export routes through
+queries.export_csv_distributed instead (same rows, parallel write),
+which is why that operator exists.
 """
 
 from __future__ import annotations
@@ -47,16 +50,18 @@ import csv
 import io
 import json
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Dict, Optional
 from urllib.parse import urlencode
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from website_indexer_spark.plans import queries as Q
 
 PAGE_SIZE = Q.PAGE_SIZE  # settings.py:131
 LAST_PAGE_STRINGS = ("last",)  # DRF PageNumberPagination.last_page_strings
+MAX_ROWS = 2**31 - 1  # Spark's LIMIT and OFFSET are ints
 
 
 @dataclass
@@ -187,11 +192,11 @@ CSV_COLUMNS = {
 
 
 def _csv_response(
-    df: DataFrame, spec_key: str, basename: str, pages_scoped: DataFrame
+    df: DataFrame, spec_key: str, basename: str, start
 ) -> Response:
     """BetterCSVsMixin (views.py:38-76): BOM + fixed header + CRLF
-    rows + dated attachment filename from the crawl's MIN(timestamp)
-    (context_processors.py:6-27)."""
+    rows + attachment filename dated by ``start``, the crawl's
+    MIN(timestamp) (context_processors.py:6-27)."""
     cols = CSV_COLUMNS[spec_key]
     rows = df.select(*[c[1] for c in cols]).collect()
     buf = io.StringIO()
@@ -201,7 +206,6 @@ def _csv_response(
         w.writerow(
             ["" if r[f] is None else r[f] for _, f in cols]
         )
-    start = pages_scoped.agg(F.min("timestamp").alias("s")).first()["s"]
     filename = basename + (f"-{start.strftime('%Y%m%d')}" if start else "")
     return Response(
         status=200,
@@ -227,26 +231,84 @@ def _page_link(base_url: str, path: str, params: dict, page: int) -> str:
     return base_url.rstrip("/") + path + ("?" + qs if qs else "")
 
 
+def _observe_count(df: DataFrame, obs: Observation) -> DataFrame:
+    return df.observe(obs, F.count(F.lit(1)).alias("n"))
+
+
+def _count(df: DataFrame) -> int:
+    """``df.count()`` in one job with no exchange: a write to the
+    ``noop`` sink that observes the row count."""
+    obs = Observation()
+    _observe_count(df, obs).write.format("noop").mode("overwrite").save()
+    return obs.get["n"]
+
+
+def counted_page(
+    df: DataFrame, order, page: int, obs: Observation
+) -> DataFrame:
+    """Page ``page`` of ``df`` sorted by ``order``, with ``obs``
+    counting ``df``'s rows (as ``n``) below the sort."""
+    return Q.paginate(
+        _observe_count(df, obs).orderBy(*order), page, PAGE_SIZE
+    )
+
+
+def _reads_every_row(paged: DataFrame) -> bool:
+    """Whether the page query plans as a TakeOrderedAndProject, whose
+    tasks read every input row. Over an input of statically known
+    size the optimizer plans otherwise: it drops a limit that cannot
+    bind, leaving a global sort that evaluates the input twice (once
+    to sample range bounds), and an offset past the end together with
+    the observation below it. The plan is the one ``collect`` runs:
+    the query execution is cached on the DataFrame."""
+    plan = paged._jdf.queryExecution().executedPlan()
+    return plan.nodeName() == "TakeOrderedAndProject"
+
+
 def _paginated_json(
     df: DataFrame,
+    order,
     serialize,
     params: dict,
     path: str,
     base_url: str,
 ) -> Response:
-    count = df.count()
-    num_pages = Q.page_count(count, PAGE_SIZE)
+    """One page of the UNordered ``df`` sorted by ``order``.
+
+    A numbered page is one Spark job: an Observation counts the rows
+    below the sort, and the sort-with-limit (TakeOrderedAndProject)
+    reads every row, so the observed count is the whole result's. The
+    page's range is checked after that job. Above the sort, or over an
+    input that is already sorted, the limit would stop reading early
+    and the count would only cover the rows read. The count comes
+    first where it names the page (``page=last``), where the page's
+    row offset exceeds Spark's ints, and where the page's plan is not
+    a TakeOrderedAndProject (``_count``, one job); a page in range
+    then takes a second job."""
     raw = params.get("page", "1")
-    if raw in LAST_PAGE_STRINGS:
-        page = num_pages
-    else:
+    page = None
+    if raw not in LAST_PAGE_STRINGS:
         try:
             page = int(raw)
         except (TypeError, ValueError):
             return _not_found("Invalid page.")
-    if page < 1 or page > num_pages:
+        if page < 1:
+            return _not_found("Invalid page.")
+    rows = count = None
+    if page is not None and page * PAGE_SIZE <= MAX_ROWS:
+        obs = Observation()
+        paged = counted_page(df, order, page, obs)
+        if _reads_every_row(paged):
+            rows = paged.collect()
+            count = obs.get["n"]
+    if count is None:
+        count = _count(df)
+    num_pages = Q.page_count(count, PAGE_SIZE)
+    page = page or num_pages
+    if page > num_pages:
         return _not_found("Invalid page.")
-    rows = Q.paginate(df, page, PAGE_SIZE).collect()
+    if rows is None:
+        rows = Q.paginate(df.orderBy(*order), page, PAGE_SIZE).collect()
     envelope = {
         "count": count,
         "next": (
@@ -273,30 +335,25 @@ VALID_SEARCH_TYPES = tuple(Q.SEARCH_DISPATCH)  # forms.py choices
 
 
 def _pages_queryset(pages: DataFrame, params: dict, rendering_csv: bool):
-    """PageMixin.get_queryset (views.py:109-132): SearchForm-valid
-    (known search_type) dispatch, else search_empty; the CSV forks of
-    components/links keep the exploded column."""
+    """PageMixin.get_queryset (views.py:109-132), unordered, with its
+    sort key and CSV spec: SearchForm-valid (known search_type)
+    dispatch, else search_empty; the CSV forks of components/links
+    keep the exploded column and sort by it after the url."""
     q = params.get("q") or ""
     search_type = params.get("search_type")
-    if q and search_type == "components":
-        qs = Q.search_components(pages, q, include_class_names=rendering_csv)
-    elif q and search_type == "links":
-        qs = Q.search_links(pages, q, include_hrefs=rendering_csv)
+    order, spec = ["url"], "pages"
+    if q and search_type in Q.FORK_COLUMNS and rendering_csv:
+        qs = Q.MATCH_DISPATCH[search_type](pages, q, csv_fork=True)
+        order.append(Q.FORK_COLUMNS[search_type])
+        spec = search_type
     elif q and search_type in VALID_SEARCH_TYPES:
-        qs = Q.SEARCH_DISPATCH[search_type](pages, q)
+        qs = Q.MATCH_DISPATCH[search_type](pages, q).select(*Q.PAGE_VALUES)
     else:
-        qs = Q.search_empty(pages)
+        qs = pages.select(*Q.PAGE_VALUES)
     if params.get("language"):
         # django-filter equality filter (views.py:110)
         qs = qs.filter(F.col("language") == F.lit(params["language"]))
-    return qs
-
-
-def _csv_spec_for_search(params: dict) -> str:
-    st = params.get("search_type")
-    if params.get("q") and st in ("components", "links"):
-        return st
-    return "pages"
+    return qs, order, spec
 
 
 class ViewerApp:
@@ -329,6 +386,12 @@ class ViewerApp:
         self.errors = scope(tables.get("errors"))
         self.redirects = scope(tables.get("redirects"))
 
+    @cached_property
+    def crawl_start(self):
+        """MIN(timestamp) of the scoped pages, which construction
+        fixed: one job for the app's first CSV request, none after."""
+        return self.pages.agg(F.min("timestamp").alias("s")).first()["s"]
+
     # -- routing ----------------------------------------------------
 
     def handle(self, path: str, params: Optional[dict] = None) -> Response:
@@ -348,15 +411,14 @@ class ViewerApp:
 
     def page_list(self, params: dict) -> Response:
         rendering_csv = params.get("format") == "csv"
-        qs = Q.with_scrubbed_titles(
-            _pages_queryset(self.pages, params, rendering_csv)
-        )
+        qs, order, spec = _pages_queryset(self.pages, params, rendering_csv)
+        qs = Q.with_scrubbed_titles(qs)
         if rendering_csv:
             return _csv_response(
-                qs, _csv_spec_for_search(params), "pages", self.pages
+                qs.orderBy(*order), spec, "pages", self.crawl_start
             )
         return _paginated_json(
-            qs, serialize_page, params, "/", self.base_url
+            qs, order, serialize_page, params, "/", self.base_url
         )
 
     def page_detail(self, params: dict) -> Response:
@@ -369,7 +431,9 @@ class ViewerApp:
     def component_list(self, params: dict) -> Response:
         qs = Q.component_list(self.pages)
         if params.get("format") == "csv":
-            return _csv_response(qs, "component_list", "components", self.pages)
+            return _csv_response(
+                qs, "component_list", "components", self.crawl_start
+            )
         # pagination_class = None (views.py:81) -> bare JSON list
         return _json_response(
             [{"class_name": r["class_name"]} for r in qs.collect()]
@@ -380,10 +444,14 @@ class ViewerApp:
     ) -> Response:
         if params.get("status_code"):
             df = Q.filter_status_code(df, int(params["status_code"]))
-        df = df.orderBy("url")  # Request.Meta.ordering (models.py:76)
+        order = ["url"]  # Request.Meta.ordering (models.py:76)
         if params.get("format") == "csv":
-            return _csv_response(df, spec, spec, self.pages)
-        return _paginated_json(df, serialize, params, path, self.base_url)
+            return _csv_response(
+                df.orderBy(*order), spec, spec, self.crawl_start
+            )
+        return _paginated_json(
+            df, order, serialize, params, path, self.base_url
+        )
 
     def error_list(self, params: dict) -> Response:
         return self._request_list(

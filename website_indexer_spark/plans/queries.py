@@ -12,8 +12,9 @@ Scale notes:
 * every search is a narrow filter+project over the pages table
   (partition-pruned by crawl_id on a multi-crawl store) — no shuffle
   except the explicit orderBy for pagination;
-* the explode searches (C4/C5) are narrow (arrays are colocated in
-  the row — the reference needs a bridge-table join here, we don't);
+* the component/link searches (C4/C5) are an ``exists`` row filter
+  over the row's own array (the reference needs a bridge-table join
+  here, we don't); only their CSV forks explode, one row per match;
 * the latest-finished-crawl scope is a broadcast semi-join against a
   one-row DataFrame (LatestCrawlManager analogue, models.py:55-64).
 """
@@ -84,58 +85,121 @@ def search_empty(pages: DataFrame) -> DataFrame:
     return page_values(pages)
 
 
+# Each family's rows come from one unordered match function, shared by
+# the ordered search_* below and the viewer envelope, which orders and
+# pages them itself.
+
+def match_title(pages: DataFrame, q: str) -> DataFrame:
+    return pages.filter(_icontains(F.col("title"), q))
+
+
+def match_url(pages: DataFrame, q: str) -> DataFrame:
+    return pages.filter(_icontains(F.col("url"), q))
+
+
+def match_text(pages: DataFrame, q: str) -> DataFrame:
+    return pages.filter(_icontains(F.col("text"), q))
+
+
+def match_html(pages: DataFrame, q: str) -> DataFrame:
+    return pages.filter(_icontains(F.col("html"), q))
+
+
 def search_title(pages: DataFrame, q: str) -> DataFrame:
-    return page_values(pages.filter(_icontains(F.col("title"), q)))
+    return page_values(match_title(pages, q))
 
 
 def search_url(pages: DataFrame, q: str) -> DataFrame:
-    return page_values(pages.filter(_icontains(F.col("url"), q)))
+    return page_values(match_url(pages, q))
 
 
 def search_text(pages: DataFrame, q: str) -> DataFrame:
-    return page_values(pages.filter(_icontains(F.col("text"), q)))
+    return page_values(match_text(pages, q))
 
 
 def search_html(pages: DataFrame, q: str) -> DataFrame:
-    return page_values(pages.filter(_icontains(F.col("html"), q)))
+    return page_values(match_html(pages, q))
 
 
 # --------------------------------------------------------------------
-# C4/C5 explode searches with the distinct-vs-CSV plan fork
+# C4/C5 array searches with the distinct-vs-CSV plan fork
 # (search.py:10-42; views.py:119-120,143-148)
 # --------------------------------------------------------------------
+
+# the column each CSV fork adds: the matching array element
+FORK_COLUMNS = {"components": "class_name", "links": "href"}
+
+
+def _match_array(
+    pages: DataFrame, array: str, fork_column: str, pred, csv_fork: bool
+) -> DataFrame:
+    """Pages with at least one ``array`` element satisfying ``pred``:
+    a row filter, so each page appears once with no explode and no
+    dedup (the reference's ``.distinct()`` over Page rows). The CSV
+    fork is one row per (page, matching element), the element in
+    ``fork_column``."""
+    if csv_fork:
+        return pages.select(
+            *PAGE_VALUES, F.explode(array).alias(fork_column)
+        ).filter(pred(F.col(fork_column)))
+    return pages.filter(F.exists(array, pred))
+
+
+def match_components(
+    pages: DataFrame, q: str, csv_fork: bool = False
+) -> DataFrame:
+    return _match_array(
+        pages, "components", FORK_COLUMNS["components"],
+        lambda c: _icontains(c, q), csv_fork,
+    )
+
+
+def match_links(
+    pages: DataFrame, q: str, csv_fork: bool = False
+) -> DataFrame:
+    """href icontains q OR icontains quote_plus(q) — the encoded form
+    catches redirector-style URLs (search.py:25-42)."""
+    return _match_array(
+        pages, "links", FORK_COLUMNS["links"],
+        lambda h: _icontains(h, q) | _icontains(h, quote_plus(q)),
+        csv_fork,
+    )
+
 
 def search_components(
     pages: DataFrame, q: str, include_class_names: bool = False
 ) -> DataFrame:
     """C4: pages having a design-system component class matching q.
 
-    Default (HTML/JSON): DISTINCT page rows (search.py:20).
+    Default (HTML/JSON): one row per matching page (search.py:20).
     CSV fork (include_class_names): one row per (page, matching
     class), extra column class_name (search.py:16-19, no distinct).
     """
-    exploded = pages.select(
-        *PAGE_VALUES, F.explode("components").alias("class_name")
-    ).filter(_icontains(F.col("class_name"), q))
+    matched = match_components(pages, q, csv_fork=include_class_names)
     if include_class_names:
-        return exploded.orderBy("url", "class_name")
-    return exploded.drop("class_name").dropDuplicates(PAGE_VALUES).orderBy("url")
+        return matched.orderBy("url", "class_name")
+    return page_values(matched)
 
 
 def search_links(
     pages: DataFrame, q: str, include_hrefs: bool = False
 ) -> DataFrame:
-    """C5: href icontains q OR icontains quote_plus(q) — the encoded
-    form catches redirector-style URLs (search.py:25-42)."""
-    exploded = pages.select(
-        *PAGE_VALUES, F.explode("links").alias("href")
-    ).filter(
-        _icontains(F.col("href"), q) | _icontains(F.col("href"), quote_plus(q))
-    )
+    """C5: pages with a link matching q (see ``match_links``); the CSV
+    fork adds the matching href."""
+    matched = match_links(pages, q, csv_fork=include_hrefs)
     if include_hrefs:
-        return exploded.orderBy("url", "href")
-    return exploded.drop("href").dropDuplicates(PAGE_VALUES).orderBy("url")
+        return matched.orderBy("url", "href")
+    return page_values(matched)
 
+
+MATCH_DISPATCH = {
+    "title": match_title,
+    "url": match_url,
+    "text": match_text,
+    "html": match_html,
+    "components": match_components,
+    "links": match_links,
+}
 
 SEARCH_DISPATCH = {
     "title": search_title,
@@ -196,11 +260,15 @@ def page_detail(pages: DataFrame, url: str) -> DataFrame:
 
 def component_list(pages: DataFrame) -> DataFrame:
     """All component class names, ordered (models.py:88) — derived by
-    re-exploding the pages table (valid, but rescans every page)."""
+    re-exploding the pages table (valid, but rescans every page). The
+    distinct is the one exchange; its few rows are coalesced to one
+    partition and sorted there, in the same binary string order as
+    ``orderBy`` but with no range partitioning and its sampling job."""
     return (
         pages.select(F.explode("components").alias("class_name"))
         .distinct()
-        .orderBy("class_name")
+        .coalesce(1)
+        .sortWithinPartitions("class_name")
     )
 
 
